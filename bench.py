@@ -49,6 +49,27 @@ BENCH_MULT = int(os.environ.get("SPARK_GRAFT_BENCH_MULT", "8"))
 SCALING_MULT = int(os.environ.get("SPARK_GRAFT_SCALING_MULT", "24"))
 # paragraphs per bench page (~12-15 KB pages at sf0.1 text lengths)
 BENCH_PARAS = int(os.environ.get("SPARK_GRAFT_BENCH_PARAS", "40"))
+# the timed headline queries, in run order
+HEADLINE_QUERIES = (
+    "extract_parity", "extract_main_content", "nodes_type_counts",
+    "doc_links", "doc_roundtrip", "doc_edit_pipeline",
+    "dedup_exact", "dedup_ngram_jaccard",
+    "dedup_minhash_lsh", "dedup_simhash", "sim_topk", "ann_ivf_topk",
+    "embedding_srp_lsh", "ann_kmeans_topk", "token_stats",
+    "quality_score",
+    "doc_fingerprint", "lang_id", "clean_text", "repetition_stats",
+    "warc_extract",
+    "dedup_lines", "decontaminate", "crawl_dedup_latest",
+    "crawl_domain_sample", "crawl_domain_quota", "pii_scrub",
+    "oov_stats",
+    "curation_pipeline", "curate_web", "curate_full",
+    "lm_fluency", "gopher_rules", "dsir_weights", "binary_meta",
+    "image_features",
+    "audio_features", "pdf_text_extract", "css_serialize_api",
+    "kernel_iterator_api",
+    "q1_pricing",
+    "q3_top_orders", "events_topk", "part_shipped",
+)
 
 
 def log(msg: str) -> None:
@@ -147,26 +168,6 @@ def headline_queries(spark, sf_dir: str) -> dict[str, float]:
     """Time each headline query (forced via count/collect)."""
     import __spark_entry__ as entry
     qs = entry.queries()
-    names = [
-        "extract_parity", "extract_main_content", "nodes_type_counts",
-        "doc_links", "doc_roundtrip", "doc_edit_pipeline",
-        "dedup_exact", "dedup_ngram_jaccard",
-        "dedup_minhash_lsh", "dedup_simhash", "sim_topk", "ann_ivf_topk",
-        "embedding_srp_lsh", "ann_kmeans_topk", "token_stats",
-        "quality_score",
-        "doc_fingerprint", "lang_id", "clean_text", "repetition_stats",
-        "warc_extract",
-        "dedup_lines", "decontaminate", "crawl_dedup_latest",
-        "crawl_domain_sample", "crawl_domain_quota", "pii_scrub",
-        "oov_stats",
-        "curation_pipeline", "curate_web", "curate_full",
-        "lm_fluency", "gopher_rules", "dsir_weights", "binary_meta",
-        "image_features",
-        "audio_features", "pdf_text_extract", "css_serialize_api",
-        "kernel_iterator_api",
-        "q1_pricing",
-        "q3_top_orders", "events_topk", "part_shipped",
-    ]
     trials = int(os.environ.get("SPARK_GRAFT_HEADLINE_TRIALS", "2"))
     ctl_min = float(os.environ.get("SPARK_GRAFT_BENCH_CTL_MIN", "0.85"))
 
@@ -194,7 +195,7 @@ def headline_queries(spark, sf_dir: str) -> dict[str, float]:
     out = {}
     noisy: list[str] = []
     ctl = _host_control(400_000)
-    for name in names:
+    for name in HEADLINE_QUERIES:
         walls = [_timed(name) for _ in range(trials)]
         # in-flight noise guard: if the trials disagree by >2x, a
         # noise window straddled them — one extra trial, keep the min
@@ -553,7 +554,8 @@ never leak across measurements.
 
 ### The curation_pipeline ×1.9 driver delta (r4 8.31s vs r3 4.37s): named and fixed
 
-Controlled A/B at sf0.1 local[32] (r5, tools/ab_curation.py, 4 trials
+Controlled A/B at sf0.1 local[32] (r5; script removed, result
+recorded here; 4 trials
 per arm, Spark-free host controls around every trial).  PRE-fix code
 (r4): curation_pipeline warm steady state 10.1s on a CLEAN window
 (walls 41.8/23.6/10.2/10.1 after warmup), dedup_clusters alone warm

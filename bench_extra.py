@@ -26,7 +26,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent
 sys.path.insert(0, str(ROOT))
 
-from bench import _host_control, headline_queries  # noqa: E402,F401
+from bench import HEADLINE_QUERIES, _host_control  # noqa: E402
 
 
 def main() -> None:
@@ -58,30 +58,7 @@ def main() -> None:
                       shuffle_partitions=2 * cpus)
     qs = entry.queries()
     if not names:
-        # the frozen bench.py headline list, in order
-        import bench as _b
-        src = _b.headline_queries.__doc__ or ""
-        names = [
-            "extract_parity", "extract_main_content", "nodes_type_counts",
-            "doc_links", "doc_roundtrip", "doc_edit_pipeline",
-            "dedup_exact", "dedup_ngram_jaccard",
-            "dedup_minhash_lsh", "dedup_simhash", "sim_topk",
-            "ann_ivf_topk",
-            "embedding_srp_lsh", "ann_kmeans_topk", "token_stats",
-            "quality_score",
-            "doc_fingerprint", "lang_id", "clean_text", "repetition_stats",
-            "warc_extract",
-            "dedup_lines", "decontaminate", "crawl_dedup_latest",
-            "crawl_domain_sample", "crawl_domain_quota", "pii_scrub",
-            "oov_stats",
-            "curation_pipeline", "curate_web", "curate_full",
-            "lm_fluency", "gopher_rules", "dsir_weights", "binary_meta",
-            "image_features",
-            "audio_features", "pdf_text_extract", "css_serialize_api",
-            "kernel_iterator_api",
-            "q1_pricing",
-            "q3_top_orders", "events_topk", "part_shipped",
-        ]
+        names = list(HEADLINE_QUERIES)
 
     def _hygiene():
         spark.catalog.clearCache()

@@ -9,6 +9,7 @@ tree semantics byte-identical per url, BASELINE.json `north_rule`).
 from __future__ import annotations
 
 from . import cssquery, selector, serialize
+from .manipulate import run_mutation
 from .tokenizer import DEFAULT_SPECIAL_TAGS, parse_html
 from .tree import FlatTree
 
@@ -38,7 +39,7 @@ def run_op(tree: FlatTree, op: dict):
     ctx = op.get("ctx", 0)
     name = op["op"]
     if name == "mutate":
-        return _run_mutation(tree, op["steps"])
+        return run_mutation(tree, op["steps"])
     if name == "iterate":
         return _run_iterate(tree, op.get("remove"), op.get("remove_other"))
     if name == "visualize":
@@ -170,87 +171,6 @@ def run_case(case: dict) -> dict:
 
 
 # ---- scripted mutation / iteration mirrors (see tools/ref_dump.mjs) -------
-
-
-def _resolve_sel(tree: FlatTree, sel: str, index: int | None):
-    matches = selector.query_selector_all(tree, 0, sel)
-    idx = index or 0
-    if idx >= len(matches):
-        raise ValueError(f"no match for {sel}[{idx}]")
-    return matches[idx]
-
-
-def _run_mutation(tree: FlatTree, steps: list[dict]) -> dict:
-    from . import manipulate as M
-    for st in steps:
-        target = _resolve_sel(tree, st["sel"], st.get("index")) \
-            if st.get("sel") else 0
-        act = st["act"]
-        if act == "create_append":
-            M.append_child(tree, target, M.create_node(
-                tree, st["tag"], st.get("attrs") or {}, st.get("text")))
-        elif act == "append_sel":
-            M.append_child(tree, target, _resolve_sel(
-                tree, st["node_sel"], st.get("node_index")))
-        elif act == "insert_before_new":
-            M.insert_before(tree, target, M.create_node(
-                tree, st["tag"], st.get("attrs") or {}, st.get("text")))
-        elif act == "insert_after_new":
-            M.insert_after(tree, target, M.create_node(
-                tree, st["tag"], st.get("attrs") or {}, st.get("text")))
-        elif act == "insert_before_sel":
-            M.insert_before(tree, target, _resolve_sel(
-                tree, st["node_sel"], st.get("node_index")))
-        elif act == "insert_after_sel":
-            M.insert_after(tree, target, _resolve_sel(
-                tree, st["node_sel"], st.get("node_index")))
-        elif act == "replace_with_new":
-            M.replace_with(tree, target, M.create_node(
-                tree, st["tag"], st.get("attrs") or {}, st.get("text")))
-        elif act == "replace_with_sel":
-            M.replace_with(tree, target, _resolve_sel(
-                tree, st["node_sel"], st.get("node_index")))
-        elif act == "remove":
-            M.remove(tree, target)
-        elif act == "remove_close":
-            closing = M.find_closing_tag(tree, target)
-            if closing is None:
-                raise ValueError("no adjacent closing tag")
-            M.remove(tree, closing)
-        elif act == "iah_close":
-            closing = M.find_closing_tag(tree, target)
-            if closing is None:
-                raise ValueError("no adjacent closing tag")
-            M.insert_adjacent_html(tree, closing, st["position"],
-                                   st["html"])
-        elif act == "insert_before_close":
-            closing = M.find_closing_tag(tree, target)
-            if closing is None:
-                raise ValueError("no adjacent closing tag")
-            M.insert_before(tree, closing, M.create_node(
-                tree, st["tag"], st.get("attrs") or {}, st.get("text")))
-        elif act == "insert_after_close":
-            closing = M.find_closing_tag(tree, target)
-            if closing is None:
-                raise ValueError("no adjacent closing tag")
-            M.insert_after(tree, closing, M.create_node(
-                tree, st["tag"], st.get("attrs") or {}, st.get("text")))
-        elif act == "iah":
-            M.insert_adjacent_html(tree, target, st["position"],
-                                   st["html"])
-        elif act == "set_attr":
-            selector.set_attribute(tree, target, st["name"], st["value"])
-        elif act == "remove_attr":
-            selector.remove_attribute(tree, target, st["name"])
-        elif act == "update_attr":
-            selector.update_attribute(tree, target, st["name"],
-                                      st["value"], st.get("sep", " "))
-        else:
-            raise ValueError(f"unknown act {act}")
-    return {
-        "html": serialize.to_html(tree, 0, False),
-        "html_comments": serialize.to_html(tree, 0, True),
-    }
 
 
 def _node_label(tree: FlatTree, nid: int) -> str:

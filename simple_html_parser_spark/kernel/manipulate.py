@@ -29,6 +29,7 @@ Pinned quirks mirrored on purpose:
 
 from __future__ import annotations
 
+from . import selector, serialize
 from .jsre import is_js_blank
 from .tokenizer import DEFAULT_SPECIAL_TAGS, parse_html
 from .tree import ROOT, TAG_CLOSE, TAG_OPEN, TEXT, FlatTree
@@ -520,3 +521,88 @@ class DomIterator:
         if self.current is None:
             raise StopIteration
         return self.current
+
+
+# ---- scripted mutation (see tools/ref_dump.mjs) ---------------------------
+
+
+def _resolve_sel(tree: FlatTree, sel: str, index: int | None):
+    matches = selector.query_selector_all(tree, 0, sel)
+    idx = index or 0
+    if idx >= len(matches):
+        raise ValueError(f"no match for {sel}[{idx}]")
+    return matches[idx]
+
+
+def _closing_tag(tree: FlatTree, nid: int) -> int:
+    closing = find_closing_tag(tree, nid)
+    if closing is None:
+        raise ValueError("no adjacent closing tag")
+    return closing
+
+
+def run_mutation(tree: FlatTree, steps: list[dict]) -> dict:
+    """Apply a scripted edit (one dict per step: ``act`` plus a target
+    ``sel``/``index``) and serialize the result — the step language
+    tools/ref_dump.mjs mirrors against the reference."""
+    for st in steps:
+        target = _resolve_sel(tree, st["sel"], st.get("index")) \
+            if st.get("sel") else 0
+        act = st["act"]
+        if act == "create_append":
+            append_child(tree, target, create_node(
+                tree, st["tag"], st.get("attrs") or {}, st.get("text")))
+        elif act == "append_sel":
+            append_child(tree, target, _resolve_sel(
+                tree, st["node_sel"], st.get("node_index")))
+        elif act == "insert_before_new":
+            insert_before(tree, target, create_node(
+                tree, st["tag"], st.get("attrs") or {}, st.get("text")))
+        elif act == "insert_after_new":
+            insert_after(tree, target, create_node(
+                tree, st["tag"], st.get("attrs") or {}, st.get("text")))
+        elif act == "insert_before_sel":
+            insert_before(tree, target, _resolve_sel(
+                tree, st["node_sel"], st.get("node_index")))
+        elif act == "insert_after_sel":
+            insert_after(tree, target, _resolve_sel(
+                tree, st["node_sel"], st.get("node_index")))
+        elif act == "replace_with_new":
+            replace_with(tree, target, create_node(
+                tree, st["tag"], st.get("attrs") or {}, st.get("text")))
+        elif act == "replace_with_sel":
+            replace_with(tree, target, _resolve_sel(
+                tree, st["node_sel"], st.get("node_index")))
+        elif act == "remove":
+            remove(tree, target)
+        elif act == "remove_close":
+            closing = _closing_tag(tree, target)
+            remove(tree, closing)
+        elif act == "iah_close":
+            closing = _closing_tag(tree, target)
+            insert_adjacent_html(tree, closing, st["position"],
+                                   st["html"])
+        elif act == "insert_before_close":
+            closing = _closing_tag(tree, target)
+            insert_before(tree, closing, create_node(
+                tree, st["tag"], st.get("attrs") or {}, st.get("text")))
+        elif act == "insert_after_close":
+            closing = _closing_tag(tree, target)
+            insert_after(tree, closing, create_node(
+                tree, st["tag"], st.get("attrs") or {}, st.get("text")))
+        elif act == "iah":
+            insert_adjacent_html(tree, target, st["position"],
+                                   st["html"])
+        elif act == "set_attr":
+            selector.set_attribute(tree, target, st["name"], st["value"])
+        elif act == "remove_attr":
+            selector.remove_attribute(tree, target, st["name"])
+        elif act == "update_attr":
+            selector.update_attribute(tree, target, st["name"],
+                                      st["value"], st.get("sep", " "))
+        else:
+            raise ValueError(f"unknown act {act}")
+    return {
+        "html": serialize.to_html(tree, 0, False),
+        "html_comments": serialize.to_html(tree, 0, True),
+    }

@@ -49,8 +49,8 @@ DEFAULT_SPECIAL_TAGS = ("jhp", "s_")
 # same '<p class="content">' / '<a href="...">' tag bodies recur
 # thousands of times per page and millions per task, so the
 # WS_PLUS.search + ATTR_PATTERN.finditer work is paid once per
-# DISTINCT tag body and replayed as one dict .get (r5 A/B,
-# tools/ab_tag_memo.py: median paired CPU ratio 1.455 on the bench
+# DISTINCT tag body and replayed as one dict .get (r5 A/B, script
+# removed, result recorded here: median paired CPU ratio 1.455 on the bench
 # pages — +45% parse+extract throughput; trees byte-identical on all
 # pages: the memo stores the parse RESULT, and every node receives
 # its own dict COPY so downstream attribute mutation never aliases —

@@ -9,42 +9,27 @@ shape as the extraction hot path — no per-row Python anywhere.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..kernel.charset import decode_html
+from .extraction import _DocStage, _row
 
-DETECT_SCHEMA = ("url string, encoding string, enc_source string, "
-                 "n_chars bigint")
-
-_PA = pa.schema([
+DETECT_SCHEMA = pa.schema([
     ("url", pa.string()), ("encoding", pa.string()),
     ("enc_source", pa.string()), ("n_chars", pa.int64()),
 ])
 
 
-def _detect_fn(
-        batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        payloads = batch.column("payload").to_pylist()
-        cols = {name: [] for name in _PA.names}
-        for url, raw in zip(urls, payloads):
-            try:
-                text, enc, src = decode_html(bytes(raw or b""))
-            except Exception as e:  # noqa: BLE001 — per-doc isolation
-                text, enc, src = "", f"error:{type(e).__name__}", "error"
-            cols["url"].append(url)
-            cols["encoding"].append(enc)
-            cols["enc_source"].append(src)
-            cols["n_chars"].append(len(text))
-        if cols["url"]:
-            yield pa.RecordBatch.from_pydict(
-                {k: pa.array(v, type=_PA.field(k).type)
-                 for k, v in cols.items()},
-                schema=_PA)
+def _detect_doc(url, raw):
+    text, enc, src = decode_html(bytes(raw or b""))
+    return _row(url, enc, src, len(text))
+
+
+_detect_fn = _DocStage(
+    DETECT_SCHEMA, _detect_doc,
+    lambda url, raw, e: _row(url, f"error:{type(e).__name__}", "error", 0),
+    payload="payload")
 
 
 def detect_charset(df: DataFrame, col: str = "payload") -> DataFrame:
@@ -52,5 +37,4 @@ def detect_charset(df: DataFrame, col: str = "payload") -> DataFrame:
     BOM / meta-prescan / default sniff plus the decoded length —
     n_chars proves the DECODE (not just the label) is right, since a
     UTF-16 page decoded as UTF-8 yields a very different length."""
-    return (df.selectExpr(f"url", f"{col} as payload")
-            .mapInArrow(_detect_fn, DETECT_SCHEMA))
+    return _detect_fn.apply(df.selectExpr("url", f"{col} as payload"))

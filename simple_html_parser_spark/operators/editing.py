@@ -4,7 +4,7 @@ driver's byte-level oracle.
 
 ``EDIT_STEPS`` is a fixed edit script executed per document through
 the SAME selector-driven machinery the differential goldens use
-(kernel/compat._run_mutation, step-for-step mirrored by
+(kernel/manipulate.run_mutation, step-for-step mirrored by
 tools/ref_dump.mjs against the reference — reference entry points:
 node.js setAttribute/updateAttribute/removeAttribute,
 createNode/appendChild/insertBefore/insertAfter/insertAdjacentHTML/
@@ -16,14 +16,13 @@ per url without executing any of it.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from ..kernel.compat import _run_mutation
-from ..kernel.tokenizer import parse_html
-from .extraction import MAX_NODES_PER_DOC, _decode
+from ..kernel.manipulate import run_mutation
+from .extraction import _describe, _DocStage, _parse, _row
 
 # One step per op family; order chosen so moves happen before removes.
 # A2 set / A4 update / A3 remove attribute; M6 replaceWith (new node =
@@ -49,41 +48,22 @@ EDIT_STEPS: tuple[dict, ...] = (
     {"act": "remove", "sel": "footer", "index": 0},
 )
 
-EDIT_SCHEMA = "url string, ed_len bigint, ed_sha256 string, error string"
-
-_PA_EDIT = pa.schema([
+EDIT_SCHEMA = pa.schema([
     ("url", pa.string()), ("ed_len", pa.int64()),
     ("ed_sha256", pa.string()), ("error", pa.string()),
 ])
 
 
-def _edit_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    import hashlib
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        cols = {name: [] for name in _PA_EDIT.names}
-        for url, raw in zip(urls, htmls):
-            cols["url"].append(url)
-            try:
-                t = parse_html(_decode(raw), max_nodes=MAX_NODES_PER_DOC)
-                out = _run_mutation(t, list(EDIT_STEPS))["html"] \
-                    .encode("utf-8")
-                cols["ed_len"].append(len(out))
-                cols["ed_sha256"].append(hashlib.sha256(out).hexdigest())
-                cols["error"].append(None)
-            except Exception as e:  # noqa: BLE001 — per-doc isolation
-                cols["ed_len"].append(0)
-                cols["ed_sha256"].append(None)
-                cols["error"].append(f"{type(e).__name__}: {e}")
-        if cols["url"]:
-            yield pa.RecordBatch.from_pydict(
-                {k: pa.array(v, type=_PA_EDIT.field(k).type)
-                 for k, v in cols.items()},
-                schema=_PA_EDIT)
+def _edit_doc(url, raw):
+    out = run_mutation(_parse(raw), list(EDIT_STEPS))["html"].encode("utf-8")
+    return _row(url, len(out), hashlib.sha256(out).hexdigest(), None)
+
+
+_edit_fn = _DocStage(EDIT_SCHEMA, _edit_doc,
+                     lambda url, raw, e: _row(url, 0, None, _describe(e)))
 
 
 def edit_roundtrip(df: DataFrame) -> DataFrame:
     """documents(url, html) → (url, ed_len, ed_sha256): sha256+length
     of to_html after applying EDIT_STEPS."""
-    return df.select("url", "html").mapInArrow(_edit_fn, EDIT_SCHEMA)
+    return _edit_fn.apply(df)

@@ -8,51 +8,45 @@ Design (SURVEY.md §3.4, §4.3):
         JVM↔Python boundary on the hot path; no per-row Python UDFs
       → columnar output batches, byte-capped
 
+Every Python stage of the engine (extraction, the node view, the
+query/serialize/edit surfaces, charset sniffing, WARC parsing) is a
+``_DocStage``: a per-document function over (key, payload) plus an
+error-row function, behind one batch loop.
+
 Scale notes:
-- Input batches are bounded by spark.sql.execution.arrow.maxRecordsPerBatch;
-  output batches are flushed by BYTES (EXTRACT_FLUSH_BYTES) so one batch
-  of giant pages cannot balloon executor memory.
-- Every document is wrapped in try/except: a pathological page yields an
-  error row instead of failing the task (at 10^12 docs, tail pages WILL
-  be pathological).
-- The kernel is iterative (no recursion) except CSS serialization;
-  RecursionError is caught per-document.
+- Isolation: a document's rows are committed only if the whole
+  document succeeded; if anything raises, its partial rows are dropped
+  and only the stage's error rows are emitted, never a failed task (at
+  10^12 docs, tail pages WILL be pathological).  The kernel is
+  iterative except CSS serialization, so RecursionError is caught the
+  same way.
+- Flush: output is emitted at the end of each input batch (bounded by
+  spark.sql.execution.arrow.maxRecordsPerBatch), and earlier once the
+  batch's payload bytes pass EXTRACT_FLUSH_BYTES, so one batch of
+  giant pages cannot balloon executor memory.
 """
 
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..kernel.charset import decode_html
 from ..kernel.extract import MAIN_CONTENT, PARITY, ExtractionProfile, extract
 from ..kernel.tokenizer import DEFAULT_SPECIAL_TAGS, parse_html
 
-EXTRACT_SCHEMA = (
-    "url string, extracted_text string, "
-    "spans array<struct<start:int,end:int>>, "
-    "n_nodes int, n_text_nodes int, n_bytes bigint, "
-    "parse_ms double, error string"
-)
-
-_PA_SPANS = pa.list_(pa.struct([("start", pa.int32()), ("end", pa.int32())]))
-_PA_SCHEMA = pa.schema([
-    ("url", pa.string()),
-    ("extracted_text", pa.string()),
-    ("spans", _PA_SPANS),
-    ("n_nodes", pa.int32()),
-    ("n_text_nodes", pa.int32()),
-    ("n_bytes", pa.int64()),
-    ("parse_ms", pa.float64()),
-    ("error", pa.string()),
-])
-
-# Flush output batches when accumulated text exceeds this many bytes.
+# Flush output batches once an input batch's payload exceeds this many
+# bytes.
 EXTRACT_FLUSH_BYTES = 32 * 1024 * 1024
+
+# per-document node-count safety valve (10^12-doc tails contain
+# pathological pages; a capped doc becomes an error row, not an OOM)
+MAX_NODES_PER_DOC = 5_000_000
 
 
 def _decode(b) -> str:
@@ -73,70 +67,121 @@ def _decode_sniffed(b, _decode_html=decode_html) -> str:
     return b if isinstance(b, str) else ""
 
 
-# per-document node-count safety valve (10^12-doc tails contain
-# pathological pages; a capped doc becomes an error row, not an OOM)
-MAX_NODES_PER_DOC = 5_000_000
+def _parse(raw):
+    """Payload → FlatTree under the per-document node cap."""
+    return parse_html(_decode(raw), max_nodes=MAX_NODES_PER_DOC)
+
+
+def _describe(e: Exception) -> str:
+    return f"{type(e).__name__}: {e}"
+
+
+def _row(*values) -> Iterator[tuple]:
+    """One output row in the column shape a ``_DocStage`` function
+    returns (each value as a one-element column)."""
+    return zip(values)
+
+
+class _DocStage:
+    """One per-document mapInArrow stage.
+
+    ``doc(key, payload)`` returns one sequence per ``schema`` column
+    (row-shaped stages return ``zip(*rows)``); ``error(key, payload,
+    exc)`` returns the stage's error rows in the same shape.  The
+    instance is the per-partition function; ``apply`` prunes a frame to
+    (key, payload) and runs it, with the Spark schema derived from
+    ``schema``.  Isolation and flush follow the module's scale notes.
+    """
+
+    def __init__(self, schema: pa.Schema,
+                 doc: Callable[..., Iterable[Sequence]],
+                 error: Callable[..., Iterable[Sequence]],
+                 key: str = "url", payload: str = "html") -> None:
+        self.schema, self.doc, self.error = schema, doc, error
+        self.key, self.payload = key, payload
+
+    def __call__(
+            self, batches: Iterator[pa.RecordBatch]
+    ) -> Iterator[pa.RecordBatch]:
+        doc, error = self.doc, self.error
+        cols: list[list] = [[] for _ in self.schema]
+        for batch in batches:
+            n_bytes = 0
+            for key, raw in zip(batch.column(self.key).to_pylist(),
+                                batch.column(self.payload).to_pylist()):
+                n_rows = len(cols[0])
+                try:
+                    for col, part in zip(cols, doc(key, raw)):
+                        col.extend(part)
+                except Exception as e:  # noqa: BLE001 — per-doc isolation
+                    for col in cols:
+                        del col[n_rows:]
+                    for col, part in zip(cols, error(key, raw, e)):
+                        col.extend(part)
+                n_bytes += len(raw) if raw is not None else 0
+                if n_bytes >= EXTRACT_FLUSH_BYTES:
+                    yield self._flush(cols)
+                    n_bytes = 0
+            if cols[0]:
+                yield self._flush(cols)
+
+    def _flush(self, cols: list[list]) -> pa.RecordBatch:
+        out = pa.RecordBatch.from_pydict(
+            dict(zip(self.schema.names, cols)), schema=self.schema)
+        for col in cols:
+            col.clear()
+        return out
+
+    def apply(self, df: DataFrame,
+              salt_partitions: int | None = None) -> DataFrame:
+        """Prune ``df`` to (key, payload) — so pruning reaches the scan
+        — and run the stage.  ``salt_partitions`` forces an explicit
+        pre-UDF exchange on the key so giant payloads spread across
+        tasks instead of clustering in input-file order."""
+        pruned = df.select(self.key, self.payload)
+        if salt_partitions:
+            pruned = pruned.repartition(salt_partitions,
+                                        F.xxhash64(self.key))
+        return pruned.mapInArrow(self, from_arrow_schema(self.schema))
+
+
+EXTRACT_SCHEMA = pa.schema([
+    ("url", pa.string()),
+    ("extracted_text", pa.string()),
+    ("spans", pa.list_(pa.struct([("start", pa.int32()),
+                                  ("end", pa.int32())]))),
+    ("n_nodes", pa.int32()),
+    ("n_text_nodes", pa.int32()),
+    ("n_bytes", pa.int64()),
+    ("parse_ms", pa.float64()),
+    ("error", pa.string()),
+])
 
 
 def _make_extract_fn(profile: ExtractionProfile,
-                     sniff_charset: bool = False):
+                     sniff_charset: bool = False) -> _DocStage:
     decode = _decode_sniffed if sniff_charset else _decode
+    t0 = 0.0
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        cols = {name: [] for name in _PA_SCHEMA.names}
-        acc_bytes = 0
+    def doc(url, raw):
+        nonlocal t0
+        html = decode(raw)
+        t0 = time.perf_counter()
+        res = extract(parse_html(html, max_nodes=MAX_NODES_PER_DOC),
+                      profile)
+        # res.spans is already a list of (start, end) tuples, which
+        # pyarrow builds struct arrays from directly
+        return _row(url, res.text, res.spans, res.n_nodes,
+                    res.n_text_nodes, len(raw) if raw is not None else 0,
+                    (time.perf_counter() - t0) * 1e3, None)
 
-        def flush():
-            nonlocal cols, acc_bytes
-            out = pa.RecordBatch.from_pydict(
-                {k: pa.array(v, type=_PA_SCHEMA.field(k).type)
-                 for k, v in cols.items()},
-                schema=_PA_SCHEMA)
-            cols = {name: [] for name in _PA_SCHEMA.names}
-            acc_bytes = 0
-            return out
+    def error(url, raw, e):
+        # both decoders use errors='replace' and cannot raise, so t0
+        # was set for this document
+        return _row(url, "", [], 0, 0, len(raw) if raw is not None else 0,
+                    (time.perf_counter() - t0) * 1e3, _describe(e))
 
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            for url, raw in zip(urls, htmls):
-                html = decode(raw)
-                n_bytes = len(raw) if raw is not None else 0
-                t0 = time.perf_counter()
-                try:
-                    tree = parse_html(html, max_nodes=MAX_NODES_PER_DOC)
-                    res = extract(tree, profile)
-                    ms = (time.perf_counter() - t0) * 1e3
-                    cols["url"].append(url)
-                    cols["extracted_text"].append(res.text)
-                    # res.spans is already a list of (start, end)
-                    # tuples and pyarrow builds struct arrays from
-                    # tuples directly — the per-span dict conversion
-                    # was pure allocation overhead (80+ spans/page on
-                    # the text-heavy bench corpus)
-                    cols["spans"].append(res.spans)
-                    cols["n_nodes"].append(res.n_nodes)
-                    cols["n_text_nodes"].append(res.n_text_nodes)
-                    cols["n_bytes"].append(n_bytes)
-                    cols["parse_ms"].append(ms)
-                    cols["error"].append(None)
-                    acc_bytes += len(res.text) + n_bytes // 8
-                except Exception as e:  # noqa: BLE001 — per-doc isolation
-                    ms = (time.perf_counter() - t0) * 1e3
-                    cols["url"].append(url)
-                    cols["extracted_text"].append("")
-                    cols["spans"].append([])
-                    cols["n_nodes"].append(0)
-                    cols["n_text_nodes"].append(0)
-                    cols["n_bytes"].append(n_bytes)
-                    cols["parse_ms"].append(ms)
-                    cols["error"].append(f"{type(e).__name__}: {e}")
-                if acc_bytes >= EXTRACT_FLUSH_BYTES:
-                    yield flush()
-        if cols["url"]:
-            yield flush()
-
-    return fn
+    return _DocStage(EXTRACT_SCHEMA, doc, error)
 
 
 def extract_documents(
@@ -153,12 +198,8 @@ def extract_documents(
     byte→string step from plain utf-8 to the BOM/meta-prescan sniffer
     (kernel/charset) — the path for real crawls, where UTF-16 exports
     and meta-labelled 8-bit pages exist."""
-    pruned = df.select("url", "html")
-    if salt_partitions:
-        pruned = pruned.repartition(salt_partitions, F.xxhash64("url"))
-    return pruned.mapInArrow(
-        _make_extract_fn(profile, sniff_charset=sniff_charset),
-        EXTRACT_SCHEMA)
+    return _make_extract_fn(profile, sniff_charset=sniff_charset).apply(
+        df, salt_partitions)
 
 
 def extract_main_content(df: DataFrame, **kw) -> DataFrame:
@@ -167,39 +208,23 @@ def extract_main_content(df: DataFrame, **kw) -> DataFrame:
 
 # ---- serialization round-trip ------------------------------------------------
 
-ROUNDTRIP_SCHEMA = "url string, rt_len bigint, rt_sha256 string, error string"
-
-_PA_RT = pa.schema([
+ROUNDTRIP_SCHEMA = pa.schema([
     ("url", pa.string()), ("rt_len", pa.int64()),
     ("rt_sha256", pa.string()), ("error", pa.string()),
 ])
 
 
-def _roundtrip_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _roundtrip_doc(url, raw):
     import hashlib
 
     from ..kernel.serialize import to_html
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        cols = {name: [] for name in _PA_RT.names}
-        for url, raw in zip(urls, htmls):
-            cols["url"].append(url)
-            try:
-                t = parse_html(_decode(raw), max_nodes=MAX_NODES_PER_DOC)
-                out = to_html(t).encode("utf-8")
-                cols["rt_len"].append(len(out))
-                cols["rt_sha256"].append(hashlib.sha256(out).hexdigest())
-                cols["error"].append(None)
-            except Exception as e:  # noqa: BLE001 — per-doc isolation
-                cols["rt_len"].append(0)
-                cols["rt_sha256"].append(None)
-                cols["error"].append(f"{type(e).__name__}: {e}")
-        if cols["url"]:
-            yield pa.RecordBatch.from_pydict(
-                {k: pa.array(v, type=_PA_RT.field(k).type)
-                 for k, v in cols.items()},
-                schema=_PA_RT)
+    out = to_html(_parse(raw)).encode("utf-8")
+    return _row(url, len(out), hashlib.sha256(out).hexdigest(), None)
+
+
+_roundtrip_fn = _DocStage(
+    ROUNDTRIP_SCHEMA, _roundtrip_doc,
+    lambda url, raw, e: _row(url, 0, None, _describe(e)))
 
 
 def roundtrip_html(df: DataFrame) -> DataFrame:
@@ -209,22 +234,12 @@ def roundtrip_html(df: DataFrame) -> DataFrame:
     for the quoted-attribute subset, reference test/parser.test.js
     round-trip cases; for jhp pages the serialized form is itself a
     fixed template, see sources.documents.TPL_SPECIAL_SERIALIZED)."""
-    return df.select("url", "html").mapInArrow(_roundtrip_fn,
-                                               ROUNDTRIP_SCHEMA)
+    return _roundtrip_fn.apply(df)
 
 
 # ---- exploded nodes view ----------------------------------------------------
 
-NODES_SCHEMA = (
-    "url string, node_id int, parent_id int, subtree_end int, "
-    "bfs_rank int, depth int, type string, name string, "
-    "attrs map<string,string>, content string, comment_type string, "
-    "style_block boolean, script_block boolean, css_selector string, "
-    "css_name string, css_params string, "
-    "css_declarations map<string,string>, src_start int, src_end int"
-)
-
-_PA_NODES = pa.schema([
+NODES_SCHEMA = pa.schema([
     ("url", pa.string()), ("node_id", pa.int32()),
     ("parent_id", pa.int32()), ("subtree_end", pa.int32()),
     ("bfs_rank", pa.int32()), ("depth", pa.int32()),
@@ -259,111 +274,78 @@ def _sparse_list(sc, n: int) -> list:
     return out
 
 
+def _bfs_rank(t, n: int) -> list[int]:
+    rank = [0] * n
+    for r, nid in enumerate(t.bfs_order(0)):
+        rank[nid] = r
+    return rank
+
+
+def _depth(t, n: int) -> list[int]:
+    depth = [0] * n
+    parent = t.parent
+    for nid in range(1, n):
+        depth[nid] = depth[parent[nid]] + 1
+    return depth
+
+
+def _items(maps) -> Iterator:
+    return (list(m.items()) if m is not None else None for m in maps)
+
+
+# COLUMNAR emission: the FlatTree already is struct-of-arrays, so each
+# requested column is one C-level list extend (or a single
+# comprehension) instead of 19 per-node appends — and unrequested
+# columns (incl. the per-doc BFS/depth Python passes) are never
+# computed.  Measured r6: full emission 0.46s CPU for 200k nodes
+# row-at-a-time vs per-column extends.  Each entry maps
+# (tree, node count, url) to that column's values for one document.
+_NODE_COLUMNS = {
+    "url": lambda t, n, url: [url] * n,
+    "node_id": lambda t, n, url: range(n),
+    "parent_id": lambda t, n, url: t.parent,
+    "subtree_end": lambda t, n, url: t.subtree_end(),
+    "bfs_rank": lambda t, n, url: _bfs_rank(t, n),
+    "depth": lambda t, n, url: _depth(t, n),
+    "type": lambda t, n, url: t.type,
+    "name": lambda t, n, url: t.name,
+    "attrs": lambda t, n, url: _items(t.attrs),
+    "content": lambda t, n, url: t.content,
+    "comment_type": lambda t, n, url: _sparse_list(t.comment_type, n),
+    "style_block": lambda t, n, url: ((f & 1) != 0 for f in t.flags),
+    "script_block": lambda t, n, url: ((f & 2) != 0 for f in t.flags),
+    "css_selector": lambda t, n, url: _sparse_list(t.css_selector, n),
+    "css_name": lambda t, n, url: _sparse_list(t.css_name, n),
+    "css_params": lambda t, n, url: _sparse_list(t.css_params, n),
+    "css_declarations": lambda t, n, url: _items(
+        _sparse_list(t.css_decls, n)),
+    "src_start": lambda t, n, url: t.src_start,
+    "src_end": lambda t, n, url: t.src_end,
+}
+
+
 def _make_nodes_fn(max_nodes: int,
                    special_tags: tuple[str, ...] | None = None,
-                   columns: list[str] | None = None):
+                   columns: list[str] | None = None) -> _DocStage:
     special = (tuple(special_tags) if special_tags is not None
                else DEFAULT_SPECIAL_TAGS)
-    names = list(_PA_NODES.names) if columns is None else list(columns)
-    schema = pa.schema([_PA_NODES.field(c) for c in names])
-    need = set(names)
+    names = NODES_SCHEMA.names if columns is None else list(columns)
+    unknown = [c for c in names if c not in _NODE_COLUMNS]
+    if unknown:
+        raise ValueError(f"unknown node columns: {unknown}")
+    emit = [_NODE_COLUMNS[c] for c in names]
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            cols = {name: [] for name in names}
-            for url, raw in zip(urls, htmls):
-                try:
-                    t = parse_html(_decode(raw), special,
-                                   max_nodes=max_nodes)
-                except Exception as e:  # noqa: BLE001 — per-doc isolation
-                    for k in names:
-                        cols[k].append(
-                            url if k == "url"
-                            else f"{type(e).__name__}: {e}"
-                            if k == "content" else _ERROR_ROW[k])
-                    continue
-                # COLUMNAR emission: the FlatTree already is
-                # struct-of-arrays, so each requested column is one
-                # C-level list extend (or a single comprehension)
-                # instead of 19 per-node appends — and unrequested
-                # columns (incl. the per-doc BFS/depth Python passes)
-                # are never computed.  Measured r6: full emission
-                # 0.46s CPU for 200k nodes row-at-a-time vs
-                # per-column extends; callers that prune (e.g.
-                # nodes_type_counts needs only `type`) skip both the
-                # build and the Arrow transport of 19-column rows.
-                n = len(t.type)
-                if "url" in need:
-                    cols["url"].extend([url] * n)
-                if "node_id" in need:
-                    cols["node_id"].extend(range(n))
-                if "parent_id" in need:
-                    cols["parent_id"].extend(t.parent)
-                if "subtree_end" in need:
-                    cols["subtree_end"].extend(t.subtree_end())
-                if "bfs_rank" in need:
-                    bfs_rank = [0] * n
-                    for rank, nid in enumerate(t.bfs_order(0)):
-                        bfs_rank[nid] = rank
-                    cols["bfs_rank"].extend(bfs_rank)
-                if "depth" in need:
-                    depth = [0] * n
-                    parent = t.parent
-                    for nid in range(1, n):
-                        depth[nid] = depth[parent[nid]] + 1
-                    cols["depth"].extend(depth)
-                if "type" in need:
-                    cols["type"].extend(t.type)
-                if "name" in need:
-                    cols["name"].extend(t.name)
-                if "attrs" in need:
-                    cols["attrs"].extend(
-                        list(a.items()) if a is not None else None
-                        for a in t.attrs)
-                if "content" in need:
-                    cols["content"].extend(t.content)
-                if "comment_type" in need:
-                    cols["comment_type"].extend(
-                        _sparse_list(t.comment_type, n))
-                if "style_block" in need:
-                    cols["style_block"].extend(
-                        (f & 1) != 0 for f in t.flags)
-                if "script_block" in need:
-                    cols["script_block"].extend(
-                        (f & 2) != 0 for f in t.flags)
-                if "css_selector" in need:
-                    cols["css_selector"].extend(
-                        _sparse_list(t.css_selector, n))
-                if "css_name" in need:
-                    cols["css_name"].extend(_sparse_list(t.css_name, n))
-                if "css_params" in need:
-                    cols["css_params"].extend(
-                        _sparse_list(t.css_params, n))
-                if "css_declarations" in need:
-                    cols["css_declarations"].extend(
-                        list(d.items()) if d is not None else None
-                        for d in _sparse_list(t.css_decls, n))
-                if "src_start" in need:
-                    cols["src_start"].extend(t.src_start)
-                if "src_end" in need:
-                    cols["src_end"].extend(t.src_end)
-            if cols[names[0]]:
-                yield pa.RecordBatch.from_pydict(
-                    {k: pa.array(v, type=schema.field(k).type)
-                     for k, v in cols.items()},
-                    schema=schema)
+    def doc(url, raw):
+        t = parse_html(_decode(raw), special, max_nodes=max_nodes)
+        n = len(t.type)
+        return [f(t, n, url) for f in emit]
 
-    return fn
+    def error(url, raw, e):
+        return [[url] if c == "url" else [_describe(e)] if c == "content"
+                else [_ERROR_ROW[c]] for c in names]
 
-
-# per-column DDL (split-safe: no NODES_SCHEMA type contains ', ')
-_NODES_DDL = {
-    s.strip().split(" ", 1)[0]: s.strip()
-    for s in NODES_SCHEMA.split(", ")
-}
-assert list(_NODES_DDL) == list(_PA_NODES.names), _NODES_DDL
+    return _DocStage(pa.schema([NODES_SCHEMA.field(c) for c in names]),
+                     doc, error)
 
 
 def parse_nodes(df: DataFrame, salt_partitions: int | None = None,
@@ -387,15 +369,5 @@ def parse_nodes(df: DataFrame, salt_partitions: int | None = None,
     (guide §4: pass only the columns the function needs; here the
     output side).  Values of the emitted columns are identical to the
     full view's."""
-    pruned = df.select("url", "html")
-    if salt_partitions:
-        pruned = pruned.repartition(salt_partitions, F.xxhash64("url"))
-    if columns is None:
-        schema = NODES_SCHEMA
-    else:
-        unknown = [c for c in columns if c not in _NODES_DDL]
-        if unknown:
-            raise ValueError(f"unknown node columns: {unknown}")
-        schema = ", ".join(_NODES_DDL[c] for c in columns)
-    return pruned.mapInArrow(
-        _make_nodes_fn(max_nodes, special_tags, columns), schema)
+    return _make_nodes_fn(max_nodes, special_tags, columns).apply(
+        df, salt_partitions)

@@ -251,12 +251,15 @@ def massivetext_repetition(
 
     Scale shape: per-row codegen'd array expressions only — no
     shuffle, no join, no Python (the gopher_rules plan shape).  Every
-    gram array and dup-set is MATERIALIZED via withColumn before the
-    HOFs that consume it (memory/catalyst-cse-trap); run-length folds
-    replace the O(G^2) count-per-distinct-gram form, which the DuckDB
-    oracle uses instead (order-free, so engine sort collations cannot
-    diverge).  Coverage is O(L * n * |dups|) per row, bounded by the
-    upstream length filter like dedup_substrings' reconstruction."""
+    gram array and duplicated-position array is MATERIALIZED via
+    withColumn before the HOFs that consume it
+    (memory/catalyst-cse-trap); run-length folds replace the O(G^2)
+    count-per-distinct-gram form, which the DuckDB oracle uses instead
+    (order-free, so engine sort collations cannot diverge).  Coverage
+    is a sort plus an interval-union fold: ``_dup_pos_col`` collects
+    the sorted positions of windows whose gram repeats and
+    ``_covered_chars`` sums the chars of the union of their token
+    spans, O(W log W) per row for W windows."""
     TOP_TH = {2: 20, 3: 18, 4: 16}           # x/100 of token chars
     DUP_TH = {5: 15, 6: 14, 7: 13, 8: 12, 9: 11, 10: 10}
 

@@ -25,16 +25,12 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .extraction import extract_documents
+from .extraction import _describe, _DocStage, _row, extract_documents
 
 _MAGIC = b"WARC/1.0\r\n"
 _HDR_END = b"\r\n\r\n"
 
-WARC_SCHEMA = ("warc_id string, rec_idx int, target_uri string, "
-               "warc_date string, content_length bigint, html binary, "
-               "error string")
-
-_PA_WARC = pa.schema([
+WARC_SCHEMA = pa.schema([
     ("warc_id", pa.string()), ("rec_idx", pa.int32()),
     ("target_uri", pa.string()), ("warc_date", pa.string()),
     ("content_length", pa.int64()), ("html", pa.binary()),
@@ -42,25 +38,21 @@ _PA_WARC = pa.schema([
 ])
 
 
-def _parse_one(warc_id: str, payload: bytes, cols: dict) -> None:
+def _records(warc_id: str, payload: bytes) -> Iterator[tuple]:
+    """One WARC_SCHEMA row per record, then an error row for a
+    malformed tail."""
     def emit(idx, uri=None, date=None, clen=None, html=None, err=None):
-        cols["warc_id"].append(warc_id)
-        cols["rec_idx"].append(idx)
-        cols["target_uri"].append(uri)
-        cols["warc_date"].append(date)
-        cols["content_length"].append(clen)
-        cols["html"].append(html)
-        cols["error"].append(err)
+        return warc_id, idx, uri, date, clen, html, err
 
     pos, idx = 0, 0
     n = len(payload)
     while pos < n:
         if not payload.startswith(_MAGIC, pos):
-            emit(idx, err=f"bad magic at byte {pos}")
+            yield emit(idx, err=f"bad magic at byte {pos}")
             return
         hdr_end = payload.find(_HDR_END, pos)
         if hdr_end < 0:
-            emit(idx, err="unterminated header block")
+            yield emit(idx, err="unterminated header block")
             return
         # ISO 28500: field names are case-insensitive, whitespace after
         # the colon is optional — lowercase keys, lstrip values
@@ -73,43 +65,41 @@ def _parse_one(warc_id: str, payload: bytes, cols: dict) -> None:
         try:
             clen = int(headers["content-length"])
         except (KeyError, ValueError):
-            emit(idx, err="missing/invalid Content-Length")
+            yield emit(idx, err="missing/invalid Content-Length")
             return
         if clen < 0:
             # a negative length would move pos BACKWARD and loop the
             # parser forever on the same record — adversarial input,
             # not a tolerable quirk
-            emit(idx, err="negative Content-Length")
+            yield emit(idx, err="negative Content-Length")
             return
         body_start = hdr_end + len(_HDR_END)
         if body_start + clen > n:
-            emit(idx, err="truncated body")
+            yield emit(idx, err="truncated body")
             return
-        emit(idx, headers.get("warc-target-uri"),
-             headers.get("warc-date"), clen,
-             payload[body_start:body_start + clen])
+        yield emit(idx, headers.get("warc-target-uri"),
+                   headers.get("warc-date"), clen,
+                   payload[body_start:body_start + clen])
         idx += 1
         pos = body_start + clen
         if payload.startswith(b"\r\n\r\n", pos):
             pos += 4
 
 
-def _parse_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for batch in batches:
-        ids = batch.column("warc_id").to_pylist()
-        payloads = batch.column("payload").to_pylist()
-        cols: dict = {name: [] for name in _PA_WARC.names}
-        for wid, pay in zip(ids, payloads):
-            _parse_one(wid, pay if pay is not None else b"", cols)
-        yield pa.RecordBatch.from_pydict(cols, schema=_PA_WARC)
+# a file whose parse raises yields one error row (rec_idx 0) and none
+# of its records
+_parse_fn = _DocStage(
+    WARC_SCHEMA,
+    lambda wid, pay: zip(*_records(wid, pay or b"")),
+    lambda wid, pay, e: _row(wid, 0, None, None, None, None, _describe(e)),
+    key="warc_id", payload="payload")
 
 
 def parse_warc(files: DataFrame) -> DataFrame:
     """(warc_id, payload binary, …) → one row per WARC record
     (warc_id, rec_idx, target_uri, warc_date, content_length, html,
     error)."""
-    return (files.select("warc_id", "payload")
-            .mapInArrow(_parse_fn, WARC_SCHEMA))
+    return _parse_fn.apply(files)
 
 
 def warc_extract(files: DataFrame, **kw) -> DataFrame:

@@ -4,6 +4,9 @@ column names, and order-insensitive values (exact — floats must match
 to the bit after the in-query rounding, like the driver's value-hash).
 
     python3 tools/oracle_check.py [sf_dir] [query ...]
+
+``check`` also runs inside an existing Spark session (the tier-1 parity
+test passes its own).
 """
 
 from __future__ import annotations
@@ -41,14 +44,19 @@ def _norm_rows(cols, rows):
     return [cols[i] for i in order], out
 
 
-def check(sf_dir: str, only: list[str] | None = None) -> int:
+def check(sf_dir: str, only: list[str] | None = None,
+          spark=None) -> int:
+    """Number of failing queries.  A session passed in is left running;
+    otherwise one is started and stopped here."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{sf_dir}/{t}.parquet')")
 
-    spark = get_spark(master="local[8]", shuffle_partitions=16)
+    own_session = spark is None
+    if own_session:
+        spark = get_spark(master="local[8]", shuffle_partitions=16)
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = 0
@@ -100,7 +108,8 @@ def check(sf_dir: str, only: list[str] | None = None) -> int:
             failures += 1
             continue
         print(f"ok  {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
-    spark.stop()
+    if own_session:
+        spark.stop()
     print("FAILURES:", failures)
     return failures
 
