@@ -68,6 +68,39 @@ class NodeCapExceeded(RuntimeError):
     the per-document safety valve for pathological crawl pages."""
 
 
+def _tag_entry(tag_content: str) -> tuple[str, dict | None, int]:
+    """Parse an open tag's body (between ``<`` and ``>``) into
+    ``(tag_name, attrs, attr_len)`` and memoise it in ``_TAG_MEMO``.
+
+    The memo-miss path of every tokenizer pass: the returned tuple is
+    the memo's own entry, so a caller that keeps the attrs must copy
+    the dict (``attrs`` is None when the tag has none; ``attr_len``
+    counts attribute matches, duplicates included)."""
+    # parts[0] of a JS \s+ split == prefix up to first JS-whitespace
+    # ('' when it starts with whitespace)
+    wsm = WS_PLUS.search(tag_content)
+    tag_name = tag_content[:wsm.start()] if wsm else tag_content
+
+    attrs = None  # dict allocated only when attrs exist
+    attr_len = 0
+    if len(tag_content) != len(tag_name):
+        # finditer(s, pos) ≡ finditer(s[pos:]) for this anchor-free
+        # pattern — skips one slice alloc per attributed tag (r5 kernel
+        # A/B)
+        for m in ATTR_PATTERN.finditer(tag_content, len(tag_name)):
+            attr_len += 1
+            if attrs is None:
+                attrs = {}
+            attrs[m.group(1)] = (
+                m.group(2) or m.group(3) or m.group(4) or "__EMPVAL__")
+    entry = (tag_name, attrs, attr_len)
+    if len(tag_content) <= _TAG_MEMO_KEYLEN:
+        if len(_TAG_MEMO) >= _TAG_MEMO_MAX:
+            _TAG_MEMO.clear()
+        _TAG_MEMO[tag_content] = entry
+    return entry
+
+
 def parse_html(
     html: str, special_tags: tuple[str, ...] = DEFAULT_SPECIAL_TAGS,
     max_nodes: int | None = None,
@@ -185,40 +218,12 @@ def parse_html(
                 tag_content = html[pos + 1:tag_end]
                 memo = _TAG_MEMO.get(tag_content)
                 if memo is None:
-                    # parts[0] of a JS \s+ split == prefix up to first
-                    # JS-whitespace ('' when it starts with whitespace)
-                    wsm = WS_PLUS.search(tag_content)
-                    tag_name = tag_content[:wsm.start()] if wsm \
-                        else tag_content
-
-                    attrs = None  # dict allocated only when attrs exist
-                    attr_len = 0
-                    if len(tag_content) != len(tag_name):
-                        # finditer(s, pos) ≡ finditer(s[pos:]) for this
-                        # anchor-free pattern — skips one slice alloc
-                        # per attributed tag (r5 kernel A/B)
-                        for m in ATTR_PATTERN.finditer(
-                                tag_content, len(tag_name)):
-                            attr_len += 1
-                            if attrs is None:
-                                attrs = {}
-                            attrs[m.group(1)] = (
-                                m.group(2) or m.group(3) or m.group(4)
-                                or "__EMPVAL__"
-                            )
-                    if len(tag_content) <= _TAG_MEMO_KEYLEN:
-                        if len(_TAG_MEMO) >= _TAG_MEMO_MAX:
-                            _TAG_MEMO.clear()
-                        # the memo keeps its own PRIVATE dict — the
-                        # node's dict is mutable downstream
-                        _TAG_MEMO[tag_content] = (
-                            tag_name,
-                            dict(attrs) if attrs is not None else None,
-                            attr_len)
-                else:
-                    tag_name, attrs, attr_len = memo
-                    if attrs is not None:
-                        attrs = dict(attrs)
+                    memo = _tag_entry(tag_content)
+                tag_name, attrs, attr_len = memo
+                if attrs is not None:
+                    # the node gets its own dict — it is mutable
+                    # downstream, the memo's is not
+                    attrs = dict(attrs)
 
                 node = nn
                 ap_type(TAG_OPEN)

@@ -4,8 +4,9 @@ Design (SURVEY.md §3.4, §4.3):
 
     scan (url, html only — column pruning reaches the parquet reader)
       → salted repartition on url hash (defuses giant-page skew)
-      → ONE mapInArrow stage (tokenize → flat tree → extract), the only
-        JVM↔Python boundary on the hot path; no per-row Python UDFs
+      → ONE mapInArrow stage (one streaming tokenize+extract pass per
+        page, no tree built), the only JVM↔Python boundary on the hot
+        path; no per-row Python UDFs
       → columnar output batches, byte-capped
 
 Every Python stage of the engine (extraction, the node view, the
@@ -24,20 +25,34 @@ Scale notes:
   spark.sql.execution.arrow.maxRecordsPerBatch), and earlier once the
   batch's payload bytes pass EXTRACT_FLUSH_BYTES, so one batch of
   giant pages cannot balloon executor memory.
+- Per task: PySpark's worker calls ``importlib.invalidate_caches()``
+  before every task, which re-reads the directory of every zip archive
+  on the worker's path (Spark's zip, py4j's, the spark-core jar,
+  ``--py-files`` zips).  The first task a worker runs turns
+  ``zipimporter.invalidate_caches`` into a no-op for that process.
+  This is safe because none of those archives is rewritten in place
+  while the worker lives, a zip added later with ``addPyFile`` lands
+  at a new path and gets a new zipimporter (which reads its directory
+  when created), and directory finders are still invalidated, so
+  ``.py`` files added to the SparkFiles dir still import.
 """
 
 from __future__ import annotations
 
 import time
+import zipimport
 from collections.abc import Callable, Iterable, Iterator, Sequence
 
 import pyarrow as pa
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..kernel.charset import decode_html
-from ..kernel.extract import MAIN_CONTENT, PARITY, ExtractionProfile, extract
+from ..kernel.extract import (
+    MAIN_CONTENT, PARITY, ExtractionProfile, extract_html,
+)
 from ..kernel.tokenizer import DEFAULT_SPECIAL_TAGS, parse_html
 
 # Flush output batches once an input batch's payload exceeds this many
@@ -76,6 +91,20 @@ def _describe(e: Exception) -> str:
     return f"{type(e).__name__}: {e}"
 
 
+def _keep_zip_directory(self) -> None:
+    """``zipimporter.invalidate_caches`` inside a Spark worker: the
+    archive's directory, read when the importer was created, stays."""
+
+
+def _stop_zip_rereads() -> None:
+    """Inside a Spark task, stop this worker process from re-reading
+    its zip archives' directories before every later task (see the
+    module's scale notes); outside a task, do nothing."""
+    if (zipimport.zipimporter.invalidate_caches is not _keep_zip_directory
+            and TaskContext.get() is not None):
+        zipimport.zipimporter.invalidate_caches = _keep_zip_directory
+
+
 def _row(*values) -> Iterator[tuple]:
     """One output row in the column shape a ``_DocStage`` function
     returns (each value as a one-element column)."""
@@ -103,6 +132,7 @@ class _DocStage:
     def __call__(
             self, batches: Iterator[pa.RecordBatch]
     ) -> Iterator[pa.RecordBatch]:
+        _stop_zip_rereads()
         doc, error = self.doc, self.error
         cols: list[list] = [[] for _ in self.schema]
         for batch in batches:
@@ -167,8 +197,7 @@ def _make_extract_fn(profile: ExtractionProfile,
         nonlocal t0
         html = decode(raw)
         t0 = time.perf_counter()
-        res = extract(parse_html(html, max_nodes=MAX_NODES_PER_DOC),
-                      profile)
+        res = extract_html(html, profile, MAX_NODES_PER_DOC)
         # res.spans is already a list of (start, end) tuples, which
         # pyarrow builds struct arrays from directly
         return _row(url, res.text, res.spans, res.n_nodes,

@@ -16,7 +16,7 @@ sys.path.insert(0, str(ROOT))
 from hypothesis import given, settings, strategies as st  # noqa: E402
 
 from simple_html_parser_spark.kernel.extract import (  # noqa: E402
-    MAIN_CONTENT, PARITY, extract,
+    MAIN_CONTENT, PARITY, extract, extract_html,
 )
 from simple_html_parser_spark.kernel.serialize import to_html  # noqa: E402
 from simple_html_parser_spark.kernel.tokenizer import (  # noqa: E402
@@ -72,9 +72,9 @@ def test_roundtrip_well_formed(html):
 def test_spans_rebuild_text(html):
     tree = parse_html(html)
     for profile in (PARITY, MAIN_CONTENT):
-        res = extract(tree, profile)
-        rebuilt = "".join(html[s:e] for s, e in res.spans)
-        assert rebuilt == res.text
+        for res in (extract(tree, profile), extract_html(html, profile)):
+            rebuilt = "".join(html[s:e] for s, e in res.spans)
+            assert rebuilt == res.text
 
 
 @given(st.text(max_size=200))
@@ -84,6 +84,8 @@ def test_never_crashes_on_arbitrary_input(s):
     to_html(tree, 0, True)
     extract(tree, PARITY)
     extract(tree, MAIN_CONTENT)
+    extract_html(s, PARITY)
+    extract_html(s, MAIN_CONTENT)
 
 
 def test_tag_memo_no_attr_aliasing():

@@ -591,6 +591,52 @@ def test_spark_submit_pyfiles_job(spark, tmp_path):
     assert stats2["buckets_done_before"] == 4
 
 
+def test_workers_keep_zip_directories(spark, tmp_path):
+    """Inside a task, a ``_DocStage`` stops its worker re-reading zip
+    archive directories before every task (zipimporter.invalidate_caches
+    is the no-op in every row), and a zip added afterwards with
+    ``addPyFile`` still imports in every task of a later stage."""
+    import zipfile
+
+    import pyarrow as pa
+
+    from simple_html_parser_spark.operators.extraction import _DocStage
+
+    schema = pa.schema([("url", pa.string()), ("no_op", pa.bool_()),
+                        ("probe", pa.string())])
+    module = f"zip_probe_{tmp_path.name.replace('-', '_')}"
+
+    def kept(url, raw):
+        import zipimport
+
+        from simple_html_parser_spark.operators import extraction
+        return [[url], [zipimport.zipimporter.invalidate_caches
+                        is extraction._keep_zip_directory], [None]]
+
+    def probe(url, raw):
+        import importlib
+        return [[url], kept(url, raw)[1],
+                [importlib.import_module(module).VALUE]]
+
+    def error(url, raw, e):
+        return [[url], [False], [repr(e)]]
+
+    docs = (spark.range(32).repartition(8)
+            .select(F.format_string("doc://z/%d", "id").alias("url"),
+                    F.lit("<p>x</p>").alias("html")))
+
+    rows = _DocStage(schema, kept, error).apply(docs).collect()
+    assert len(rows) == 32 and all(r.no_op for r in rows)
+
+    zip_path = tmp_path / "probe.zip"
+    with zipfile.ZipFile(zip_path, "w") as z:
+        z.writestr(f"{module}.py", "VALUE = 'imported'\n")
+    spark.sparkContext.addPyFile(str(zip_path))
+    rows = _DocStage(schema, probe, error).apply(docs).collect()
+    assert len(rows) == 32
+    assert all(r.no_op and r.probe == "imported" for r in rows), rows
+
+
 def test_crawl_url_layer(spark):
     """URL ops: refetch collapse keeps the later capture; the md5
     sample is deterministic under repartitioning; components parse."""

@@ -98,7 +98,7 @@ def _nodes_error():
 STAGES = {
     "extract_documents": (
         lambda: EX._make_extract_fn(PARITY), lambda: _docs(HTML_TEMPLATE),
-        (EX, "extract", lambda f: _raise_on_call(f, 1)),
+        (EX, "extract_html", lambda f: _raise_on_call(f, 1)),
         lambda b: [{"url": "doc://m/3", "extracted_text": "", "spans": [],
                     "n_nodes": 0, "n_text_nodes": 0,
                     "n_bytes": len(b.column("html")[2].as_py()),
