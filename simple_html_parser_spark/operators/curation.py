@@ -20,6 +20,7 @@ to AQE rather than forced.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -106,7 +107,6 @@ def curate_web(
     quality_min_bp: int = 5500,
     oov_max_bp: int = 600,
     near_dup_threshold: float = 0.30,
-    persist_scrubbed: bool = True,
     unpersist_handles: list | None = None,
 ) -> DataFrame:
     """The full web-crawl curation flow as ONE declarative plan:
@@ -126,14 +126,13 @@ def curate_web(
     discipline as ``curate``; the added stages are a codegen regexp
     pass (scrub) and one broadcast-head join (OOV).
 
-    ``persist_scrubbed`` (default True) caches the scrubbed corpus
-    projection MEMORY_AND_DISK: FIVE downstream consumers (the
-    quality/lang base, the OOV head + explode, exact dedup, the LSH
-    shingle pass) otherwise each re-run the three scrub regexps over
-    the full corpus inside their own scan — the same measured
-    trade-off as curate_full's survivor persist (r5 A/B ~15s vs ~24s).
-    At 10^12 docs the cache spills to executor-local disk; pass False
-    to trade recompute for memory.  ``unpersist_handles``: persisted
+    The scrubbed corpus projection is persisted MEMORY_AND_DISK: FIVE
+    downstream consumers (the quality/lang base, the OOV head +
+    explode, exact dedup, the LSH shingle pass) otherwise each re-run
+    the three scrub regexps over the full corpus inside their own scan
+    — the same measured trade-off as curate_full's survivor persist
+    (r5 A/B ~15s vs ~24s).  At 10^12 docs the cache spills to
+    executor-local disk.  ``unpersist_handles``: persisted
     frames (including dedup's internal ones) are appended here when
     the caller passes a list, so a resident pipeline can release them
     after materializing the result."""
@@ -146,11 +145,9 @@ def curate_web(
     # text from this frame inside its own scan+project, all codegen
     docs2 = docs.select("doc_id", "lang",
                         scrub_col(F.col("text")).alias("text"))
-    if persist_scrubbed:
-        from pyspark import StorageLevel
-        docs2 = docs2.persist(StorageLevel.MEMORY_AND_DISK)
-        if unpersist_handles is not None:
-            unpersist_handles.append(docs2)
+    docs2 = docs2.persist(StorageLevel.MEMORY_AND_DISK)
+    if unpersist_handles is not None:
+        unpersist_handles.append(docs2)
     base = _quality_lang_base(
         docs2, quality_min_bp,
         extra=F.col("oov_bp") <= oov_max_bp,
@@ -167,7 +164,6 @@ def curate_full(
     near_dup_threshold: float = 0.30,
     gopher_min_words: int = 50,
     gopher_stops: tuple[str, ...] | None = None,
-    persist_survivors: bool = True,
     unpersist_handles: list | None = None,
 ) -> DataFrame:
     """curate_web extended with the r5 filter tiers — the full modern
@@ -193,19 +189,19 @@ def curate_full(
     an aggregating extra_frame exactly like oov_stats.  Returns
     (doc_id, pred_lang, quality_bp, oov_bp, fluency_bp, bucket).
 
-    ``persist_survivors`` (default True) caches the gopher-survivor
-    frame MEMORY_AND_DISK: SIX downstream consumers (fluency bigrams
-    ×2, OOV head + explode, the quality/lang base, exact dedup, the
-    LSH shingle pass) otherwise each re-evaluate the scrub regexps +
-    the nine gopher signal arrays per branch.  Measured at sf0.1
-    local[32] (r5 A/B, interleaved arms with host controls): persist
-    ≈15s vs no-persist ≈24s steady state, and the persist arm stays
-    flat through host-noise windows that push no-persist past 160s.
+    The gopher-survivor frame is persisted MEMORY_AND_DISK: SIX
+    downstream consumers (fluency bigrams ×2, OOV head + explode, the
+    quality/lang base, exact dedup, the LSH shingle pass) otherwise
+    each re-evaluate the scrub regexps + the nine gopher signal arrays
+    per branch.  Measured at sf0.1 local[32] (r5 A/B, interleaved arms
+    with host controls): persist ≈15s vs no-persist ≈24s steady state,
+    and the persist arm stays flat through host-noise windows that
+    push no-persist past 160s.
     This is the INVERSE of the dedup_substrings persist rejection —
     there a 13.5×-corpus windows frame served 2 consumers; here a
     SMALLER-than-corpus survivor frame (the gopher gate drops 30-60%
     of a real crawl) serves 6.  At 10^12 docs the cache spills to
-    executor-local disk; pass False to trade recompute for memory."""
+    executor-local disk."""
     from .fluency import lm_fluency
     from .gopher import GOPHER_STOPS, gopher_filter
     from .pii import scrub_col
@@ -216,11 +212,9 @@ def curate_full(
     docs3 = gopher_filter(
         docs2, min_words=gopher_min_words,
         stops=GOPHER_STOPS if gopher_stops is None else gopher_stops)
-    if persist_survivors:
-        from pyspark import StorageLevel
-        docs3 = docs3.persist(StorageLevel.MEMORY_AND_DISK)
-        if unpersist_handles is not None:
-            unpersist_handles.append(docs3)
+    docs3 = docs3.persist(StorageLevel.MEMORY_AND_DISK)
+    if unpersist_handles is not None:
+        unpersist_handles.append(docs3)
     flu = lm_fluency(docs3.select("doc_id", "text", "lang"),
                      unpersist_handles=unpersist_handles) \
         .select("doc_id", "fluency_bp", "bucket")

@@ -457,8 +457,7 @@ def dedup_simhash(
 def dedup_clusters(
     docs: DataFrame, n: int = 3, threshold: float = 0.8,
     max_shingle_df: int | str | None = None, max_iters: int = 80,
-    pairs: DataFrame | None = None, source: str = "lsh",
-    pointer_jump: bool = True,
+    pairs: DataFrame | None = None,
     unpersist_handles: list | None = None,
 ) -> DataFrame:
     """Connected components over the near-duplicate pair graph →
@@ -468,10 +467,9 @@ def dedup_clusters(
     near-cliques, so 2-3 iterations in practice).  Only docs that
     appear in at least one pair are emitted.
 
-    Scale shape: pairs come from ``dedup_minhash_lsh`` by default
-    (bucketed candidates + candidate-restricted verification — never an
-    all-pairs shingle join; ``source="exact"`` is the oracle form, same
-    output when LSH recall is 1.0, which holds at τ≤0.8 with 8×4
+    Scale shape: pairs come from ``dedup_minhash_lsh`` unless passed
+    in (bucketed candidates + candidate-restricted verification — never
+    an all-pairs shingle join; LSH recall is 1.0 at τ≤0.8 with 8×4
     banding on this corpus — verified vs the DuckDB recursive-CTE
     oracle at sf0.01 and sf0.1).  TWO propagation steps run per
     ``localCheckpoint`` + convergence-count round: the label frame is
@@ -495,16 +493,11 @@ def dedup_clusters(
     just-checkpointed partitions (early-exit take(1)) — NOT a shuffle
     join of the new label frame against the old one, which was the
     second full job per round until r5 (the r5 A/B on this exact
-    query: see BENCH/BASELINE.md §curation_pipeline).
-
-    ``pointer_jump=False`` disables the per-round shortcut self-join
-    (A/B instrumentation; near-clique graphs converge identically
-    without it, chain graphs need it)."""
+    query: see BENCH/BASELINE.md §curation_pipeline)."""
     if pairs is None:
-        fn = dedup_ngram_jaccard if source == "exact" else dedup_minhash_lsh
-        pairs = fn(docs, n=n, threshold=threshold,
-                   max_shingle_df=max_shingle_df,
-                   unpersist_handles=unpersist_handles)
+        pairs = dedup_minhash_lsh(docs, n=n, threshold=threshold,
+                                  max_shingle_df=max_shingle_df,
+                                  unpersist_handles=unpersist_handles)
     # Materialize the pair list ONCE before symmetrizing: `pairs`
     # appears in BOTH branches of the union below, and Catalyst does
     # not share subtrees across union branches, so without this
@@ -579,8 +572,7 @@ def dedup_clusters(
         if steps_done < max_iters:
             r = step(r)
             steps_done += 1
-        if pointer_jump:
-            r = shortcut(r)
+        r = shortcut(r)
         # one materialization job per round, then a fixpoint probe on
         # the checkpointed partitions (no second shuffle join)
         mat = r.localCheckpoint()
@@ -774,25 +766,6 @@ def dedup_substrings(docs: DataFrame, window: int = 32,
     because doc_id+start+row overhead amortize the key and LZ4
     compresses hex md5 harder than random bigints.
 
-    A third form, ``span_hash="poly"``, skips window-string
-    construction entirely: each TOKEN is hashed once to a 31-bit int
-    (the same char fold as doc_fingerprint), and each window key is a
-    two-base polynomial fold over the token-int slice — 2 bigint
-    mul+mod per element instead of copying ~w·avg_token bytes into a
-    string and md5-ing it, removing the ~w× hash-input write
-    amplification.  Key = h1·2^31 + h2 (62 bits effective, products
-    stay < 2^62: ANSI-safe).  pytest proves poly ≡ md5 output on
-    corpus text — but the 400k rehearsal REJECTED it for prod:
-    4048s vs md5's 1061s and xxhash64's 574s (SCALE_rehearsal.json).
-    The theory double-counted who pays: ``concat_ws + xxhash64`` is
-    one tight codegen'd memcpy+hash loop over the slice, while the
-    struct-accumulator ``F.aggregate`` fold evaluates a branchy
-    two-field lambda per element with no whole-stage fusion across
-    the nested HOFs — per-element interpreter overhead dwarfs the
-    byte-copy it saves.  Kept as the collision-free-key reference
-    form (62-bit keys, no string build) and a measured warning:
-    nested HOF folds are NOT cheaper than built-in hash kernels.
-
     The windows frame feeds BOTH the duplicate-count agg and the hit
     join, so the minhash-shingle precedent suggests persisting it —
     MEASURED AND REJECTED (SCALE_rehearsal.json, 400k planted docs):
@@ -801,47 +774,19 @@ def dedup_substrings(docs: DataFrame, window: int = 32,
     costs more than recomputing the stride-1 window hashes, unlike the
     shingle frame whose THREE consumers amortize it.  Recompute wins
     at two consumers; both shuffles are on the same key either way."""
-    M = 2147483647  # 2^31-1, the doc_fingerprint modulus
-    B1, B2 = 1000003, 999983
     toks_df = docs.select("doc_id", tokens_col().alias("_toks"))
     tk = F.col("_toks")
-    if span_hash == "poly":
-        # one 31-bit char-fold per token, materialized as a column so
-        # the per-window slices reference it (never re-fold: CSE trap)
-        toks_df = toks_df.withColumn(
-            "_th", F.transform(tk, lambda t: F.aggregate(
-                F.split(t, ""), F.lit(0).cast("bigint"),
-                lambda acc, c: (acc * 31 + F.ascii(c)) % M)))
-        th = F.col("_th")
-
-        def _win_key(i):
-            acc0 = F.struct(
-                F.lit(0).cast("bigint").alias("a"),
-                F.lit(0).cast("bigint").alias("b"))
-            return F.aggregate(
-                F.slice(th, i + 1, window), acc0,
-                lambda acc, x: F.struct(
-                    ((acc["a"] * B1 + x) % M).alias("a"),
-                    ((acc["b"] * B2 + x) % M).alias("b")),
-                lambda acc: acc["a"] * F.lit(2147483648) + acc["b"])
-        empty_t = "array<bigint>"
-    elif span_hash == "md5":
-        def _win_key(i):
-            return F.md5(F.concat_ws(" ", F.slice(tk, i + 1, window)))
-        empty_t = "array<string>"
-    elif span_hash == "xxhash64":
-        def _win_key(i):
-            return F.xxhash64(
-                F.concat_ws(" ", F.slice(tk, i + 1, window)))
-        empty_t = "array<bigint>"
-    else:
-        raise ValueError(
-            f"span_hash must be md5|xxhash64|poly: {span_hash}")
+    keys = {"md5": (F.md5, "array<string>"),
+            "xxhash64": (F.xxhash64, "array<bigint>")}
+    if span_hash not in keys:
+        raise ValueError(f"span_hash must be md5|xxhash64: {span_hash}")
+    span_key, empty_t = keys[span_hash]
     wins_arr = F.when(
         F.size(tk) >= window,
         F.transform(
             F.sequence(F.lit(0), F.size(tk) - window),
-            _win_key),
+            lambda i: span_key(
+                F.concat_ws(" ", F.slice(tk, i + 1, window)))),
     ).otherwise(F.array().cast(empty_t))
     wins = (
         toks_df.select("doc_id", wins_arr.alias("_w"))

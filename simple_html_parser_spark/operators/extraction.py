@@ -9,10 +9,20 @@ Design (SURVEY.md §3.4, §4.3):
         path; no per-row Python UDFs
       → columnar output batches, byte-capped
 
-Every Python stage of the engine (extraction, the node view, the
-query/serialize/edit surfaces, charset sniffing, WARC parsing) is a
-``_DocStage``: a per-document function over (key, payload) plus an
-error-row function, behind one batch loop.
+Every Python stage of the engine is a ``_DocStage``: a per-document
+function over (key, payload) plus an error-row function, behind one
+batch loop.  The 15 stages:
+
+- here: ``extract_documents``, ``roundtrip_html``, ``parse_nodes``;
+- operators/queryapi: ``kernel_query_api``, ``iterator_api``,
+  ``css_query_api``, ``serialize_api``, ``css_serialize_api``,
+  ``visualize_api``;
+- operators/editing: ``edit_roundtrip``;
+- operators/charset: ``detect_charset``;
+- operators/warc: ``parse_warc``;
+- operators/multimodal: ``extract_image_features``,
+  ``extract_audio_features``;
+- operators/pdftext: ``extract_pdf_text``.
 
 Scale notes:
 - Isolation: a document's rows are committed only if the whole

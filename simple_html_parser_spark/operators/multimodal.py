@@ -4,10 +4,12 @@ metadata, processed with vectorized Arrow batches.
 The header decoders are REAL pure-Python parsers (no image/audio libs
 needed): PNG IHDR (signature + width/height/bit-depth/color-type, CRC
 present and valid in the synthesized corpus) and WAV RIFF chunk walk
-(fmt → channels/sample-rate/bits, data → frame count).  Unknown magic
-falls back to the original deterministic stub (``decoded=false``), so
-a production build only swaps the fallback for PIL/ffmpeg — schema,
-batching, partitioning and the mapInPandas signatures are unchanged.
+(fmt → channels/sample-rate/bits, data → frame count).  Each runs as a
+``_DocStage`` (operators/extraction): one row per payload, and a
+payload the decoder rejects gets the deterministic stub row
+(``decoded=false``), so a production build only swaps a decoder for
+PIL/ffmpeg — schema, batching, partitioning and isolation are
+unchanged.
 
 ``binary_metadata`` is fully real (length, magic prefix, sha256) and
 oracle-checked against DuckDB over the same bytes.
@@ -16,20 +18,26 @@ oracle-checked against DuckDB over the same bytes.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .extraction import _DocStage, _row
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 # PNG color type → sample channels (spec §11.2.2; type 3 is palette)
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
+# the largest value an int32 column holds; a header field past it
+# (invalid in PNG, absurd in WAV) takes the stub row
+_INT32_MAX = 2**31 - 1
 
-IMAGE_META_SCHEMA = (
-    "url string, n_bytes bigint, width int, height int, channels int, "
-    "decoded boolean, note string"
-)
+IMAGE_META_SCHEMA = pa.schema([
+    ("url", pa.string()), ("n_bytes", pa.int64()),
+    ("width", pa.int32()), ("height", pa.int32()),
+    ("channels", pa.int32()), ("decoded", pa.bool_()),
+    ("note", pa.string()),
+])
 
 
 def binary_metadata(df: DataFrame, col: str = "html") -> DataFrame:
@@ -43,121 +51,91 @@ def binary_metadata(df: DataFrame, col: str = "html") -> DataFrame:
     )
 
 
-def decode_image_batch(payloads: pd.Series) -> pd.DataFrame:
+def decode_image(url, b):
     """Image header decode: REAL pure-Python PNG IHDR parse (spec
     §11.2.2 — signature, first chunk must be IHDR, big-endian
-    width/height, bit depth, color type → channels).  Non-PNG payloads
-    fall back to the deterministic stub (``decoded=false``) — the slot
-    a production build fills with PIL/cv2.  Per-payload isolation: a
-    truncated/corrupt header yields a fallback row, never a failed
-    task."""
-    rows = []
-    for b in payloads:
-        n = 0 if b is None else len(b)
-        try:
-            if b is None or n < 26 or bytes(b[:8]) != PNG_SIG \
-                    or bytes(b[12:16]) != b"IHDR":
-                raise ValueError("not a PNG")
-            w, h = struct.unpack(">II", bytes(b[16:24]))
-            bit_depth, color_type = b[24], b[25]
-            rows.append((n, w, h, _PNG_CHANNELS.get(color_type, 0), True,
-                         f"png-ihdr bit_depth={bit_depth} "
-                         f"color_type={color_type}"))
-        except Exception:  # noqa: BLE001 — per-payload isolation
-            rows.append((n, n % 640 + 1, n % 480 + 1, 3, False,
-                         "stub-decoder: deterministic fake dims"))
-    out = pd.DataFrame(
-        rows, columns=["n_bytes", "width", "height", "channels",
-                       "decoded", "note"])
-    return out.astype({"n_bytes": "int64", "width": "int32",
-                       "height": "int32", "channels": "int32",
-                       "decoded": "bool"})
+    width/height, bit depth, color type → channels).  Raises on a
+    non-PNG or truncated header; the stage turns that into the stub
+    row — the slot a production build fills with PIL/cv2."""
+    if len(b) < 26 or b[:8] != PNG_SIG or b[12:16] != b"IHDR":
+        raise ValueError("not a PNG")
+    w, h = struct.unpack(">II", b[16:24])
+    if max(w, h) > _INT32_MAX:
+        raise ValueError("IHDR dimension past 2^31-1")
+    bit_depth, color_type = b[24], b[25]
+    return _row(url, len(b), w, h, _PNG_CHANNELS.get(color_type, 0), True,
+                f"png-ihdr bit_depth={bit_depth} color_type={color_type}")
 
 
-def extract_image_features(
-    df: DataFrame, col: str = "html", batch_rows: int = 256,
-) -> DataFrame:
-    """mapInPandas pipeline over binary payloads — Arrow-batched, with
-    explicit batch re-chunking so giant blobs can't blow a batch."""
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for start in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[start:start + batch_rows]
-                feats = decode_image_batch(chunk[col])
-                feats.insert(0, "url", chunk["url"].values)
-                yield feats
-
-    return df.select("url", col).mapInPandas(fn, IMAGE_META_SCHEMA)
+def _image_stub(url, b, e):
+    n = 0 if b is None else len(b)
+    return _row(url, n, n % 640 + 1, n % 480 + 1, 3, False,
+                "stub-decoder: deterministic fake dims")
 
 
-AUDIO_META_SCHEMA = (
-    "url string, n_bytes bigint, sample_rate int, channels int, "
-    "n_samples bigint, duration_ms bigint, decoded boolean, note string"
-)
+def _make_image_fn(col: str = "html") -> _DocStage:
+    return _DocStage(IMAGE_META_SCHEMA, decode_image, _image_stub,
+                     payload=col)
 
 
-def decode_audio_batch(payloads: pd.Series) -> pd.DataFrame:
+def extract_image_features(df: DataFrame, col: str = "html") -> DataFrame:
+    """(url, ``col``) → one image-header row per payload, through one
+    mapInArrow stage."""
+    return _make_image_fn(col).apply(df)
+
+
+AUDIO_META_SCHEMA = pa.schema([
+    ("url", pa.string()), ("n_bytes", pa.int64()),
+    ("sample_rate", pa.int32()), ("channels", pa.int32()),
+    ("n_samples", pa.int64()), ("duration_ms", pa.int64()),
+    ("decoded", pa.bool_()), ("note", pa.string()),
+])
+
+
+def decode_audio(url, b):
     """Audio header decode: REAL pure-Python WAV parse (RIFF/WAVE
     container walk — ``fmt `` chunk → PCM format/channels/sample-rate/
     bits, ``data`` chunk → byte count → sample frames and duration).
-    Non-WAV payloads fall back to the deterministic stub
-    (``decoded=false``) — the slot a production build fills with
-    soundfile/ffmpeg.  Per-payload isolation as in the image path."""
-    rows = []
-    for b in payloads:
-        n = 0 if b is None else len(b)
-        try:
-            if b is None or n < 44 or bytes(b[:4]) != b"RIFF" \
-                    or bytes(b[8:12]) != b"WAVE":
-                raise ValueError("not a WAV")
-            bb = bytes(b)
-            fmt = data_size = None
-            off = 12
-            while off + 8 <= n:
-                cid = bb[off:off + 4]
-                size = struct.unpack("<I", bb[off + 4:off + 8])[0]
-                if cid == b"fmt ":
-                    fmt = struct.unpack("<HHIIHH", bb[off + 8:off + 24])
-                elif cid == b"data":
-                    data_size = size
-                off += 8 + size + (size & 1)    # chunks are word-aligned
-            if fmt is None or data_size is None:
-                raise ValueError("missing fmt/data chunk")
-            _, channels, rate, _, block_align, bits = fmt
-            frames = data_size // max(block_align, 1)
-            rows.append((n, rate, channels, frames,
-                         frames * 1000 // max(rate, 1), True,
-                         f"wav-fmt bits={bits}"))
-        except Exception:  # noqa: BLE001 — per-payload isolation
-            rate = 16000 + (n % 3) * 8000        # 16/24/32 kHz fake
-            rows.append((n, rate, 1, n * 4, n * 4 * 1000 // rate, False,
-                         "stub-decoder: deterministic fake audio meta"))
-    out = pd.DataFrame(
-        rows, columns=["n_bytes", "sample_rate", "channels", "n_samples",
-                       "duration_ms", "decoded", "note"])
-    return out.astype({"n_bytes": "int64", "sample_rate": "int32",
-                       "channels": "int32", "n_samples": "int64",
-                       "duration_ms": "int64", "decoded": "bool"})
+    Raises on a non-WAV payload, for the stub row as in the image path
+    — the slot a production build fills with soundfile/ffmpeg."""
+    n = len(b)
+    if n < 44 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+        raise ValueError("not a WAV")
+    fmt = data_size = None
+    off = 12
+    while off + 8 <= n:
+        cid = b[off:off + 4]
+        size = struct.unpack("<I", b[off + 4:off + 8])[0]
+        if cid == b"fmt ":
+            fmt = struct.unpack("<HHIIHH", b[off + 8:off + 24])
+        elif cid == b"data":
+            data_size = size
+        off += 8 + size + (size & 1)    # chunks are word-aligned
+    if fmt is None or data_size is None:
+        raise ValueError("missing fmt/data chunk")
+    _, channels, rate, _, block_align, bits = fmt
+    if rate > _INT32_MAX:
+        raise ValueError("sample rate past 2^31-1")
+    frames = data_size // max(block_align, 1)
+    return _row(url, n, rate, channels, frames,
+                frames * 1000 // max(rate, 1), True, f"wav-fmt bits={bits}")
 
 
-def extract_audio_features(
-    df: DataFrame, col: str = "html", batch_rows: int = 256,
-) -> DataFrame:
-    """Same Arrow-batched mapInPandas shape as the image path."""
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for start in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[start:start + batch_rows]
-                feats = decode_audio_batch(chunk[col])
-                feats.insert(0, "url", chunk["url"].values)
-                yield feats
-
-    return df.select("url", col).mapInPandas(fn, AUDIO_META_SCHEMA)
+def _audio_stub(url, b, e):
+    n = 0 if b is None else len(b)
+    rate = 16000 + (n % 3) * 8000        # 16/24/32 kHz fake
+    return _row(url, n, rate, 1, n * 4, n * 4 * 1000 // rate, False,
+                "stub-decoder: deterministic fake audio meta")
 
 
-FRAME_SAMPLE_SCHEMA = (
-    "url string, frame_idx int, frame_offset bigint, frame_sha256 string"
-)
+def _make_audio_fn(col: str = "html") -> _DocStage:
+    return _DocStage(AUDIO_META_SCHEMA, decode_audio, _audio_stub,
+                     payload=col)
+
+
+def extract_audio_features(df: DataFrame, col: str = "html") -> DataFrame:
+    """Same one-stage shape as the image path."""
+    return _make_audio_fn(col).apply(df)
 
 
 def frame_sample(

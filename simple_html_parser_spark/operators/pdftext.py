@@ -23,10 +23,10 @@ a REAL pure-Python PDF parser (no pdfminer/PyPDF needed):
   extends the (y, x, text) tuples with font size for column detection;
   the Spark-side shape (one row per page) is final.
 
-Spark shape mirrors operators/multimodal.py: Arrow-batched
-``mapInPandas`` with explicit re-chunking, per-payload isolation (a
-corrupt PDF yields one ``decoded=false`` row, never a failed task —
-at 10^12 docs a poison payload must not kill the job).
+Spark shape mirrors operators/multimodal.py: one ``_DocStage``
+(operators/extraction) with per-payload isolation (a corrupt PDF
+yields one ``decoded=false`` row, never a failed task — at 10^12 docs
+a poison payload must not kill the job).
 
 The synthesized corpus (sources/documents.py::render_pdf) builds
 structurally valid PDFs fully JVM-side whose page texts are
@@ -38,15 +38,17 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
-PDF_TEXT_SCHEMA = (
-    "url string, page int, n_lines int, n_chars int, text string, "
-    "decoded boolean, note string"
-)
+from .extraction import _DocStage, _row
+
+PDF_TEXT_SCHEMA = pa.schema([
+    ("url", pa.string()), ("page", pa.int32()), ("n_lines", pa.int32()),
+    ("n_chars", pa.int32()), ("text", pa.string()),
+    ("decoded", pa.bool_()), ("note", pa.string()),
+])
 
 _WS = b"\x00\t\n\x0c\r "
 # string escape → replacement (octal and continuation handled inline)
@@ -380,7 +382,7 @@ def _page_content(b: bytes, offsets: dict[int, int],
 def parse_pdf_pages(b: bytes) -> list[tuple[int, str, str]]:
     """Full parse: (page_no starting at 1, extracted text in layout
     order, note) per page.  Raises on a non-PDF payload — callers
-    (decode_pdf_batch) isolate per payload."""
+    (decode_pdf) isolate per payload."""
     if not b.startswith(b"%PDF-"):
         raise ValueError("missing %PDF header")
     via = "xref"
@@ -397,41 +399,29 @@ def parse_pdf_pages(b: bytes) -> list[tuple[int, str, str]]:
     return out
 
 
-def decode_pdf_batch(urls: pd.Series, payloads: pd.Series) -> pd.DataFrame:
-    """One output row per page; a non-PDF / corrupt payload yields a
-    single ``decoded=false`` row (per-payload isolation — the
-    production seam for a pdfium/poppler swap-in)."""
-    rows = []
-    for url, b in zip(urls, payloads):
-        try:
-            pages = parse_pdf_pages(bytes(b))
-            if not pages:
-                raise ValueError("no pages")
-            for page_no, text, note in pages:
-                rows.append((url, page_no, text.count("\n") + 1 if text
-                             else 0, len(text), text, True, note))
-        except Exception:  # noqa: BLE001 — per-payload isolation
-            rows.append((url, 0, 0, 0, "", False,
-                         "stub-decoder: not a parseable pdf"))
-    out = pd.DataFrame(
-        rows, columns=["url", "page", "n_lines", "n_chars", "text",
-                       "decoded", "note"])
-    return out.astype({"page": "int32", "n_lines": "int32",
-                       "n_chars": "int32", "decoded": "bool"})
+def decode_pdf(url, b):
+    """One output row per page; raises on a non-PDF, corrupt or
+    page-less payload, which the stage turns into a single
+    ``decoded=false`` row (the production seam for a pdfium/poppler
+    swap-in)."""
+    pages = parse_pdf_pages(b)
+    if not pages:
+        raise ValueError("no pages")
+    return zip(*((url, page_no, text.count("\n") + 1 if text else 0,
+                  len(text), text, True, note)
+                 for page_no, text, note in pages))
 
 
-def extract_pdf_text(
-    df: DataFrame, col: str = "payload", batch_rows: int = 256,
-) -> DataFrame:
-    """Arrow-batched mapInPandas over binary PDF payloads — same
-    re-chunked shape as the image/audio paths (multimodal.py), one
-    Python stage, no per-row UDFs.  Output is one row per PAGE, so a
-    10^12-doc corpus fans out rows instead of accreting giant per-doc
-    strings."""
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for start in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[start:start + batch_rows]
-                yield decode_pdf_batch(chunk["url"], chunk[col])
+def _pdf_stub(url, b, e):
+    return _row(url, 0, 0, 0, "", False, "stub-decoder: not a parseable pdf")
 
-    return df.select("url", col).mapInPandas(fn, PDF_TEXT_SCHEMA)
+
+def _make_pdf_fn(col: str = "payload") -> _DocStage:
+    return _DocStage(PDF_TEXT_SCHEMA, decode_pdf, _pdf_stub, payload=col)
+
+
+def extract_pdf_text(df: DataFrame, col: str = "payload") -> DataFrame:
+    """(url, ``col``) → one row per PAGE of each PDF payload, through
+    one mapInArrow stage, no per-row UDFs — so a 10^12-doc corpus fans
+    out rows instead of accreting giant per-doc strings."""
+    return _make_pdf_fn(col).apply(df)

@@ -121,34 +121,35 @@ def test_void_elems_match_reference_list():
         "track wbr".split())
 
 
+def _pdf_stage_output(*payloads: bytes):
+    """extract_pdf_text's per-partition output over one Arrow batch of
+    ``payloads``."""
+    import pyarrow as pa
+
+    from simple_html_parser_spark.operators.pdftext import _make_pdf_fn
+    batch = pa.record_batch(
+        [pa.array([f"u{i}" for i in range(len(payloads))]),
+         pa.array(payloads, pa.binary())], names=["url", "payload"])
+    return pa.Table.from_batches(list(_make_pdf_fn()(iter([batch]))))
+
+
 @given(st.binary(max_size=300))
 @settings(max_examples=300, deadline=None)
 def test_pdf_parser_never_crashes_on_garbage(b):
-    """decode_pdf_batch must isolate ANY payload — raw garbage as well
-    as %PDF-prefixed garbage — into rows, never exceptions (the
+    """The PDF stage must isolate ANY payload — raw garbage as well as
+    %PDF-prefixed garbage — into rows, never exceptions (the
     poison-payload guarantee at crawl scale)."""
-    import pandas as pd
-
-    from simple_html_parser_spark.operators.pdftext import (
-        decode_pdf_batch,
-    )
-    out = decode_pdf_batch(
-        pd.Series(["u", "v"]), pd.Series([b, b"%PDF-1.4\n" + b]))
-    assert len(out) >= 2 and set(out.columns) >= {"page", "decoded"}
+    out = _pdf_stage_output(b, b"%PDF-1.4\n" + b)
+    assert out.num_rows >= 2
+    assert {"page", "decoded"} <= set(out.column_names)
 
 
 @given(st.integers(0, 2**31 - 1), st.integers(0, 120))
 @settings(max_examples=150, deadline=None)
 def test_pdf_parser_survives_point_mutations(seed, ndel):
     """A structurally valid PDF with random byte flips/deletions must
-    either parse or fall back — never raise out of the batch API."""
+    either parse or fall back — never raise out of the stage."""
     import random
-
-    import pandas as pd
-
-    from simple_html_parser_spark.operators.pdftext import (
-        decode_pdf_batch,
-    )
 
     c1 = b"BT /F1 12 Tf 72 720 Td (mutation corpus) Tj ET\n"
     base = (
@@ -163,8 +164,7 @@ def test_pdf_parser_survives_point_mutations(seed, ndel):
     for _ in range(rng.randint(1, 8)):
         m[rng.randrange(len(m))] = rng.randrange(256)
     del m[len(m) - ndel:]
-    out = decode_pdf_batch(pd.Series(["u"]), pd.Series([bytes(m)]))
-    assert len(out) >= 1
+    assert _pdf_stage_output(bytes(m)).num_rows >= 1
 
 
 def test_replace_with_self_detaches_for_iah():
@@ -195,11 +195,7 @@ def test_pdf_adversarial_kids_cycle_and_flate_bomb():
     balloon into worker memory)."""
     import zlib
 
-    import pandas as pd
-
-    from simple_html_parser_spark.operators.pdftext import (
-        decode_pdf_batch, parse_pdf_pages,
-    )
+    from simple_html_parser_spark.operators.pdftext import parse_pdf_pages
 
     def obj(num, body):
         return f"{num} 0 obj\n".encode() + body + b"endobj\n"
@@ -210,8 +206,8 @@ def test_pdf_adversarial_kids_cycle_and_flate_bomb():
         + obj(2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>\n")
         + obj(3, b"<< /Type /Pages /Kids [2 0 R] /Count 1 >>\n")
         + b"%%EOF")
-    out = decode_pdf_batch(pd.Series(["c"]), pd.Series([cyclic]))
-    assert list(out.decoded) == [False]
+    out = _pdf_stage_output(cyclic)
+    assert out.column("decoded").to_pylist() == [False]
 
     bomb = zlib.compress(b"\x00" * (80 * 1024 * 1024), 9)  # ~80 KB in
     c1 = b"BT 0 0 Td (x) Tj ET\n"
@@ -224,8 +220,8 @@ def test_pdf_adversarial_kids_cycle_and_flate_bomb():
               + b" /Filter /FlateDecode >>\nstream\n" + bomb
               + b"\nendstream\n")
         + b"%%EOF")
-    out = decode_pdf_batch(pd.Series(["b"]), pd.Series([bombed]))
-    assert list(out.decoded) == [False]
+    out = _pdf_stage_output(bombed)
+    assert out.column("decoded").to_pylist() == [False]
     # a deep-but-legal nested page tree still parses (iterative walk)
     depth = 3000
     objs = [obj(1, b"<< /Type /Catalog /Pages 2 0 R >>\n")]

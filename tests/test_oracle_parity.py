@@ -28,6 +28,8 @@ ARROW_STAGE_QUERIES = (
     "doc_edit_pipeline", "doc_roundtrip",
     "charset_sniff", "charset_extract",
     "warc_records", "warc_extract",
+    "image_features", "audio_features", "image_features_stub",
+    "audio_features_stub", "pdf_text_extract",
 )
 
 

@@ -493,10 +493,10 @@ def test_pdf_payloads_are_wellformed(spark):
 def test_pdf_malformed_recovery():
     """A corrupt/absent xref falls back to the object scan (via=scan);
     garbage payloads yield decoded=false rows, never failures."""
-    import pandas as pd
+    import pyarrow as pa
 
     from simple_html_parser_spark.operators.pdftext import (
-        decode_pdf_batch, parse_pdf_pages,
+        _make_pdf_fn, parse_pdf_pages,
     )
 
     c1 = b"BT /F1 12 Tf 72 720 Td (hello world) Tj ET\n"
@@ -513,11 +513,13 @@ def test_pdf_malformed_recovery():
     # a startxref pointing into the weeds -> scan recovery
     broken = good + b"startxref\n2\n%%EOF"
     assert parse_pdf_pages(broken)[0][2] == "pdf-text via=scan filter=none"
-    out = decode_pdf_batch(
-        pd.Series(["a", "b", "c"]),
-        pd.Series([good + b"%%EOF", b"\x00\x01garbage", b""]))
-    assert list(out.decoded) == [True, False, False]
-    assert list(out.page) == [1, 0, 0]
+    batch = pa.record_batch(
+        [pa.array(["a", "b", "c"]),
+         pa.array([good + b"%%EOF", b"\x00\x01garbage", b""])],
+        names=["url", "payload"])
+    out = pa.Table.from_batches(list(_make_pdf_fn()(iter([batch]))))
+    assert out.column("decoded").to_pylist() == [True, False, False]
+    assert out.column("page").to_pylist() == [1, 0, 0]
 
 
 def test_pdf_content_stream_operators():
@@ -793,9 +795,8 @@ def test_dedup_substrings_matches_python_reference(spark):
 
 
 def test_dedup_substrings_hash_variants_equal(spark):
-    """The prod span key forms — xxhash64 (8-byte bigint) and poly
-    (two-base rolling fold over token char-hashes) — yield the same
-    deduped output as the oracle md5 form on real corpus text."""
+    """The prod span key form — xxhash64 (8-byte bigint) — yields the
+    same deduped output as the oracle md5 form on real corpus text."""
     from simple_html_parser_spark.operators import dedup as D
     from simple_html_parser_spark.sources.documents import load_table
 
@@ -806,10 +807,7 @@ def test_dedup_substrings_hash_variants_equal(spark):
     b = {tuple(r) for r in
          D.dedup_substrings(base, window=12,
                             span_hash="xxhash64").collect()}
-    c = {tuple(r) for r in
-         D.dedup_substrings(base, window=12,
-                            span_hash="poly").collect()}
-    assert a == b == c and len(a) == 120
+    assert a == b and len(a) == 120
     assert any(r[3] > 0 for r in a)
 
 

@@ -6,7 +6,9 @@ escapes the per-partition function."""
 
 from __future__ import annotations
 
+import struct
 import sys
+import zlib
 from pathlib import Path
 
 import pyarrow as pa
@@ -22,6 +24,8 @@ from simple_html_parser_spark.kernel.tree import FlatTree  # noqa: E402
 from simple_html_parser_spark.operators import charset as CS  # noqa: E402
 from simple_html_parser_spark.operators import editing as ED  # noqa: E402
 from simple_html_parser_spark.operators import extraction as EX  # noqa: E402
+from simple_html_parser_spark.operators import multimodal as MM  # noqa: E402
+from simple_html_parser_spark.operators import pdftext as PDF  # noqa: E402
 from simple_html_parser_spark.operators import queryapi as QA  # noqa: E402
 from simple_html_parser_spark.operators import warc as WA  # noqa: E402
 from simple_html_parser_spark.sources.documents import (  # noqa: E402
@@ -80,6 +84,39 @@ def _warc_file(pages: list[bytes]) -> bytes:
         for i, p in enumerate(pages))
 
 
+def _png(page: bytes) -> bytes:
+    """A PNG signature and IHDR chunk (width = the page's length),
+    followed by the page."""
+    ihdr = struct.pack(">II5B", len(page), 7, 8, 2, 0, 0, 0)
+    return (MM.PNG_SIG + struct.pack(">I", 13) + b"IHDR" + ihdr
+            + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr)) + page)
+
+
+def _wav(page: bytes) -> bytes:
+    """A mono 8 kHz 16-bit PCM WAV whose data chunk is the page."""
+    body = (b"WAVE" + b"fmt " + struct.pack("<I", 16)
+            + struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
+            + b"data" + struct.pack("<I", len(page)) + page
+            + b"\0" * (len(page) & 1))
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+def _pdf(page: bytes) -> bytes:
+    """A two-page PDF (no xref: the object-scan path) whose pages both
+    show the page as one literal string."""
+    lit = (page.replace(b"\\", b"\\\\").replace(b"(", b"\\(")
+           .replace(b")", b"\\)"))
+    c = b"BT 0 0 Td (" + lit + b") Tj ET\n"
+    return (b"%PDF-1.4\n"
+            b"1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
+            b"2 0 obj\n<< /Type /Pages /Kids [3 0 R 4 0 R] /Count 2 >>"
+            b"\nendobj\n"
+            b"3 0 obj\n<< /Type /Page /Contents 5 0 R >>\nendobj\n"
+            b"4 0 obj\n<< /Type /Page /Contents 5 0 R >>\nendobj\n"
+            + b"5 0 obj\n<< /Length %d >>\nstream\n" % len(c) + c
+            + b"\nendstream\nendobj\n%%EOF")
+
+
 def _docs(tpl: str, key="url", payload="html", wrap=lambda p: p):
     keys = ["doc://a/1", "doc://a/2", "doc://m/3"]
     raws = [wrap(_page(tpl, i, text))
@@ -90,6 +127,24 @@ def _docs(tpl: str, key="url", payload="html", wrap=lambda p: p):
 
 def _nodes_error():
     return dict(EX._ERROR_ROW, url="doc://m/3", content=BOOM)
+
+
+def _marked_size(b: pa.RecordBatch) -> int:
+    return len(b.column("payload")[2].as_py())
+
+
+def _image_stub(n: int) -> dict:
+    return {"url": "doc://m/3", "n_bytes": n, "width": n % 640 + 1,
+            "height": n % 480 + 1, "channels": 3, "decoded": False,
+            "note": "stub-decoder: deterministic fake dims"}
+
+
+def _audio_stub(n: int) -> dict:
+    rate = 16000 + (n % 3) * 8000
+    return {"url": "doc://m/3", "n_bytes": n, "sample_rate": rate,
+            "channels": 1, "n_samples": n * 4,
+            "duration_ms": n * 4 * 1000 // rate, "decoded": False,
+            "note": "stub-decoder: deterministic fake audio meta"}
 
 
 # stage → (per-partition function, input batch, (owner, attribute,
@@ -159,6 +214,25 @@ STAGES = {
                     "target_uri": None, "warc_date": None,
                     "content_length": None, "html": None,
                     "error": BOOM}]),
+    "extract_image_features": (
+        lambda: MM._make_image_fn("payload"),
+        lambda: _docs(HTML_TEMPLATE, payload="payload", wrap=_png),
+        (MM, "decode_image", lambda f: _raise_on_call(f, 1)),
+        lambda b: [_image_stub(_marked_size(b))]),
+    "extract_audio_features": (
+        lambda: MM._make_audio_fn("payload"),
+        lambda: _docs(HTML_TEMPLATE, payload="payload", wrap=_wav),
+        (MM, "decode_audio", lambda f: _raise_on_call(f, 1)),
+        lambda b: [_audio_stub(_marked_size(b))]),
+    # the marked PDF's second page raises: its first page's row must
+    # not survive
+    "extract_pdf_text": (
+        lambda: PDF._make_pdf_fn(),
+        lambda: _docs(HTML_TEMPLATE, payload="payload", wrap=_pdf),
+        (PDF, "_page_content", lambda f: _raise_on_call(f, 2)),
+        lambda b: [{"url": "doc://m/3", "page": 0, "n_lines": 0,
+                    "n_chars": 0, "text": "", "decoded": False,
+                    "note": "stub-decoder: not a parseable pdf"}]),
 }
 
 
@@ -200,3 +274,20 @@ def test_flush_per_input_batch_and_at_payload_cap(monkeypatch):
     capped = list(fn(iter([batch, batch])))
     assert len(capped) == 6  # one flush per document
     assert pa.Table.from_batches(capped).equals(pa.Table.from_batches(whole))
+
+
+def test_header_field_past_int32_takes_the_stub_row():
+    """A PNG width or WAV sample rate past 2^31-1 does not fit its
+    int32 column: that payload gets the stub row, and the batch's other
+    payloads still decode."""
+    png = bytearray(_png(b"x"))
+    png[16:20] = b"\xff\xff\xff\xff"
+    wav = bytearray(_wav(b"xx"))
+    wav[24:28] = struct.pack("<I", 2**31)
+    for make_fn, wrap, bad in ((MM._make_image_fn, _png, png),
+                               (MM._make_audio_fn, _wav, wav)):
+        batch = pa.record_batch(
+            [pa.array(["bad", "ok"]), pa.array([bytes(bad), wrap(b"ok")])],
+            names=["url", "html"])
+        out = pa.Table.from_batches(list(make_fn()(iter([batch]))))
+        assert out.column("decoded").to_pylist() == [False, True]

@@ -86,11 +86,11 @@ AUDITS: list[tuple[str, str, list[str], list[str]]] = [
     ("pdf_text_extract",
      "north-rule PDF/layout parse: payloads rendered JVM-side "
      "(codegen concat/length — the xref offsets are column "
-     "expressions), then ONE Arrow-batched MapInPandas stage; one "
+     "expressions), then ONE MapInArrow stage (a _DocStage); one "
      "repartition exchange (the r6 single-row-group-scan fix: the "
      "Python PDF parse otherwise runs as one task — A/B 1.40 -> "
      "0.84s); scan pruned to (doc_id, source)",
-     ["MapInPandas", "REPARTITION_BY_NUM"], []),
+     ["MapInArrow", "REPARTITION_BY_NUM"], []),
     ("dedup_lines",
      "CCNet-style line dedup: winner election is a hash AGGREGATE on "
      "the segment over a SCALAR bigint key (map-side partial min "

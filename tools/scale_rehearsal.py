@@ -165,7 +165,7 @@ def substr_arm(spark, results: list) -> None:
     exchange width and wall head-to-head."""
     pl = planted(spark)
     half, n_twins = N_DOCS // 2, (N_DOCS // 2) // PLANT_EVERY
-    for hname in ("md5", "xxhash64", "poly"):
+    for hname in ("md5", "xxhash64"):
         spark.catalog.clearCache()
         sw0 = shuffle_bytes(spark)
         ctl0 = _host_control(400_000)
