@@ -51,11 +51,11 @@ def main() -> None:
             names.append(a); i += 1
 
     import __spark_entry__ as entry
-    from simple_html_parser_spark.runtime.session import get_spark
+    from simple_html_parser_spark.runtime.session import (
+        default_cores, get_spark,
+    )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("bench-extra", master=f"local[{cpus}]",
-                      shuffle_partitions=2 * cpus)
+    spark = get_spark("bench-extra", shuffle_partitions=2 * default_cores())
     qs = entry.queries()
     if not names:
         names = list(HEADLINE_QUERIES)

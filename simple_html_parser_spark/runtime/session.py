@@ -44,6 +44,13 @@ DEFAULT_CONFS = {
 }
 
 
+def default_cores() -> int:
+    """``SPARK_GRAFT_CPUS`` when set, else the cores this process may
+    run on (what ``nproc`` reports without an OMP_NUM_THREADS cap)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "simple-html-parser-spark",
     master: str | None = None,
@@ -51,8 +58,7 @@ def get_spark(
     extra_confs: dict | None = None,
 ) -> SparkSession:
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{default_cores()}]"
     if shuffle_partitions is None:
         shuffle_partitions = _parallelism_of(master) or 32
 

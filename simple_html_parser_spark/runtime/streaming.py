@@ -8,11 +8,29 @@ streaming transform, with exactly-once file-sink semantics via the
 checkpoint directory.  Late/duplicate handling: the sink is keyed by
 url downstream (idempotent MERGE in Iceberg); here we demonstrate the
 file sink + availableNow trigger used by incremental backfills.
+
+Every query reads the crawl through ``_crawl_stream`` (one
+``readStream`` over ``CRAWL_SCHEMA`` parquet files) and writes through
+``_start`` (one append-mode parquet sink, ``availableNow`` trigger).
+
+Snapshot harness: ``windowed_metrics_snapshot``, ``sessionize_snapshot``
+and ``first_seen_snapshot`` run their stream over a bounded frame and
+return what it emitted as a batch DataFrame, so plain SQL can oracle
+the streaming surface.  ``_snapshot`` does this inside one
+``tempfile.TemporaryDirectory`` (prefix ``shp_stream_``): it writes the
+frame as the stream's input files, runs the query to completion, and
+reads the sink's output with an eager ``localCheckpoint()``, so the
+returned frame no longer needs the files.  The directory is removed on
+return and also when any step raises.
 """
 
 from __future__ import annotations
 
+import tempfile
+from functools import partial
+
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType, StringType, StructField, StructType, TimestampType,
 )
@@ -29,32 +47,82 @@ CRAWL_SCHEMA = StructType([
 ])
 
 
+def _crawl_stream(spark: SparkSession, input_dir: str,
+                  files_per_trigger: int = 8):
+    return (
+        spark.readStream.schema(CRAWL_SCHEMA)
+        .option("maxFilesPerTrigger", str(files_per_trigger))
+        .parquet(input_dir)
+    )
+
+
+def _start(df, output_dir: str, checkpoint_dir: str):
+    return (
+        df.writeStream
+        .format("parquet")
+        .option("path", output_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _snapshot(spark: SparkSession, write_input, start_stream, cols):
+    """``write_input(input_dir)`` writes the stream's input files,
+    ``start_stream(spark, input_dir, output_dir, checkpoint_dir)``
+    starts the query; returns its output projected to ``cols``."""
+    with tempfile.TemporaryDirectory(prefix="shp_stream_") as base:
+        inp, outp = f"{base}/in", f"{base}/out"
+        write_input(inp)
+        start_stream(spark, inp, outp, f"{base}/chk").awaitTermination()
+        # eager: the rows are in Spark's block store before rmtree
+        return spark.read.parquet(outp).select(*cols).localCheckpoint()
+
+
+def _ts(name: str):
+    return F.date_format(name, "yyyy-MM-dd HH:mm:ss").alias(name)
+
+
 def stream_extract(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
     profile: ExtractionProfile = PARITY,
-    available_now: bool = True,
 ):
     """readStream(parquet) → mapInArrow extraction → parquet sink.
     Returns the StreamingQuery (caller awaits termination)."""
-    stream = (
-        spark.readStream.schema(CRAWL_SCHEMA)
-        .option("maxFilesPerTrigger", "8")
-        .parquet(input_dir)
+    extracted = extract_documents(_crawl_stream(spark, input_dir),
+                                  profile=profile)
+    return _start(extracted, output_dir, checkpoint_dir)
+
+
+def _window_counts(stream, watermark: str, window, start: str, end: str,
+                   keys=()):
+    """Docs and html bytes per ``keys`` + ``window`` of ``warc_ts``,
+    watermarked, with the window's bounds named ``start``/``end``."""
+    return (
+        stream.withWatermark("warc_ts", watermark)
+        .groupBy(*keys, window.alias("w"))
+        .agg(F.count("*").alias("n_docs"),
+             F.sum(F.octet_length("html")).alias("html_bytes"))
+        .select(*keys, F.col("w.start").alias(start),
+                F.col("w.end").alias(end), "n_docs", "html_bytes")
     )
-    extracted = extract_documents(stream, profile=profile)
-    writer = (
-        extracted.writeStream
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def _window_snapshot(spark: SparkSession, docs, start_stream, cols):
+    """Snapshot of a watermarked window stream: append mode emits a
+    window only when the WATERMARK passes its end, and availableNow
+    does not force-finalize.  A sentinel row 30 days past the corpus
+    advances the watermark beyond every real window, so the emitted
+    set is exactly the batch GROUP BY over ``docs``; the sentinel's own
+    window stays open and never appears."""
+    sentinel = docs.limit(1).withColumn(
+        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 30 DAYS"))
+    return _snapshot(spark, docs.unionByName(sentinel).write.parquet,
+                     start_stream, cols)
 
 
 def stream_windowed_metrics(
@@ -73,31 +141,10 @@ def stream_windowed_metrics(
     property that keeps this runnable forever on a 10^12-doc append
     stream.  Append output mode: a window row is emitted exactly once,
     when the watermark passes its end."""
-    from pyspark.sql import functions as F
-
-    stream = (
-        spark.readStream.schema(CRAWL_SCHEMA)
-        .option("maxFilesPerTrigger", "8")
-        .parquet(input_dir)
-    )
-    agg = (
-        stream.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"))
-        .agg(F.count("*").alias("n_docs"),
-             F.sum(F.octet_length("html")).alias("html_bytes"))
-        .select(F.col("w.start").alias("window_start"),
-                F.col("w.end").alias("window_end"),
-                "n_docs", "html_bytes")
-    )
-    return (
-        agg.writeStream
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    agg = _window_counts(_crawl_stream(spark, input_dir), watermark,
+                         F.window("warc_ts", window),
+                         "window_start", "window_end")
+    return _start(agg, output_dir, checkpoint_dir)
 
 
 def windowed_metrics_snapshot(
@@ -108,35 +155,13 @@ def windowed_metrics_snapshot(
 ):
     """Run the windowed-metrics STREAM over a bounded crawl frame and
     return the emitted windows as a batch DataFrame — the driver-oracle
-    harness for the streaming surface (VERDICT r2 item 7).
-
-    Append mode emits a window only when the WATERMARK passes its end;
-    availableNow does not force-finalize.  A sentinel row 30 days past
-    the corpus advances the watermark beyond every real window, so the
-    emitted set is exactly the tumbling-window GROUP BY over the input
-    — deterministic, so plain SQL can oracle it.  The sentinel's own
-    window stays open and never appears."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    base = tempfile.mkdtemp(prefix="shp_stream_wm_")
-    inp, outp, chk = f"{base}/in", f"{base}/out", f"{base}/chk"
-    sentinel = docs.limit(1).withColumn(
-        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 30 DAYS"))
-    docs.unionByName(sentinel).write.parquet(inp)
-    q = stream_windowed_metrics(spark, inp, outp, chk,
-                                window=window, watermark=watermark)
-    q.awaitTermination()
-    return (
-        spark.read.parquet(outp)
-        .select(
-            F.date_format("window_start", "yyyy-MM-dd HH:mm:ss")
-            .alias("window_start"),
-            F.date_format("window_end", "yyyy-MM-dd HH:mm:ss")
-            .alias("window_end"),
-            "n_docs", "html_bytes")
-    )
+    harness for the streaming surface (VERDICT r2 item 7), with the
+    sentinel watermark of ``_window_snapshot``."""
+    return _window_snapshot(
+        spark, docs,
+        partial(stream_windowed_metrics, window=window,
+                watermark=watermark),
+        [_ts("window_start"), _ts("window_end"), "n_docs", "html_bytes"])
 
 
 def stream_sessionize(
@@ -158,34 +183,12 @@ def stream_sessionize(
     session row is emitted exactly once, when the watermark passes its
     end (sessions can merge across micro-batches until then — the
     state store holds only open sessions)."""
-    from pyspark.sql import functions as F
-
-    stream = (
-        spark.readStream.schema(CRAWL_SCHEMA)
-        .option("maxFilesPerTrigger", "8")
-        .parquet(input_dir)
-    )
     host = F.regexp_extract("url", r"^[a-z][a-z0-9+.\-]*://([^/]+)", 1)
-    agg = (
-        stream.withWatermark("warc_ts", watermark)
-        .groupBy(host.alias("host"),
-                 F.session_window("warc_ts", gap).alias("w"))
-        .agg(F.count("*").alias("n_docs"),
-             F.sum(F.octet_length("html")).alias("html_bytes"))
-        .select("host",
-                F.col("w.start").alias("session_start"),
-                F.col("w.end").alias("session_end"),
-                "n_docs", "html_bytes")
-    )
-    return (
-        agg.writeStream
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    agg = _window_counts(
+        _crawl_stream(spark, input_dir).withColumn("host", host),
+        watermark, F.session_window("warc_ts", gap),
+        "session_start", "session_end", keys=("host",))
+    return _start(agg, output_dir, checkpoint_dir)
 
 
 def sessionize_snapshot(
@@ -202,28 +205,11 @@ def sessionize_snapshot(
     must feed timestamps whose in-host gaps are clearly below or
     above ``gap`` — the exactly-equal-to-gap boundary is the one case
     where engines' open/closed conventions could differ."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    base = tempfile.mkdtemp(prefix="shp_stream_sess_")
-    inp, outp, chk = f"{base}/in", f"{base}/out", f"{base}/chk"
-    sentinel = docs.limit(1).withColumn(
-        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 30 DAYS"))
-    docs.unionByName(sentinel).write.parquet(inp)
-    q = stream_sessionize(spark, inp, outp, chk,
-                          gap=gap, watermark=watermark)
-    q.awaitTermination()
-    return (
-        spark.read.parquet(outp)
-        .select(
-            "host",
-            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss")
-            .alias("session_start"),
-            F.date_format("session_end", "yyyy-MM-dd HH:mm:ss")
-            .alias("session_end"),
-            "n_docs", "html_bytes")
-    )
+    return _window_snapshot(
+        spark, docs,
+        partial(stream_sessionize, gap=gap, watermark=watermark),
+        ["host", _ts("session_start"), _ts("session_end"),
+         "n_docs", "html_bytes"])
 
 
 def first_seen_snapshot(spark: SparkSession, docs):
@@ -245,31 +231,20 @@ def first_seen_snapshot(spark: SparkSession, docs):
         by GroupState — proving state persists across triggers while
         keeping the output equal to the original ``docs`` rows, which
         is what the plain-SQL oracle selects."""
-    import tempfile
+    def write_input(inp: str) -> None:
+        refetch = (
+            docs.withColumn("warc_ts",
+                            F.col("warc_ts") + F.expr("INTERVAL 7 DAYS"))
+            .withColumn("html",
+                        F.concat(F.col("html"),
+                                 F.lit(b"<!-- refetch pad -->")))
+        )
+        paired = docs.unionByName(refetch).repartition(8, F.col("url"))
+        paired.write.parquet(inp)
+        docs.repartition(4, F.col("url")).write.mode("append").parquet(inp)
 
-    from pyspark.sql import functions as F
-
-    base = tempfile.mkdtemp(prefix="shp_stream_fs_")
-    inp, outp, chk = f"{base}/in", f"{base}/out", f"{base}/chk"
-    refetch = (
-        docs.withColumn("warc_ts",
-                        F.col("warc_ts") + F.expr("INTERVAL 7 DAYS"))
-        .withColumn("html",
-                    F.concat(F.col("html"),
-                             F.lit(b"<!-- refetch pad -->")))
-    )
-    paired = docs.unionByName(refetch).repartition(8, F.col("url"))
-    paired.write.parquet(inp)
-    docs.repartition(4, F.col("url")).write.mode("append").parquet(inp)
-    q = stream_dedup_first_seen(spark, inp, outp, chk)
-    q.awaitTermination()
-    return (
-        spark.read.parquet(outp)
-        .select("url",
-                F.date_format("warc_ts", "yyyy-MM-dd HH:mm:ss")
-                .alias("warc_ts"),
-                "n_bytes")
-    )
+    return _snapshot(spark, write_input, stream_dedup_first_seen,
+                     ["url", _ts("warc_ts"), "n_bytes"])
 
 
 def stream_dedup_first_seen(
@@ -292,7 +267,6 @@ def stream_dedup_first_seen(
     "What's wrong" #5).  Mirrors url_dedup_latest's contract of a
     scalar deterministic ordering key; ties beyond (warc_ts, n_bytes)
     are byte-equal rows, so the emitted VALUE is deterministic."""
-    import pandas as pd  # noqa: PLC0415 — worker-side import
     from pyspark.sql.streaming.state import (
         GroupState, GroupStateTimeout,
     )
@@ -324,30 +298,12 @@ def stream_dedup_first_seen(
                 best = cand
         state.update((1,))
         if best is not None:
-            yield pd.DataFrame({
-                "url": best["url"].values,
-                "warc_ts": best["warc_ts"].values,
-                "n_bytes": best["n_bytes"].values.astype("int64"),
-            })
+            yield best
 
-    from pyspark.sql import functions as F
-
-    stream = (
-        spark.readStream.schema(CRAWL_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(input_dir)
-        .select("url", "warc_ts",
-                F.octet_length("html").cast("long").alias("n_bytes"))
-    )
+    stream = _crawl_stream(spark, input_dir, files_per_trigger=1).select(
+        "url", "warc_ts",
+        F.octet_length("html").cast("long").alias("n_bytes"))
     deduped = stream.groupBy("url").applyInPandasWithState(
         first_seen, out_schema, state_schema, "append",
         GroupStateTimeout.NoTimeout)
-    return (
-        deduped.writeStream
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(deduped, output_dir, checkpoint_dir)

@@ -16,7 +16,7 @@ sys.path.insert(0, str(ROOT))
 sys.path.insert(0, str(ROOT / "tools"))
 
 from fixture_corpus import CASES  # noqa: E402
-from simple_html_parser_spark.kernel.compat import run_case  # noqa: E402
+from kernel_dump import run_case  # noqa: E402
 
 GOLDENS_PATH = ROOT / "fixtures" / "goldens.jsonl"
 

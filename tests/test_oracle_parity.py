@@ -1,7 +1,7 @@
 """DuckDB parity for the declared queries that run through the
-per-document Arrow stages: each query's Spark result must equal its
-``oracle_sql()`` on the sf0.01 testdata, compared by
-tools/oracle_check.py inside this module's Spark session."""
+per-document Arrow stages or a streaming snapshot: each query's Spark
+result must equal its ``oracle_sql()`` on the sf0.01 testdata,
+compared by tools/oracle_check.py inside this module's Spark session."""
 
 from __future__ import annotations
 
@@ -31,6 +31,12 @@ ARROW_STAGE_QUERIES = (
     "image_features", "audio_features", "image_features_stub",
     "audio_features_stub", "pdf_text_extract",
 )
+# a real readStream -> writeStream run over the bounded table must equal
+# the batch query over it
+STREAMING_QUERIES = (
+    "stream_windowed_metrics", "stream_sessionize", "stream_first_seen_dedup",
+)
+QUERIES = ARROW_STAGE_QUERIES + STREAMING_QUERIES
 
 
 @pytest.fixture(scope="module")
@@ -42,11 +48,11 @@ def spark():
 
 def test_queries_are_declared_with_oracles():
     queries, oracles = entrymod.queries(), entrymod.oracle_sql()
-    missing = [q for q in ARROW_STAGE_QUERIES
+    missing = [q for q in QUERIES
                if q not in queries or q not in oracles]
     assert not missing
 
 
-@pytest.mark.parametrize("name", ARROW_STAGE_QUERIES)
+@pytest.mark.parametrize("name", QUERIES)
 def test_query_matches_duckdb_oracle(spark, name):
     assert oracle_check.check(SF, [name], spark=spark) == 0

@@ -337,6 +337,34 @@ def test_streaming_stateful_dedup(spark, docs, tmp_path):
     assert got.count() == got.select("url").distinct().count() == 35
 
 
+# sf0.001: 500 docs one second apart from 2025-01-01 00:00:00, their
+# urls spread over 20 hosts
+@pytest.mark.parametrize("name, n_rows, start_raises", [
+    ("windowed_metrics_snapshot", 9, False),  # minutes 00..08
+    ("sessionize_snapshot", 20, False),  # one session per host
+    ("first_seen_snapshot", 500, False),  # one row per url
+    ("first_seen_snapshot", None, True),
+])
+def test_streaming_snapshot_removes_its_temp_tree(
+        spark, docs, tmp_path, monkeypatch, name, n_rows, start_raises):
+    """A snapshot's input/output/checkpoint tree is gone once it
+    returns or raises, and the frame it returned still collects."""
+    import tempfile
+
+    from simple_html_parser_spark.runtime import streaming
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    snapshot = getattr(streaming, name)
+    if start_raises:
+        def fail(*args, **kwargs):
+            raise RuntimeError("stream start failed")
+        monkeypatch.setattr(streaming, "stream_dedup_first_seen", fail)
+        with pytest.raises(RuntimeError, match="stream start failed"):
+            snapshot(spark, docs)
+    else:
+        assert len(snapshot(spark, docs).collect()) == n_rows
+    assert list(tmp_path.iterdir()) == []
+
+
 def test_invalid_utf8_and_binary_garbage(spark, docs):
     """Crawl tails contain broken encodings: invalid UTF-8 and binary
     junk must yield rows (replacement-decoded or error-marked), never

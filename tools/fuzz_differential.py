@@ -16,7 +16,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
-from simple_html_parser_spark.kernel.compat import run_case  # noqa: E402
+from kernel_dump import run_case  # noqa: E402
 
 TAGS = ["div", "p", "span", "a", "br", "img", "style", "script", "jhp",
         "ul", "li", "DIV", "b", "x-y", "s_"]

@@ -4,14 +4,23 @@ Produces the normalized tree-dump / op-result shapes that
 tools/ref_dump.mjs produces from the reference parser, so pytest can
 assert byte-level equivalence (the correctness gate: extracted text and
 tree semantics byte-identical per url, BASELINE.json `north_rule`).
+Used by tests/test_goldens.py and tools/fuzz_differential.py; the
+package itself never imports it.
 """
 
 from __future__ import annotations
 
-from . import cssquery, selector, serialize
-from .manipulate import run_mutation
-from .tokenizer import DEFAULT_SPECIAL_TAGS, parse_html
-from .tree import FlatTree
+from simple_html_parser_spark.kernel import cssquery, selector, serialize
+from simple_html_parser_spark.kernel.extract import (
+    ExtractionProfile, extract,
+)
+from simple_html_parser_spark.kernel.manipulate import (
+    DomIterator, run_mutation,
+)
+from simple_html_parser_spark.kernel.tokenizer import (
+    DEFAULT_SPECIAL_TAGS, parse_html,
+)
+from simple_html_parser_spark.kernel.tree import FlatTree
 
 
 def dump_tree(tree: FlatTree) -> list[dict]:
@@ -52,7 +61,6 @@ def run_op(tree: FlatTree, op: dict):
             content_preview_length=op.get("preview_len", 20),
         )
     if name == "extract":
-        from .extract import ExtractionProfile, extract
         if op.get("mode") == "density":
             profile = ExtractionProfile(
                 mode="density",
@@ -179,8 +187,6 @@ def _node_label(tree: FlatTree, nid: int) -> str:
 
 def _run_iterate(tree: FlatTree, remove_spec: dict | None,
                  remove_other: dict | None = None) -> dict:
-    from . import selector
-    from .manipulate import DomIterator
     it = DomIterator(tree, 0)
     visited = []
     for nid in it:

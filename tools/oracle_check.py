@@ -12,7 +12,6 @@ test passes its own).
 from __future__ import annotations
 
 import math
-import os
 import sys
 import time
 from pathlib import Path
@@ -57,10 +56,7 @@ def check(sf_dir: str, only: list[str] | None = None,
 
     own_session = spark is None
     if own_session:
-        # the host's cores, as nproc reports them without its
-        # OMP_NUM_THREADS override
-        cores = len(os.sched_getaffinity(0))
-        spark = get_spark(master=f"local[{cores}]", shuffle_partitions=16)
+        spark = get_spark(shuffle_partitions=16)
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = 0

@@ -144,8 +144,8 @@ function closingOf(node) {
 
 function runMutation(root, steps) {
     // Scripted mutation interpreter — mirrored in
-    // simple_html_parser_spark/kernel/compat.py so manipulation
-    // semantics are golden-compared end-to-end.
+    // simple_html_parser_spark/kernel/manipulate.py (run_mutation), so
+    // manipulation semantics are golden-compared end-to-end.
     for (const st of steps) {
         const target = st.sel ? resolveSel(root, st.sel, st.index) : root;
         switch (st.act) {
