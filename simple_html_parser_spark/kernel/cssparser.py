@@ -29,33 +29,22 @@ VAL_DELIM = re.compile(r"[;}()]")
 SEL_DELIM = re.compile(r"[{()]")
 NEST_DELIM = re.compile(r"[:{};()]")
 from .tree import (
-    COMMENT, CSS_AT_RULE, CSS_ROOT, CSS_RULE, FLAG_CSS_TOP, FlatTree,
+    COMMENT, CSS_AT_RULE, CSS_RULE, FLAG_CSS_TOP, FlatTree,
 )
 
 _STATEMENT_AT_RULES = ("import", "charset", "namespace")
 
 
-def parse_css(css: str) -> FlatTree:
-    """Standalone CSS parse → FlatTree rooted at a ``css-root`` node
-    (reference ``new CSSParser().parse(css)``, css-parser.js:49)."""
-    tree = FlatTree(CSS_ROOT)
-    parse_css_into(tree, 0, css, top_flag=False)
-    return tree
-
-
-def parse_css_into(
-    tree: FlatTree, parent: int, css: str, top_flag: bool = True
-) -> None:
+def parse_css_into(tree: FlatTree, parent: int, css: str) -> None:
     """Parse ``css`` appending nodes under ``parent``.
 
-    ``top_flag`` marks top-level CSS nodes with FLAG_CSS_TOP — the
+    Top-level CSS nodes are marked with FLAG_CSS_TOP — the
     grafted-under-<style> case, where the reference leaves the nodes'
     parent pointing at a dangling css-root (simple-html-parser.js:144),
     which cssFindVariables' ":root scope" logic observes (node.js:637).
     """
     pos = 0
     n = len(css)
-    top_level_flag = FLAG_CSS_TOP if top_flag else 0
     # Stack of (container id, its declarations dict or None); index 0
     # is the graft parent.  The dict rides the stack so declarations
     # avoid two SparseColumn lookups each (hot on style-heavy pages).
@@ -70,7 +59,7 @@ def parse_css_into(
         container = stack[-1][0]
         nid = tree.add_node(ntype, container, **kw)
         if len(stack) == 1:
-            tree.flags[nid] |= top_level_flag
+            tree.flags[nid] |= FLAG_CSS_TOP
         return nid
 
     while pos < n:

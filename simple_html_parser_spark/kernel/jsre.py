@@ -81,10 +81,6 @@ def js_split_ws(s: str) -> list[str]:
     return WS_PLUS.split(s)
 
 
-def is_js_space(ch: str) -> bool:
-    return ch in JS_WS_CHARS
-
-
 def js_trim(s: str) -> str:
     """``String.prototype.trim`` — strips the JS whitespace set."""
     return s.strip(JS_WS_CHARS)

@@ -31,11 +31,6 @@ def has_attr(attr: str) -> Column:
         & F.col("attrs")[attr].isNotNull()
 
 
-def attr_equals(attr: str, value: str) -> Column:
-    return (F.col("type") == "tag-open") \
-        & (F.col("attrs")[attr] == value)
-
-
 def has_class(cls: str) -> Column:
     """Reference semantics: class list split on JS whitespace, exact
     token membership (node.js:992-999)."""

@@ -5,7 +5,7 @@ partial-agg / window paths under the oracle gate)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -79,8 +79,3 @@ def supplier_part_join(part: DataFrame, supplier: DataFrame,
                 F.col("p_name").alias("part_name"),
                 "total_qty", "n_lines")
     )
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables) -> None:
-    for t in tables:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)

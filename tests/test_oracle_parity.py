@@ -15,9 +15,10 @@ sys.path.insert(0, str(ROOT))
 sys.path.insert(0, str(ROOT / "tools"))
 
 import oracle_check  # noqa: E402
-from make_plans import SF  # noqa: E402  (the sf0.01 testdata dir)
+from make_plans import AUDITS, SF  # noqa: E402  (SF: the sf0.01 testdata dir)
 
 import __spark_entry__ as entrymod  # noqa: E402
+from bench import HEADLINE_QUERIES  # noqa: E402
 from simple_html_parser_spark.runtime.session import get_spark  # noqa: E402
 
 ARROW_STAGE_QUERIES = (
@@ -47,10 +48,13 @@ def spark():
 
 
 def test_queries_are_declared_with_oracles():
+    """Every name this module, bench.py and make_plans.py select must
+    be a declared query, and every declared query has an oracle."""
     queries, oracles = entrymod.queries(), entrymod.oracle_sql()
-    missing = [q for q in QUERIES
-               if q not in queries or q not in oracles]
-    assert not missing
+    assert list(queries) == list(oracles)
+    selected = (list(QUERIES) + list(HEADLINE_QUERIES)
+                + [name for name, *_ in AUDITS])
+    assert [q for q in selected if q not in queries] == []
 
 
 @pytest.mark.parametrize("name", QUERIES)

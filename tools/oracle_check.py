@@ -74,14 +74,10 @@ def check(sf_dir: str, only: list[str] | None = None,
             continue
         finally:
             # several operators persist intermediates (LSH shingles,
-            # line-dedup segments); 73 queries in one session would
-            # accrete cached blocks and degrade later queries (the
-            # r3 bench hygiene lesson) — release between queries
+            # line-dedup segments); every declared query in one session
+            # would accrete cached blocks and degrade later queries
+            # (the r3 bench hygiene lesson) — release between queries
             spark.catalog.clearCache()
-        if name not in oracles:
-            print(f"rows-only {name}: {len(spark_rows)} rows "
-                  f"({time.time()-t0:.1f}s)")
-            continue
         try:
             rel = con.sql(oracles[name])
             duck_cols = [c.lower() for c in rel.columns]
