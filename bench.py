@@ -167,25 +167,10 @@ def serve_extraction_worker(master: str, sf_dir: str, mult: int) -> None:
 def headline_queries(spark, sf_dir: str) -> dict[str, float]:
     """Time each headline query (forced via count/collect)."""
     import __spark_entry__ as entry
+    from simple_html_parser_spark.runtime.session import release
     qs = entry.queries()
     trials = int(os.environ.get("SPARK_GRAFT_HEADLINE_TRIALS", "2"))
     ctl_min = float(os.environ.get("SPARK_GRAFT_BENCH_CTL_MIN", "0.85"))
-
-    def _hygiene():
-        # several queries persist/localCheckpoint frames (LSH
-        # shingles, k-means sweeps); left in place they accrete
-        # executor memory across the session and degrade every LATER
-        # query (r3: a 146s kmeans trial and an 11.5s q3 traced to
-        # this).  Clear between queries so each is measured on a
-        # quiet executor; gc() lets ContextCleaner drop checkpointed
-        # blocks whose Python handles are gone.
-        import gc
-        spark.catalog.clearCache()
-        gc.collect()
-        try:
-            spark._jvm.System.gc()
-        except Exception:  # noqa: BLE001
-            pass
 
     def _timed(name: str) -> float:
         t0 = time.perf_counter()
@@ -214,7 +199,9 @@ def headline_queries(spark, sf_dir: str) -> dict[str, float]:
         log(f"  {name}: {out[name]}s {walls} ctl={ctl}/{ctl_after}"
             + ("" if clean else "  [NOISY]"))
         ctl = ctl_after
-        _hygiene()
+        # each query is measured on a quiet executor (r3: cached frames
+        # left in place made a kmeans trial 146s and q3 11.5s)
+        release(spark)
     # second pass: one clean-window retrial per noise-flagged query
     for name in noisy:
         ctl = _host_control(400_000)
@@ -225,7 +212,7 @@ def headline_queries(spark, sf_dir: str) -> dict[str, float]:
         w = _timed(name)
         log(f"  retry {name}: {w}s (was {out[name]}s, ctl={ctl})")
         out[name] = min(out[name], w)
-        _hygiene()
+        release(spark)
     return out
 
 

@@ -2,7 +2,7 @@
 FROZEN for measurement, so every diagnostic run lives here.
 
 Times any subset of the headline queries with bench.py's exact
-methodology (count() force, clearCache+gc hygiene between queries,
+methodology (count() force, ``release`` between queries,
 Spark-free host control around every query, min-of-trials), and can
 additionally dump .explain("formatted") per query and time with the
 noop sink (guide §1.4) to isolate computation from the count() path.
@@ -16,7 +16,6 @@ Output: one JSON line {"queries": {...}, "ctl": {...}}.
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
@@ -52,21 +51,13 @@ def main() -> None:
 
     import __spark_entry__ as entry
     from simple_html_parser_spark.runtime.session import (
-        default_cores, get_spark,
+        default_cores, get_spark, release,
     )
 
     spark = get_spark("bench-extra", shuffle_partitions=2 * default_cores())
     qs = entry.queries()
     if not names:
         names = list(HEADLINE_QUERIES)
-
-    def _hygiene():
-        spark.catalog.clearCache()
-        gc.collect()
-        try:
-            spark._jvm.System.gc()
-        except Exception:  # noqa: BLE001
-            pass
 
     def _force(df):
         if use_noop:
@@ -95,7 +86,7 @@ def main() -> None:
                 qs[name](spark, sf_dir).explain("formatted")
             (Path(explain_dir) / f"{name}.txt").write_text(
                 buf.getvalue(), encoding="utf-8")
-            _hygiene()
+            release(spark)
         c0 = _host_control(400_000)
         walls = [_timed(name) for _ in range(trials)]
         if len(walls) >= 2 and max(walls) > 2 * min(walls):
@@ -106,7 +97,7 @@ def main() -> None:
         ctls[name] = [c0, c1]
         print(f"  {name}: {out[name]}s {walls} ctl={c0}/{c1}",
               file=sys.stderr, flush=True)
-        _hygiene()
+        release(spark)
     spark.stop()
     print(json.dumps({"queries": out, "walls": walls_all, "ctl": ctls,
                       "total": round(sum(out.values()), 3),

@@ -32,8 +32,6 @@ JS_WS_SET = frozenset(JS_WS_CHARS)
 
 # /\s+/ as used by the reference for tag-content splitting.
 WS_PLUS = re.compile(f"[{_WS}]+")
-# /\s/ single-char test.
-WS_ONE = re.compile(f"[{_WS}]")
 
 # /([\w-]+)(?:=(?:"([^"]*)"|'([^']*)'|(\S+)))?/g
 # (simple-html-parser.js:6).  \w is ASCII; \S is NOT-JS-whitespace.
@@ -41,9 +39,6 @@ ATTR_PATTERN = re.compile(
     r"([A-Za-z0-9_\-]+)"
     r"(?:=(?:\"([^\"]*)\"|'([^']*)'|([^" + _WS + r"]+)))?"
 )
-
-# /[a-zA-Z0-9_\-]/ single-char tag-name validity (simple-html-parser.js:8).
-VALID_TAG_CHAR = re.compile(r"[a-zA-Z0-9_\-]")
 
 # Tag-start dispatch set for the tokenizer hot loop: after '<', any of
 # these chars means NOT the non-tag rescue (valid tag-name chars plus
@@ -59,9 +54,6 @@ TAG_START_CHARS = frozenset(
 
 # /[\(\[{,;=:&|!?]/ JS regex-literal context (simple-html-parser.js:7).
 JS_REGEX_CONTEXT = frozenset("([{,;=:&|!?")
-
-# /[a-zA-Z\-]/ at-rule name charset (css-parser.js:6).
-AT_RULE_NAME_CHAR = re.compile(r"[a-zA-Z\-]")
 
 
 def js_substring(s: str, a: int, b: int) -> str:

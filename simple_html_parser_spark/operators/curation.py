@@ -20,10 +20,10 @@ to AQE rather than forced.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..runtime.session import persist
 from .dedup import dedup_clusters, dedup_exact, tokens_col
 from .textstats import pred_lang_struct, quality_cols
 
@@ -143,11 +143,9 @@ def curate_web(
     # output (that would shuffle the corpus against itself once per
     # downstream branch); every stage below derives the scrubbed
     # text from this frame inside its own scan+project, all codegen
-    docs2 = docs.select("doc_id", "lang",
-                        scrub_col(F.col("text")).alias("text"))
-    docs2 = docs2.persist(StorageLevel.MEMORY_AND_DISK)
-    if unpersist_handles is not None:
-        unpersist_handles.append(docs2)
+    docs2 = persist(docs.select("doc_id", "lang",
+                                scrub_col(F.col("text")).alias("text")),
+                    unpersist_handles)
     base = _quality_lang_base(
         docs2, quality_min_bp,
         extra=F.col("oov_bp") <= oov_max_bp,
@@ -212,9 +210,7 @@ def curate_full(
     docs3 = gopher_filter(
         docs2, min_words=gopher_min_words,
         stops=GOPHER_STOPS if gopher_stops is None else gopher_stops)
-    docs3 = docs3.persist(StorageLevel.MEMORY_AND_DISK)
-    if unpersist_handles is not None:
-        unpersist_handles.append(docs3)
+    docs3 = persist(docs3, unpersist_handles)
     flu = lm_fluency(docs3.select("doc_id", "text", "lang"),
                      unpersist_handles=unpersist_handles) \
         .select("doc_id", "fluency_bp", "bucket")

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..runtime.session import persist
+
 
 def tokens_col(text: Column = None) -> Column:
     """Whitespace tokens, empties removed (split on single space —
@@ -144,40 +146,29 @@ def shingle_drop_stats(
 def dedup_ngram_jaccard(
     docs: DataFrame, n: int = 3, threshold: float = 0.8,
     max_shingle_df: int | str | None = None,
-    unpersist_handles: list | None = None,
 ) -> DataFrame:
     """Exact pairwise n-gram Jaccard pairs ≥ threshold:
     (doc_a, doc_b, jaccard) with doc_a < doc_b.
 
     Shuffle plan: explode → self-join on shingle (co-partitioned by
     shingle hash) → pair-count aggregate.  Cost is Σ df(sh)², which the
-    df-cut bounds at scale.
-
-    ``unpersist_handles``: tokenization is the dominant per-byte cost,
-    so the exploded (doc_id, sh) frame is persisted and shared by the
-    df-cut, the size aggregate, and the self-join.  The cache lives
-    until the session ends unless the caller passes a list here and
-    unpersists its entries once the returned frame is materialized."""
-    from pyspark import StorageLevel
-
+    df-cut bounds at scale.  Tokenization is the dominant per-byte
+    cost, so with a df-cut the exploded (doc_id, sh) frame is persisted
+    and shared by the cut, the size aggregate, and the self-join; the
+    cache lives until the caller's ``release``."""
     ex_raw = _exploded_shingles(docs, n)
     if max_shingle_df:
         # ONE tokenize+shingle pass shared by df-cut + join + sizes
         # (previously the cut recomputed the exploded frame — the r2
         # bench regression on this query)
-        ex_raw = ex_raw.persist(StorageLevel.MEMORY_AND_DISK)
-        if unpersist_handles is not None:
-            unpersist_handles.append(ex_raw)
+        ex_raw = persist(ex_raw)
     hot = _hot_shingles(docs, n, max_shingle_df, exploded=ex_raw)
     ex = ex_raw if hot is None \
         else ex_raw.join(F.broadcast(hot), "sh", "left_anti")
     # consumed twice (sa and sb below) — persist so the per-doc count
     # aggregation runs once, not once per join side (two ints per doc;
     # the union-branch non-CSE class, see dedup_minhash_lsh's sets)
-    sizes = ex.groupBy("doc_id").agg(F.count("*").alias("n_sh")) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    if unpersist_handles is not None:
-        unpersist_handles.append(sizes)
+    sizes = persist(ex.groupBy("doc_id").agg(F.count("*").alias("n_sh")))
 
     a = ex.alias("a")
     b = ex.alias("b")
@@ -254,8 +245,6 @@ def dedup_minhash_lsh(
     (cost: O(Σ bucket²) candidates + O(|shingles|) per verified pair,
     vs O(Σ df(sh)²) for the exact form).  ``max_bucket=None`` disables
     the bucket cap; 0/negative are rejected (falsy-zero trap)."""
-    from pyspark import StorageLevel
-
     if max_bucket is not None and max_bucket < 1:
         raise ValueError(
             f"max_bucket must be >= 1 or None, got {max_bucket}")
@@ -264,26 +253,19 @@ def dedup_minhash_lsh(
     # ONE tokenize+shingle pass over the corpus, persisted; the hot
     # list (df-cut), the signatures, and the candidate verification
     # sets are all cheap derivations of it.  Tokenization is the
-    # dominant per-byte cost, so it must not run 3x.  MEMORY_AND_DISK:
-    # at scale the exploded frame spills rather than recomputing.
-    # Cache lifetime: the three persisted frames stay cached until the
-    # session ends (eviction handles pressure) unless the caller passes
-    # ``unpersist_handles`` and releases them after materializing the
-    # result — kept caller-controlled because unpersisting eagerly here
-    # would either force evaluation or silently drop fault-tolerant
-    # recompute lineage at cluster scale.
-    ex_raw = _exploded_shingles(docs, n) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # dominant per-byte cost, so it must not run 3x.  The four
+    # persisted frames stay cached until the caller unpersists
+    # ``unpersist_handles`` or runs ``release`` — unpersisting eagerly
+    # here would either force evaluation or silently drop
+    # fault-tolerant recompute lineage at cluster scale.
+    ex_raw = persist(_exploded_shingles(docs, n), unpersist_handles)
     hot = _hot_shingles(docs, n, max_shingle_df, exploded=ex_raw)
     ex = ex_raw if hot is None \
         else ex_raw.join(F.broadcast(hot), "sh", "left_anti")
     # signatures: small result (doc_id + k longs), persisted so the
     # banded self-join doesn't aggregate twice
-    sigs = minhash_signatures(docs, n, num_hashes, exploded=ex) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    if unpersist_handles is not None:
-        unpersist_handles.append(ex_raw)
-        unpersist_handles.append(sigs)
+    sigs = persist(minhash_signatures(docs, n, num_hashes, exploded=ex),
+                   unpersist_handles)
     banded = sigs.select(
         "doc_id",
         F.explode(F.array(*[
@@ -304,17 +286,13 @@ def dedup_minhash_lsh(
 
     a = banded.alias("a")
     b = banded.alias("b")
-    cands = (
+    cands = persist(
         a.join(b, (F.col("a.band") == F.col("b.band"))
                & (F.col("a.bsig") == F.col("b.bsig"))
                & (F.col("a.doc_id") < F.col("b.doc_id")))
         .select(F.col("a.doc_id").alias("doc_a"),
                 F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    if unpersist_handles is not None:
-        unpersist_handles.append(cands)
+        .distinct(), unpersist_handles)
     # candidate-restricted exact-Jaccard verification: shingle sets of
     # candidate docs only (left_semi prune on the persisted exploded
     # frame), one array_intersect per candidate pair.  NO all-pairs
@@ -331,13 +309,10 @@ def dedup_minhash_lsh(
     # aggregation per consumer otherwise (the union-branch non-CSE
     # class; r6 A/B, identical 256-pair output: warm 1.1-1.3 s ->
     # 0.8-1.0 s).  Bounded by candidate docs, not the corpus.
-    sets = (
+    sets = persist(
         ex.join(cand_docs, "doc_id", "left_semi")
-        .groupBy("doc_id").agg(F.collect_set("sh").alias("shs"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    if unpersist_handles is not None:
-        unpersist_handles.append(sets)
+        .groupBy("doc_id").agg(F.collect_set("sh").alias("shs")),
+        unpersist_handles)
     sa = sets.select(F.col("doc_id").alias("doc_a"),
                      F.col("shs").alias("shs_a"))
     sb = sets.select(F.col("doc_id").alias("doc_b"),
@@ -606,8 +581,7 @@ def segments_col(seg_len: int = 8, toks: Column = None) -> Column:
         F.array().cast("array<string>"))
 
 
-def dedup_lines(docs: DataFrame, seg_len: int = 8,
-                unpersist_handles: list | None = None) -> DataFrame:
+def dedup_lines(docs: DataFrame, seg_len: int = 8) -> DataFrame:
     """CCNet-style corpus-level line dedup: split every document into
     fixed-width token segments, keep only the globally FIRST occurrence
     of each distinct segment (first = smallest (doc_id, seg_idx)), and
@@ -631,8 +605,6 @@ def dedup_lines(docs: DataFrame, seg_len: int = 8,
     on the same key (AQE skew-split applies); reassembly is one agg on
     doc_id.  At prod, shuffle on xxhash64(seg) instead of the raw
     string to shrink exchange width."""
-    from pyspark import StorageLevel
-
     key = F.when(
         F.col("seg_idx") < F.lit(1 << 22),
         F.col("doc_id") * F.lit(1 << 22).cast("bigint")
@@ -643,16 +615,12 @@ def dedup_lines(docs: DataFrame, seg_len: int = 8,
     # ONE persisted explode feeds both the winner election and the
     # probe side (same discipline as dedup_minhash_lsh's shingle
     # frame) — without it the corpus is tokenized+exploded twice
-    segs = (
+    segs = persist(
         docs.select("doc_id", tokens_col().alias("_toks"))
         .select("doc_id",
                 F.posexplode(segments_col(seg_len, F.col("_toks")))
                 .alias("seg_idx", "seg"))
-        .withColumn("_k", key)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    if unpersist_handles is not None:
-        unpersist_handles.append(segs)
+        .withColumn("_k", key))
     winner = segs.groupBy("seg").agg(F.min("_k").alias("_wk"))
     kept = (
         segs.join(winner, "seg")

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..runtime.session import persist
 from .dedup import tokens_col
 
 MAX_W = 15  # floor(log2(65535)): weight of a cap-saturated bigram
@@ -75,10 +76,7 @@ def lm_fluency(docs: DataFrame, ref: DataFrame | None = None,
     """
     bg = bigrams_exploded(docs)
     if ref is None:
-        from pyspark import StorageLevel
-        bg = bg.persist(StorageLevel.MEMORY_AND_DISK)
-        if unpersist_handles is not None:
-            unpersist_handles.append(bg)
+        bg = persist(bg, unpersist_handles)
     ref_bg = bg if ref is None else bigrams_exploded(ref)
     lm = (ref_bg.groupBy("lang", "b")
           .agg(F.count("*").alias("_c"))

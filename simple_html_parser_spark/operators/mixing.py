@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..runtime.session import persist
 from .dedup import tokens_col
 
 N_BUCKETS_HEX = 3  # default md5 hex-prefix length: 16^3 = 4096 buckets
@@ -85,14 +86,11 @@ def token_budget_mix(docs: DataFrame, budget_tokens: int,
     if not 1 <= n_buckets_hex <= 8:
         raise ValueError(
             f"n_buckets_hex must be in 1..8, got {n_buckets_hex}")
-    from pyspark import StorageLevel
-
     # persisted: the keyed frame feeds THREE consumers (the histogram
     # agg, the kept-whole semi-join probe, the crossing-bucket join)
     # and Catalyst re-runs the tokenize+md5 projection per consumer
     # without it (the twice-consumed-frame non-CSE class, r6)
-    toks = _keyed_tokens(docs, group_col, n_buckets_hex) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    toks = persist(_keyed_tokens(docs, group_col, n_buckets_hex))
 
     # GROUPS x 4096 histogram: the only corpus-wide exchange, and a
     # partial-aggregating one (4096 keys per group absorb any skew).

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..runtime.session import persist
 from .dedup import tokens_col
 
 # Tiny deterministic stopword profiles for the 5 corpus languages.
@@ -277,18 +278,15 @@ def tfidf_topk(docs: DataFrame, k: int = 5) -> DataFrame:
     co-partitioned and AQE's skew-join splits the stopword keys; the
     only Window partitions by doc_id, so each sort group is bounded
     by one document's distinct-term count, never the corpus."""
-    from pyspark import StorageLevel
-
     # persisted: tf feeds BOTH the df aggregation and the scoring
     # join, and Catalyst re-runs the explode+agg per consumer without
     # it (the twice-consumed-frame non-CSE class, r6) — the docstring's
     # "df reuses the SAME aggregated frame" only holds in execution
     # with the persist
-    tf = (docs.select("doc_id", tokens_col().alias("_t"))
-          .select("doc_id", F.explode("_t").alias("term"))
-          .groupBy("doc_id", "term")
-          .agg(F.count("*").alias("tf"))
-          .persist(StorageLevel.MEMORY_AND_DISK))
+    tf = persist(docs.select("doc_id", tokens_col().alias("_t"))
+                 .select("doc_id", F.explode("_t").alias("term"))
+                 .groupBy("doc_id", "term")
+                 .agg(F.count("*").alias("tf")))
     dfc = tf.groupBy("term").agg(
         F.count("*").cast("bigint").alias("df_docs"))
     n = docs.agg(F.count("*").alias("_nd"))

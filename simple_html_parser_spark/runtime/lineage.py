@@ -31,11 +31,6 @@ from pyspark.sql import functions as F
 from ..kernel.extract import PARITY, ExtractionProfile
 from ..operators.extraction import extract_documents
 
-LINEAGE_SCHEMA = (
-    "run_id string, bucket int, n_docs bigint, n_bytes bigint, "
-    "n_errors bigint, wall_s double, finished_at timestamp"
-)
-
 
 def bucket_col(n_buckets: int):
     return F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")

@@ -1,23 +1,76 @@
-"""SparkSession factory with scale-appropriate defaults.
+"""SparkSession factory with host-derived defaults, and the cache
+policy (``persist`` / ``release``) every operator and driver shares.
 
 Tuned for the extraction hot path: Arrow transport on, modest
 records-per-batch (pages can be MBs — byte-capping happens inside the
-kernel stage too), AQE for runtime coalescing/skew handling.  On a real
-cluster the same code ships via ``spark-submit --py-files
-<package.zip>`` (see tools/package_pyfiles.py).
+kernel stage too), AQE for runtime coalescing/skew handling.  Cores
+and driver memory come from the host (``default_cores``,
+``driver_memory``).  Shuffle goes to ``spark.local.dir`` on tmpfs,
+but an exported ``SPARK_LOCAL_DIRS`` environment variable overrides
+that setting (Spark reads it first), so a test run that exports it
+shuffles there instead.  On a real cluster the same code ships via
+``spark-submit --py-files <package.zip>`` (see
+tools/package_pyfiles.py).
 """
 
 from __future__ import annotations
 
+import gc
 import os
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
+
+
+def driver_memory() -> str:
+    """Half of host RAM (physical pages, capped by the cgroup's
+    ``memory.max``), never more than 48g.  In local mode the driver JVM
+    hosts every executor thread (the 1g default heap GC-thrashes at 32
+    threads, measured 4x slowdown), and the tmpfs shuffle dir below
+    lives in the other half."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        limit = Path("/sys/fs/cgroup/memory.max").read_text().strip()
+        if limit.isdigit():
+            ram = min(ram, int(limit))
+    except OSError:
+        pass
+    return f"{min(48 << 10, ram // 2 >> 20)}m"
+
+
+def persist(df: DataFrame, handles: list | None = None) -> DataFrame:
+    """``df`` persisted at MEMORY_AND_DISK (at scale it spills rather
+    than recomputes); appended to ``handles`` when that is a list, so
+    the caller can ``unpersist`` it once the result is materialized.
+
+    The rule: persist a frame that has more than one consumer in a
+    plan.  Catalyst shares nothing across consumers — union branches,
+    the two sides of a pair join, a df-cut and the join it prunes — so
+    without it the frame's whole subtree re-runs per consumer.
+    Persist keeps lineage; loop state, and frames that must outlive
+    their source, use ``localCheckpoint`` instead, which cuts it."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    if handles is not None:
+        handles.append(df)
+    return df
+
+
+def release(spark: SparkSession) -> None:
+    """Drop what earlier queries cached, between queries of one
+    session: ``clearCache()`` unpersists every persisted frame, then a
+    Python and a JVM GC let ContextCleaner drop the ``localCheckpoint``
+    blocks whose handles are gone (it acts only on JVM GC).  Left in
+    place, both accrete executor memory and slow every later query."""
+    spark.catalog.clearCache()
+    gc.collect()
+    try:
+        spark._jvm.System.gc()
+    except Exception:  # noqa: BLE001
+        pass
+
 
 DEFAULT_CONFS = {
-    # local mode: the driver JVM hosts all executor threads — the 1g
-    # default heap GC-thrashes at 32 threads (measured 4x slowdown).
-    "spark.driver.memory": "48g",
     # Shuffle/spill on tmpfs, NOT the VM's virtual disk.  The sandbox
     # disk sustains ~25 MB/s fsync writes; a long session pushes tens
     # of GB of shuffle data through the page cache, background
@@ -26,7 +79,8 @@ DEFAULT_CONFS = {
     # windows (curate_web 6s → 110s; 1-task jobs with 14s scheduler
     # gaps and 2s GC inflation) that a pure-CPU host control cannot
     # see.  Real executors shuffle to local NVMe; tmpfs is the honest
-    # stand-in here (128 GiB RAM, sf0.1 shuffles are a few GB).
+    # stand-in here (sf0.1 shuffles are a few GB, inside the half of
+    # RAM that driver_memory leaves to it).
     "spark.local.dir": "/dev/shm/spark-local",
     "spark.driver.maxResultSize": "4g",
     "spark.sql.adaptive.enabled": "true",
@@ -70,9 +124,8 @@ def get_spark(
             pkg_root + os.pathsep + os.environ["PYTHONPATH"]
             if os.environ.get("PYTHONPATH") else pkg_root)
 
-    confs = dict(DEFAULT_CONFS)
-    if extra_confs:
-        confs.update(extra_confs)
+    confs = {**DEFAULT_CONFS, "spark.driver.memory": driver_memory(),
+             **(extra_confs or {})}
     # tmpfs local dir: ensure the root exists and purge leaked subdirs
     # from crashed sessions (clean shutdowns remove their own; kill -9
     # leaks RAM-backed files that would otherwise live until reboot)

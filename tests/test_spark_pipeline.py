@@ -1257,30 +1257,58 @@ def test_curate_full_composes_stage_outputs(spark):
 
 
 def test_curation_unpersist_handles_release_caches(spark):
-    """curate_web/curate_full append every frame they persist to
-    ``unpersist_handles`` so a resident pipeline can release the
-    cache after materializing the result (bench survives via
-    clearCache; production would not)."""
+    """Every operator that takes ``unpersist_handles`` appends each frame
+    it persists, so a resident pipeline can release the cache after
+    materializing the result.  dedup_minhash_lsh is perfbench's
+    near_dup_lsh call: shingles, signatures, candidates and sets;
+    dedup_clusters passes the list through to it, lm_fluency adds its
+    bigram frame, and the curation flows add their scrubbed or survivor
+    frame on top."""
     from simple_html_parser_spark.operators import curation as CU
+    from simple_html_parser_spark.operators import dedup as D
+    from simple_html_parser_spark.operators.fluency import lm_fluency
+    from simple_html_parser_spark.runtime.session import release
     from simple_html_parser_spark.sources.documents import load_table
 
     docs = load_table(spark, SF, "documents") \
         .select("doc_id", "lang", "text")
-    for fn, kw in ((CU.curate_web, {}),
-                   (CU.curate_full,
-                    dict(gopher_min_words=10, gopher_stops=("the", "a")))):
+    for fn, kw, n_frames in (
+            (D.dedup_minhash_lsh, {}, 4),
+            (D.dedup_clusters, dict(threshold=0.30), 4),
+            (lm_fluency, {}, 1),
+            (CU.curate_web, {}, 5),
+            (CU.curate_full,
+             dict(gopher_min_words=10, gopher_stops=("the", "a")), 6)):
         handles: list = []
         out = fn(docs, unpersist_handles=handles, **kw)
         out.count()
-        # the scrubbed/survivor frame plus dedup's internal frames
-        assert len(handles) >= 2
-        assert any(h.storageLevel.useMemory or h.storageLevel.useDisk
-                   for h in handles)
+        assert len(handles) == n_frames, fn.__name__
+        assert all(h.storageLevel.useMemory and h.storageLevel.useDisk
+                   for h in handles), fn.__name__
         for h in handles:
             h.unpersist()
         assert all(not (h.storageLevel.useMemory
                         or h.storageLevel.useDisk) for h in handles)
-    spark.catalog.clearCache()
+    release(spark)
+
+
+def test_cache_policy_lives_in_session():
+    """Spark-free: ``runtime/session.py`` is the only place in the
+    package that picks a storage level (``persist``), and the bench
+    scripts and tools clear the cache only through ``release``."""
+    pkg = ROOT / "simple_html_parser_spark"
+    session = pkg / "runtime" / "session.py"
+    offenders = [
+        str(f.relative_to(ROOT)) for f in sorted(pkg.rglob("*.py"))
+        if f != session
+        and any(t in f.read_text(encoding="utf-8")
+                for t in (".persist(", "StorageLevel"))]
+    offenders += [
+        str(f.relative_to(ROOT))
+        for f in [ROOT / "bench.py", ROOT / "bench_extra.py",
+                  *sorted((ROOT / "tools").glob("*.py"))]
+        if "clearCache(" in f.read_text(encoding="utf-8")]
+    assert offenders == []
 
 
 def test_decontaminate_flags_benchmark_overlap(spark):

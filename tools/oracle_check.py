@@ -22,7 +22,9 @@ sys.path.insert(0, str(ROOT))
 import duckdb  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
-from simple_html_parser_spark.runtime.session import get_spark  # noqa: E402
+from simple_html_parser_spark.runtime.session import (  # noqa: E402
+    get_spark, release,
+)
 from simple_html_parser_spark.sources.documents import TABLES  # noqa: E402
 
 
@@ -73,11 +75,7 @@ def check(sf_dir: str, only: list[str] | None = None,
             failures += 1
             continue
         finally:
-            # several operators persist intermediates (LSH shingles,
-            # line-dedup segments); every declared query in one session
-            # would accrete cached blocks and degrade later queries
-            # (the r3 bench hygiene lesson) — release between queries
-            spark.catalog.clearCache()
+            release(spark)
         try:
             rel = con.sql(oracles[name])
             duck_cols = [c.lower() for c in rel.columns]

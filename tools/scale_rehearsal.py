@@ -75,7 +75,9 @@ from pyspark.sql import DataFrame, functions as F  # noqa: E402
 from bench import _host_control  # noqa: E402
 from simple_html_parser_spark.operators import dedup as D  # noqa: E402
 from simple_html_parser_spark.operators.curation import curate_web  # noqa: E402
-from simple_html_parser_spark.runtime.session import get_spark  # noqa: E402
+from simple_html_parser_spark.runtime.session import (  # noqa: E402
+    get_spark, release,
+)
 
 SF_DIR = "/root/testdata/sf0.1"
 REPL = 80  # 5k base docs × 80 = 400k
@@ -166,7 +168,7 @@ def substr_arm(spark, results: list) -> None:
     pl = planted(spark)
     half, n_twins = N_DOCS // 2, (N_DOCS // 2) // PLANT_EVERY
     for hname in ("md5", "xxhash64"):
-        spark.catalog.clearCache()
+        release(spark)
         sw0 = shuffle_bytes(spark)
         ctl0 = _host_control(400_000)
         t0 = time.perf_counter()
@@ -228,7 +230,7 @@ def r5ops_arm(spark, results: list) -> None:
         results.append(rec)
 
     def run(nm, mk, extras=None):
-        spark.catalog.clearCache()
+        release(spark)
         ctl0 = _host_control(400_000)
         t0 = time.perf_counter()
         out = mk(big)
@@ -285,7 +287,7 @@ def r5comp_arm(spark, results: list) -> None:
         ("repetition", lambda: GO.massivetext_repetition(
             big.select("doc_id", "text"))),
     ):
-        spark.catalog.clearCache()
+        release(spark)
         timed(f"repl400k_{nm}", mk, results)
 
 
@@ -326,23 +328,18 @@ def main() -> None:
     print(json.dumps(rec), flush=True)
     results.append(rec)
 
-    def hygiene():
-        import gc
-        spark.catalog.clearCache()
-        gc.collect()
-
     # --- replicated pathology: caps must bound candidate growth ----
     timed("repl400k_minhash", lambda: D.dedup_minhash_lsh(
         big, threshold=0.30, max_shingle_df="auto"), results)
-    hygiene()
+    release(spark)
     timed("repl400k_simhash", lambda: D.dedup_simhash(
         big, max_hamming=3), results)
-    hygiene()
+    release(spark)
     timed("repl400k_clusters", lambda: D.dedup_clusters(
         big, threshold=0.30, max_shingle_df="auto"), results)
-    hygiene()
+    release(spark)
     timed("repl400k_curate_web", lambda: curate_web(big), results)
-    hygiene()
+    release(spark)
 
     # --- planted recall at 400k (caps never fire; buckets ~1) ------
     pl = planted(spark)
