@@ -23,10 +23,12 @@ Two profiles:
   golden-gated through the same JS mirror.
 
 ``extract(tree, profile)`` over a FlatTree is the reference form of
-both profiles.  The Spark stage calls ``extract_html``, which applies
-the tokenizer's rules and the extraction in one streaming pass without
-building a tree; it is tested to equal ``extract(parse_html(html))``
-field by field.
+both profiles: the plain, untuned rule (one DFS and an un-memoised
+ancestor walk), kept that way so it reads as the spec.  The Spark
+stage calls ``extract_html``, which applies the tokenizer's rules and
+the extraction in one streaming pass without building a tree; it is
+tested to equal ``extract(parse_html(html))`` field by field.  Speed
+work goes into ``extract_html``, never into ``extract``.
 """
 
 from __future__ import annotations
@@ -34,7 +36,9 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from .cssparser import parse_css_into
-from .jsre import JS_WS_SET, TAG_START_CHARS, js_substring, js_trim
+from .jsre import (
+    JS_WS_SET, TAG_START_CHARS, is_js_blank, js_substring, js_trim,
+)
 from .tokenizer import (
     _TAG_MEMO, DEFAULT_SPECIAL_TAGS, VOID_ELEMS, NodeCapExceeded,
     _parse_js_content, _tag_entry,
@@ -75,66 +79,68 @@ class ExtractResult:
     n_text_nodes: int
 
 
-def _parity_candidates(tree: FlatTree, profile: ExtractionProfile):
-    """Document-order kept text node ids — the shared candidate walk
-    for BOTH profiles (r5: the density path's per-node
-    (nid, ancestor) tuple bookkeeping was dead weight — the ancestor
-    was never consumed; _density_filter derives block/link ancestry
-    via its own memoised chain walks)."""
-    out: list[int] = []
-    ap = out.append
-    children = tree.children
-    ttype = tree.type
-    tname = tree.name
-    content = tree.content
-    flags = tree.flags
-    blacklist = profile.blacklist
-    stack = [0]
-    # children are pushed reversed via ONE C-level extend of a slice
-    # copy instead of a per-child Python push loop — identical visit
-    # order, measured x1.7 on the candidate walk (r6 paired CPU A/B,
-    # median of 7 interleaved pairs on the text-heavy bench pages)
-    ext = stack.extend
-    pop = stack.pop
-    while stack:
-        nid = pop()
-        ty = ttype[nid]
-        if ty == TEXT:
-            c = content[nid]
-            if c and (c[0] not in JS_WS_SET or js_trim(c) != ""):
-                ap(nid)
-            continue
-        if ty == TAG_OPEN and (
-                flags[nid] & 3 or tname[nid].lower() in blacklist):
-            continue
-        kids = children[nid]
-        if kids:
-            ext(kids[::-1])
-    return out
+_A = frozenset(("a",))
+
+
+def _nearest(tree: FlatTree, nid: int, names: frozenset) -> int:
+    """Nearest ancestor tag-open whose lowercased name is in ``names``
+    (walks the structural parent chain); -1 if none."""
+    p = tree.parent[nid]
+    while p >= 0:
+        if tree.type[p] == TAG_OPEN and tree.name[p].lower() in names:
+            return p
+        p = tree.parent[p]
+    return -1
 
 
 def extract(
     tree: FlatTree, profile: ExtractionProfile = PARITY
 ) -> ExtractResult:
-    if profile.mode == "parity":
-        kept_ids = _parity_candidates(tree, profile)
-        n_text_nodes = len(kept_ids)
-    else:
-        cands = _parity_candidates(tree, profile)
-        n_text_nodes = len(cands)
-        kept_ids = cands if not cands else _density_filter(
-            tree, cands, profile)
+    """The frozen §6 rule over a FlatTree, stated plainly.
 
-    content = tree.content
-    text = "".join(map(content.__getitem__, kept_ids))
-    src_start = tree.src_start
-    src_end = tree.src_end
-    spans = [
-        (src_start[nid], src_end[nid]) for nid in kept_ids
-        if src_start[nid] >= 0
-    ]
+    One document-order DFS skips style, script and blacklisted
+    subtrees and keeps every text node that is not JS-blank.  The
+    density profile then groups those nodes by their nearest block
+    ancestor and keeps a block when its trimmed text and link text
+    pass the profile's thresholds."""
+    kept: list[int] = []
+    stack = [0]
+    while stack:
+        nid = stack.pop()
+        if tree.type[nid] == TEXT:
+            if not is_js_blank(tree.content[nid]):
+                kept.append(nid)
+        elif not (tree.type[nid] == TAG_OPEN and (
+                tree.is_style_block(nid) or tree.is_script_block(nid)
+                or tree.name[nid].lower() in profile.blacklist)):
+            stack.extend(reversed(tree.children[nid]))
+    n_text_nodes = len(kept)
+
+    if profile.mode != "parity":
+        blocks = [_nearest(tree, nid, profile.block_tags) for nid in kept]
+        text_chars: dict[int, int] = {}
+        link_chars: dict[int, int] = {}
+        for nid, block in zip(kept, blocks):
+            # frozen-spec length = Unicode CODE POINTS (a JS .length would
+            # count astral chars twice; the harness mirror uses Array.from)
+            k = len(js_trim(tree.content[nid]))
+            text_chars[block] = text_chars.get(block, 0) + k
+            # node ids are in document order, so of two ancestors the
+            # later one is the deeper: link text counts only for an <a>
+            # inside the block
+            if _nearest(tree, nid, _A) > block:
+                link_chars[block] = link_chars.get(block, 0) + k
+        kept_blocks = {
+            b for b, tc in text_chars.items()
+            if tc >= profile.min_block_chars
+            and link_chars.get(b, 0) <= profile.max_link_density * tc
+        }
+        kept = [nid for nid, b in zip(kept, blocks) if b in kept_blocks]
+
     return ExtractResult(
-        text=text, spans=spans,
+        text="".join(tree.content[nid] for nid in kept),
+        spans=[(tree.src_start[nid], tree.src_end[nid]) for nid in kept
+               if tree.src_start[nid] >= 0],
         n_nodes=len(tree.type), n_text_nodes=n_text_nodes,
     )
 
@@ -298,98 +304,3 @@ def extract_html(
         spans = [s for s, k in zip(spans, keep) if k]
     return ExtractResult(text="".join(parts), spans=spans, n_nodes=nn,
                          n_text_nodes=n_text_nodes)
-
-
-def _nearest(tree: FlatTree, nid: int, names: frozenset) -> int:
-    """Nearest ancestor tag-open whose lowercased name is in ``names``
-    (walks the structural parent chain); -1 if none."""
-    p = tree.parent[nid]
-    while p >= 0:
-        if tree.type[p] == TAG_OPEN and tree.name[p].lower() in names:
-            return p
-        p = tree.parent[p]
-    return -1
-
-
-def _nearest_memo(
-    tree: FlatTree, nid: int, names: frozenset, cache: dict
-) -> int:
-    """``_nearest`` with a per-call-site memo over ancestor node ids.
-
-    ``cache[e]`` = nearest tag-open in ``names`` at-or-above element
-    ``e`` (-1 if none).  Candidates in one document share ancestor
-    chains, so the naive walk is O(candidates × depth) with a
-    ``str.lower`` per step; memoised it is O(elements) total — on
-    real crawl pages (depth 15-25, thousands of text nodes) this is
-    the difference between ~40k and ~2k chain steps per document.
-    Pure lookup reordering: returns exactly ``_nearest``'s value."""
-    p = tree.parent[nid]
-    path = []
-    ttype = tree.type
-    tname = tree.name
-    tparent = tree.parent
-    while p >= 0:
-        hit = cache.get(p)
-        if hit is not None:
-            break
-        if ttype[p] == TAG_OPEN and tname[p].lower() in names:
-            hit = p
-            break
-        path.append(p)
-        p = tparent[p]
-    else:
-        hit = -1
-    for e in path:
-        cache[e] = hit
-    if p >= 0:
-        cache[p] = hit
-    return hit
-
-
-_A = frozenset(("a",))
-
-
-def _density_filter(
-    tree: FlatTree, cands: list[int],
-    profile: ExtractionProfile,
-) -> list[int]:
-    # Group candidates by nearest block ancestor; aggregate text and
-    # link-text character counts per block.  Sibling text nodes share
-    # a parent, so the memo's answer for parent[nid] is usually
-    # already cached — the dict .get fast path below skips the
-    # _nearest_memo call frame for that common case (r5; identical
-    # values by construction: the memo caches every visited element).
-    block_of: list[int] = []
-    text_chars: dict[int, int] = {}
-    link_chars: dict[int, int] = {}
-    block_cache: dict[int, int] = {}
-    link_cache: dict[int, int] = {}
-    tparent = tree.parent
-    content = tree.content
-    block_tags = profile.block_tags
-    bc_get = block_cache.get
-    lc_get = link_cache.get
-    for nid in cands:
-        p = tparent[nid]
-        block = bc_get(p)
-        if block is None:
-            block = _nearest_memo(tree, nid, block_tags, block_cache)
-        block_of.append(block)
-        # frozen-spec length = Unicode CODE POINTS (a JS .length would
-        # count astral chars twice; the harness mirror uses Array.from)
-        n = len(js_trim(content[nid]))
-        text_chars[block] = text_chars.get(block, 0) + n
-        link_anc = lc_get(p)
-        if link_anc is None:
-            link_anc = _nearest_memo(tree, nid, _A, link_cache)
-        # link text only counts if the <a> is inside the block
-        if link_anc != -1 and (block == -1 or link_anc > block):
-            link_chars[block] = link_chars.get(block, 0) + n
-    kept_blocks = {
-        b for b, tc in text_chars.items()
-        if tc >= profile.min_block_chars
-        and link_chars.get(b, 0) <= profile.max_link_density * tc
-    }
-    return [
-        nid for nid, b in zip(cands, block_of) if b in kept_blocks
-    ]

@@ -6,7 +6,8 @@ Semantics-identical reimplementation of the reference parse loop
 is document order, so node ids are pre-order positions.
 
 Pinned quirks replicated deliberately (verified against the reference
-under Node, see tests/test_differential.py):
+under Node; pinned by tests/test_goldens.py and, where the reference is
+present, tools/fuzz_differential.py):
 
 - comments close at the FIRST ``-->`` — ``indexOf`` may land *inside*
   the opener, and JS ``substring`` swaps its arguments, so ``<!-->``

@@ -60,9 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..kernel.charset import decode_html
-from ..kernel.extract import (
-    MAIN_CONTENT, PARITY, ExtractionProfile, extract_html,
-)
+from ..kernel.extract import PARITY, ExtractionProfile, extract_html
 from ..kernel.tokenizer import DEFAULT_SPECIAL_TAGS, parse_html
 
 # Flush output batches once an input batch's payload exceeds this many
@@ -239,10 +237,6 @@ def extract_documents(
     and meta-labelled 8-bit pages exist."""
     return _make_extract_fn(profile, sniff_charset=sniff_charset).apply(
         df, salt_partitions)
-
-
-def extract_main_content(df: DataFrame, **kw) -> DataFrame:
-    return extract_documents(df, profile=MAIN_CONTENT, **kw)
 
 
 # ---- serialization round-trip ------------------------------------------------

@@ -18,7 +18,7 @@ sys.path.insert(0, str(ROOT / "tools"))
 from fixture_corpus import CASES  # noqa: E402
 from fuzz_differential import gen_doc  # noqa: E402
 from simple_html_parser_spark.kernel.extract import (  # noqa: E402
-    MAIN_CONTENT, PARITY, extract, extract_html,
+    MAIN_CONTENT, PARITY, ExtractionProfile, extract, extract_html,
 )
 from simple_html_parser_spark.kernel.tokenizer import (  # noqa: E402
     NodeCapExceeded, parse_html,
@@ -28,7 +28,12 @@ from simple_html_parser_spark.sources.documents import (  # noqa: E402
 )
 
 CAPS = (None, 7, 30)
-PROFILES = {"parity": PARITY, "main_content": MAIN_CONTENT}
+PROFILES = {
+    "parity": PARITY, "main_content": MAIN_CONTENT,
+    # the non-default thresholds of the golden extract ops
+    "density_5_0": ExtractionProfile(
+        mode="density", min_block_chars=5, max_link_density=0.0),
+}
 
 
 def _outcome(fn):
