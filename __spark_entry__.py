@@ -15,6 +15,15 @@ declarations: moving a query across that line changes what the driver
 checks (OPTIMIZATION_r06.md, "Driver-window rotation", records how the
 current window was chosen).
 
+Each operator's DuckDB replay is written once, as a fragment of CTEs
+over a source relation (``_exf_ctes``, ``_PAIRS_CTES``,
+``_CLUSTER_CTES``, ``_dedup_ctes``, ``_quality_cte``, ``_LANG_CTES``,
+``_oov_ctes``, ``_fluency_ctes``, ``_gopher_cte``, ``_SCRUB_SQL``).
+An operator's oracle selects from its fragment, and a flow's oracle
+(curation_pipeline, curate_web, curate_full) chains the fragments the
+way operators/curation.py chains the operators, so a rule change is
+one SQL edit.
+
 The parser operators are oracle-checkable because the documents table
 is rendered into HTML with a fixed template (sources/documents.py):
 extracted text, node counts, link/comment/CSS contents are closed-form
@@ -130,23 +139,6 @@ _SHINGLES_SQL = (
     "ELSE [array_to_string(t, ' ')] END)"
 )
 
-# exploded shingles WITH the auto df-cut (mirror of
-# dedup._shingle_exploded(max_shingle_df="auto"): drop shingles present
-# in more than max(AUTO_DF_FLOOR, AUTO_DF_FRACTION·N) docs — boilerplate
-# cut, required for bounded join fan-out at scale).  Ends by defining
-# CTE ``exf(doc_id, sh)``.
-_EXF_CTES = f"""
-        toks AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
-        shl AS (SELECT doc_id, {_SHINGLES_SQL} AS s FROM toks),
-        ex AS (SELECT doc_id, unnest(s) AS sh FROM shl),
-        hot AS (SELECT sh FROM ex GROUP BY sh
-                HAVING count(*) > greatest(
-                    CAST({D.AUTO_DF_FLOOR} AS BIGINT),
-                    CAST(floor({D.AUTO_DF_FRACTION}
-                         * (SELECT count(*) FROM documents)) AS BIGINT))),
-        exf AS (SELECT e.doc_id, e.sh FROM ex e
-                ANTI JOIN hot h USING (sh))"""
-
 # crawl fetch log rebuilt closed-form (mirror of
 # sources/documents.py::render_crawl — web-shaped url from
 # (source, lang, doc_id), refetch of every CRAWL_REFETCH_MOD-th page
@@ -214,6 +206,247 @@ _V_URL = {
 _STOP_SQL = ", ".join(
     f"({_sql_quote(lang)}, {('[' + ', '.join(_sql_quote(w) for w in words) + ']')})"
     for lang, words in sorted(T.STOPWORDS.items()))
+
+
+# ---- operator replays: each operator's DuckDB replay is declared ONCE,
+# as CTEs over a source relation.  Single-operator oracles select from
+# their fragment; the flow oracles chain the fragments the way
+# operators/curation.py chains the operators.
+
+
+def _exf_ctes(src: str) -> str:
+    """``toks(doc_id, t)`` over ``src`` and its exploded shingles WITH
+    the auto df-cut, ``exf(doc_id, sh)`` (mirror of
+    dedup._shingle_exploded(max_shingle_df="auto"): drop shingles
+    present in more than max(AUTO_DF_FLOOR, AUTO_DF_FRACTION·N) docs of
+    ``src`` — boilerplate cut, required for bounded join fan-out at
+    scale)."""
+    return f"""
+        toks AS (SELECT doc_id, {_TOKS_SQL} AS t FROM {src}),
+        shl AS (SELECT doc_id, {_SHINGLES_SQL} AS s FROM toks),
+        ex AS (SELECT doc_id, unnest(s) AS sh FROM shl),
+        hot AS (SELECT sh FROM ex GROUP BY sh
+                HAVING count(*) > greatest(
+                    CAST({D.AUTO_DF_FLOOR} AS BIGINT),
+                    CAST(floor({D.AUTO_DF_FRACTION}
+                         * (SELECT count(*) FROM {src})) AS BIGINT))),
+        exf AS (SELECT e.doc_id, e.sh FROM ex e
+                ANTI JOIN hot h USING (sh))"""
+
+
+# the exact-Jaccard pair graph over exf: pairs(doc_a < doc_b, jaccard)
+# at the 0.30 threshold of every near-dup query
+_PAIRS_CTES = """
+        sizes AS (SELECT doc_id, count(*) AS n FROM exf GROUP BY doc_id),
+        inter AS (
+            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
+            FROM exf a JOIN exf b ON a.sh = b.sh AND a.doc_id < b.doc_id
+            GROUP BY 1, 2),
+        pairs AS (
+            SELECT * FROM (
+                SELECT doc_a, doc_b, i * 1.0 / (sa.n + sb.n - i) AS jaccard
+                FROM inter
+                JOIN sizes sa ON sa.doc_id = doc_a
+                JOIN sizes sb ON sb.doc_id = doc_b)
+            WHERE jaccard >= 0.30)"""
+
+# connected components of the pair graph (needs WITH RECURSIVE):
+# clusters(doc_id, cluster_id) labels every paired doc with the least
+# doc_id it reaches
+_CLUSTER_CTES = """
+        edges AS (SELECT doc_a, doc_b FROM pairs
+                  UNION SELECT doc_b, doc_a FROM pairs),
+        reach(doc_id, other) AS (
+            SELECT doc_a, doc_b FROM edges
+            UNION
+            SELECT r.doc_id, e.doc_b FROM reach r
+            JOIN edges e ON e.doc_a = r.other),
+        clusters AS (
+            SELECT doc_id, least(doc_id, min(other)) AS cluster_id
+            FROM reach GROUP BY doc_id)"""
+
+
+def _dedup_ctes(src: str) -> str:
+    """Exact + near-dup dedup of ``src`` (mirror of
+    curation._curate_filtered): ``keepers`` holds each text's min
+    doc_id and ``clusters`` the near-dup components.  The Spark side
+    finds pairs by LSH; its recall is 1.0 on this corpus, so the exact
+    pair graph is the oracle.  ``_KEPT`` is the predicate on a row
+    ``d``."""
+    return f"""{_exf_ctes(src)},{_PAIRS_CTES},{_CLUSTER_CTES},
+        keepers AS (SELECT min(doc_id) AS doc_id FROM {src}
+                    GROUP BY text)"""
+
+
+_KEPT = """d.doc_id IN (SELECT doc_id FROM keepers)
+          AND d.doc_id NOT IN (SELECT doc_id FROM clusters
+                               WHERE doc_id <> cluster_id)"""
+
+
+def _quality_cte(src: str) -> str:
+    """``qb``: textstats.quality_score of ``src``, all integer basis
+    points (no float round ties between engines)."""
+    return f"""
+        qb AS (
+            SELECT doc_id, q_len_bp, q_alpha_bp, punct_bp,
+                   (q_len_bp + q_alpha_bp) // 2 - punct_bp AS quality_bp
+            FROM (SELECT doc_id,
+                         least(n * 20, 10000) AS q_len_bp,
+                         na * 10000 // greatest(n, 1) AS q_alpha_bp,
+                         np * 10000 // greatest(n, 1) AS punct_bp
+                  FROM (SELECT doc_id,
+                               CAST(length(text) AS BIGINT) AS n,
+                               CAST(length(regexp_replace(
+                                   text, '[^a-zA-Z]', '', 'g'))
+                                   AS BIGINT) AS na,
+                               CAST(length(regexp_replace(
+                                   text, '[^.,;:!?]', '', 'g'))
+                                   AS BIGINT) AS np
+                        FROM {src})))"""
+
+
+# lp(doc_id, pred_lang, hits): textstats.lang_id over toks(doc_id, t) —
+# the language whose stopword list the tokens hit most, ties to the
+# greater name
+_LANG_CTES = f"""
+        lhits AS (
+            SELECT doc_id, st.lang AS pred_lang,
+                   CAST(len(list_intersect(t, st.words)) AS BIGINT)
+                       AS hits
+            FROM toks, (VALUES {_STOP_SQL}) AS st(lang, words)),
+        lp AS (
+            SELECT doc_id, pred_lang, hits FROM (
+                SELECT *, row_number() OVER (
+                           PARTITION BY doc_id
+                           ORDER BY hits DESC, pred_lang DESC) AS rk
+                FROM lhits)
+            WHERE rk = 1)"""
+
+
+def _oov_ctes(src: str) -> str:
+    """``ost(doc_id, n_tokens, n_oov, oov_bp)``: textstats.oov_stats of
+    ``src`` against its common-vocabulary head (df-cut mirrored from
+    textstats.common_vocab: df > max(50, 1%·N) over distinct (doc,
+    token) pairs)."""
+    return f"""
+        exall AS (SELECT doc_id, unnest({_TOKS_SQL}) AS tok FROM {src}),
+        head AS (SELECT tok
+                 FROM (SELECT DISTINCT doc_id, tok FROM exall)
+                 GROUP BY tok
+                 HAVING count(*) > greatest(CAST(50 AS BIGINT),
+                     CAST(floor(0.01 * (SELECT count(*)
+                                        FROM {src})) AS BIGINT))),
+        ost AS (
+            SELECT doc_id, n_tokens, n_oov,
+                   n_oov * 10000 // n_tokens AS oov_bp
+            FROM (SELECT doc_id, count(*) AS n_tokens,
+                         count(*) FILTER
+                             (WHERE tok NOT IN (SELECT tok FROM head))
+                             AS n_oov
+                  FROM exall GROUP BY doc_id))"""
+
+
+def _fluency_ctes(src: str) -> str:
+    """``flu(doc_id, lang, n_bigrams, fluency_bp, bucket)``:
+    fluency.lm_fluency of ``src`` (doc_id, lang, text).  Bigram LM
+    self-trained per lang (count >= 2), weight = floor(log2(min(count,
+    65535))) = length(bin(x)) - 1 (identical integer form in Spark),
+    fluency_bp = (10000*sum_w) // (15*n_bg); head/middle/tail tertiles
+    from the per-lang score HISTOGRAM: c = docs scoring >= bp, head iff
+    3c <= n+2, middle iff 3c <= 2n+2 (ties share a bucket)."""
+    return f"""
+        fbg AS (
+            SELECT doc_id, lang,
+                   unnest(list_transform(range(1, len(t)),
+                          i -> t[i] || ' ' || t[i+1])) AS b
+            FROM (SELECT doc_id, lang, {_TOKS_SQL} AS t FROM {src})
+            WHERE len(t) >= 2),
+        flm AS (
+            SELECT lang, b, count(*) AS c FROM fbg
+            GROUP BY lang, b HAVING count(*) >= 2),
+        fsc AS (
+            SELECT fbg.doc_id,
+                   CAST(count(*) AS BIGINT) AS nb,
+                   CAST(sum(CASE WHEN flm.c IS NULL THEN 0
+                            ELSE length(bin(least(flm.c, 65535))) - 1
+                            END) AS BIGINT) AS sw
+            FROM fbg LEFT JOIN flm USING (lang, b)
+            GROUP BY fbg.doc_id),
+        fds AS (
+            SELECT d.doc_id, d.lang,
+                   coalesce(f.nb, 0) AS n_bigrams,
+                   CAST(CASE WHEN coalesce(f.nb, 0) = 0 THEN 0
+                        ELSE (10000 * f.sw) // (15 * f.nb)
+                        END AS BIGINT) AS fluency_bp
+            FROM {src} d LEFT JOIN fsc f USING (doc_id)),
+        fhist AS (
+            SELECT lang, fluency_bp, count(*) AS hc
+            FROM fds GROUP BY lang, fluency_bp),
+        flab AS (
+            SELECT lang, fluency_bp,
+                   CASE WHEN 3 * c_ge <= n + 2 THEN 'head'
+                        WHEN 3 * c_ge <= 2 * n + 2 THEN 'middle'
+                        ELSE 'tail' END AS bucket
+            FROM (SELECT lang, fluency_bp,
+                         sum(hc) OVER (PARTITION BY lang
+                                       ORDER BY fluency_bp DESC) AS c_ge,
+                         sum(hc) OVER (PARTITION BY lang) AS n
+                  FROM fhist)),
+        flu AS (
+            SELECT d.doc_id, d.lang, d.n_bigrams, d.fluency_bp, l.bucket
+            FROM fds d JOIN flab l USING (lang, fluency_bp))"""
+
+
+def _gopher_cte(src: str) -> str:
+    """``gm``: the Gopher §A1.1 signals of ``src`` (doc_id, text) and
+    ``passes``, the rule conjunction at min_words=20 and stops=('the',
+    'a').  Every ratio is an integer div and every threshold a
+    cross-multiplied integer comparison, exactly as in
+    operators/gopher.py."""
+    return f"""
+        gm AS (
+            SELECT *, (nw >= 20 AND nw <= 100000
+                       AND twc >= 3 * nw AND twc <= 10 * nw
+                       AND 10 * nh <= nw AND 10 * ne <= nw
+                       AND 10 * nbl <= 9 * nl AND 10 * nel <= 3 * nl
+                       AND 5 * naw >= 4 * nw AND nsh >= 2) AS passes
+            FROM (
+                SELECT doc_id,
+                       CAST(len(w) AS BIGINT) AS nw,
+                       CAST(len(l) AS BIGINT) AS nl,
+                       CAST(coalesce(list_sum(
+                           list_transform(w, x -> length(x))), 0)
+                           AS BIGINT) AS twc,
+                       CAST(length(text) -
+                            length(replace(text, '#', '')) AS BIGINT)
+                            AS nh,
+                       CAST((length(text) -
+                             length(replace(text, '...', ''))) // 3
+                            AS BIGINT) AS ne,
+                       CAST(len(list_filter(l,
+                            x -> substring(x, 1, 1) IN ('-', '*', '•')))
+                            AS BIGINT) AS nbl,
+                       CAST(len(list_filter(l,
+                            x -> ends_with(x, '...') OR ends_with(x, '…')))
+                            AS BIGINT) AS nel,
+                       CAST(len(list_filter(w,
+                            x -> regexp_matches(x, '[a-zA-Z]')))
+                            AS BIGINT) AS naw,
+                       CAST(len(list_intersect(w,
+                            ['the', 'a'])) AS BIGINT) AS nsh
+                FROM (SELECT doc_id, text,
+                             list_filter(string_split_regex(text, '[ \n]'),
+                                         x -> x <> '') AS w,
+                             string_split(text, chr(10)) AS l
+                      FROM {src})))"""
+
+
+# pii.scrub_col: emails, then IPv4s, then phones → placeholders (DuckDB
+# replaces only the first match unless given 'g'; Spark replaces all)
+_SCRUB_SQL = f"""regexp_replace(regexp_replace(regexp_replace(text,
+                         '{PII.PII_EMAIL}', '<EMAIL>', 'g'),
+                         '{PII.PII_IPV4}', '<IP>', 'g'),
+                         '{PII.PII_PHONE}', '<PHONE>', 'g')"""
 
 
 # k-means IVF: the oracles REPLAY the identical Lloyd sweeps —
@@ -380,7 +613,7 @@ def _rep_text():
     ).alias("text")
 
 
-_GOPHER_CTE = """
+_GOPHER_TEXT_CTE = """
         g AS (
             SELECT doc_id,
                    CASE WHEN doc_id % 3 = 0 THEN text || chr(10) ||
@@ -432,7 +665,7 @@ def _q(name: str, sql: str, build: _Build) -> None:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: parity extraction over sf0.001 (driver smoke)."""
     docs = _docs(spark, "/root/testdata/sf0.001")
-    return extract_documents(docs, salt_partitions=8)
+    return extract_documents(docs)
 
 
 def queries() -> dict[str, _Build]:
@@ -962,90 +1195,27 @@ _q("charset_extract", """
 # ---- curation, dedup, similarity, text, multimodal, relational and
 # crawl queries (the rest of the driver window) ----
 # end-to-end curation: lang agreement + quality floor + exact dedup
-# + LSH near-dup dedup, composed in one declarative plan.  The oracle
-# composes the already-verified CTEs: near-dup losers via the
-# recursive-CTE component labels (exact pair graph — Spark uses LSH
-# pairs, recall 1.0 on this corpus, same property the dedup_clusters
-# gate already pins)
+# + near-dup dedup, composed in one declarative plan.  The oracle
+# chains the lang, quality and dedup replays over documents, as
+# curation.curate chains the operators
 _q("curation_pipeline", f"""
-        WITH RECURSIVE {_EXF_CTES},
-        sizes AS (SELECT doc_id, count(*) AS n FROM exf GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-            FROM exf a JOIN exf b ON a.sh = b.sh AND a.doc_id < b.doc_id
-            GROUP BY 1, 2),
-        pairs AS (
-            SELECT doc_a, doc_b FROM inter
-            JOIN sizes sa ON sa.doc_id = doc_a
-            JOIN sizes sb ON sb.doc_id = doc_b
-            WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.30),
-        edges AS (SELECT doc_a, doc_b FROM pairs
-                  UNION SELECT doc_b, doc_a FROM pairs),
-        reach(doc_id, other) AS (
-            SELECT doc_a, doc_b FROM edges
-            UNION
-            SELECT r.doc_id, e.doc_b FROM reach r
-            JOIN edges e ON e.doc_a = r.other),
-        losers AS (
-            SELECT doc_id FROM (
-                SELECT doc_id, least(doc_id, min(other)) AS cid
-                FROM reach GROUP BY doc_id)
-            WHERE doc_id <> cid),
-        keepers AS (SELECT min(doc_id) AS doc_id FROM documents
-                    GROUP BY text),
-        qb AS (
-            SELECT doc_id,
-                   (least(CAST(length(text) AS BIGINT) * 20, 10000)
-                    + CAST(length(regexp_replace(text, '[^a-zA-Z]', '',
-                                                 'g')) AS BIGINT)
-                      * 10000 // greatest(length(text), 1)) // 2
-                   - CAST(length(regexp_replace(text, '[^.,;:!?]', '',
-                                                'g')) AS BIGINT)
-                     * 10000 // greatest(length(text), 1) AS quality_bp
-            FROM documents),
-        lt AS (SELECT doc_id, {_TOKS_SQL} AS ltoks FROM documents),
-        lranked AS (
-            SELECT doc_id, s.lang AS pred_lang,
-                   row_number() OVER (
-                       PARTITION BY doc_id
-                       ORDER BY len(list_intersect(ltoks, s.words))
-                                DESC, s.lang DESC) AS rk
-            FROM lt, (VALUES {_STOP_SQL}) AS s(lang, words)),
-        lp AS (SELECT doc_id, pred_lang FROM lranked WHERE rk = 1)
+        WITH RECURSIVE {_dedup_ctes("documents")},
+        {_quality_cte("documents")},{_LANG_CTES}
         SELECT d.doc_id, lp.pred_lang,
                CAST(qb.quality_bp AS BIGINT) AS quality_bp
         FROM documents d
         JOIN lp USING (doc_id)
         JOIN qb USING (doc_id)
         WHERE lp.pred_lang = d.lang AND qb.quality_bp >= 5500
-          AND d.doc_id IN (SELECT doc_id FROM keepers)
-          AND d.doc_id NOT IN (SELECT doc_id FROM losers)""",
+          AND {_KEPT}""",
    lambda spark, sf: CU.curate(_raw_docs(spark, sf)))
 
 # connected components via recursive CTE over the same pair graph
 # as dedup_ngram_jaccard
 _q("dedup_clusters", f"""
-        WITH RECURSIVE {_EXF_CTES},
-        sizes AS (SELECT doc_id, count(*) AS n FROM exf GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-            FROM exf a JOIN exf b ON a.sh = b.sh AND a.doc_id < b.doc_id
-            GROUP BY 1, 2),
-        pairs AS (
-            SELECT doc_a, doc_b FROM inter
-            JOIN sizes sa ON sa.doc_id = doc_a
-            JOIN sizes sb ON sb.doc_id = doc_b
-            WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.30),
-        edges AS (SELECT doc_a, doc_b FROM pairs
-                  UNION SELECT doc_b, doc_a FROM pairs),
-        reach(doc_id, other) AS (
-            SELECT doc_a, doc_b FROM edges
-            UNION
-            SELECT r.doc_id, e.doc_b FROM reach r
-            JOIN edges e ON e.doc_a = r.other)
-        SELECT doc_id,
-               least(doc_id, min(other)) AS cluster_id
-        FROM reach GROUP BY doc_id""",
+        WITH RECURSIVE {_exf_ctes("documents")},
+        {_PAIRS_CTES},{_CLUSTER_CTES}
+        SELECT doc_id, cluster_id FROM clusters""",
    lambda spark, sf: D.dedup_clusters(
        _raw_docs(spark, sf), threshold=0.30, max_shingle_df="auto"))
 
@@ -1107,158 +1277,20 @@ _q("semantic_dedup", _KM_WITH + f""",
 
 # the full modern recipe (curate_web + Gopher gate + CCNet fluency
 # tail-drop) as one plan, over the contact-augmented corpus; gopher
-# stops corpus-adapted as in gopher_rules.  The oracle: scrub →
-# Gopher gate (stops=['the','a'], min_words=20) → lang/quality/OOV →
-# fluency tail-drop → exact + near dedup.  EVERY corpus-relative cut
-# (shingle df, vocab head) counts the GOPHER SURVIVORS (s), mirroring
-# curate_full's oov_stats(docs3)/dedup_clusters(docs3, 'auto'); the
-# fluency LM trains on the survivors too.
+# stops corpus-adapted as in gopher_rules.  The oracle chains the
+# replays as curation.curate_full chains the operators: scrub → Gopher
+# gate → lang/quality/OOV → fluency tail-drop → exact + near dedup.
+# EVERY corpus-relative cut (shingle df, vocab head) counts the GOPHER
+# SURVIVORS (s), mirroring curate_full's oov_stats(docs3)/
+# dedup_clusters(docs3, 'auto'); the fluency LM trains on the
+# survivors too.
 _q("curate_full", f"""
         WITH RECURSIVE {_AUG_CTE},
-        s0 AS (SELECT doc_id, lang,
-                     regexp_replace(regexp_replace(regexp_replace(text,
-                         '{PII.PII_EMAIL}', '<EMAIL>', 'g'),
-                         '{PII.PII_IPV4}', '<IP>', 'g'),
-                         '{PII.PII_PHONE}', '<PHONE>', 'g') AS text
-              FROM aug),
-        gm AS (
-            SELECT doc_id,
-                   CAST(len(gw) AS BIGINT) AS nw,
-                   CAST(len(gl) AS BIGINT) AS nl,
-                   CAST(coalesce(list_sum(
-                       list_transform(gw, x -> length(x))), 0)
-                       AS BIGINT) AS twc,
-                   CAST(length(text) -
-                        length(replace(text, '#', '')) AS BIGINT) AS nh,
-                   CAST((length(text) -
-                         length(replace(text, '...', ''))) // 3
-                        AS BIGINT) AS ne,
-                   CAST(len(list_filter(gl,
-                        x -> substring(x, 1, 1) IN ('-', '*', '•')))
-                        AS BIGINT) AS nbl,
-                   CAST(len(list_filter(gl,
-                        x -> ends_with(x, '...') OR ends_with(x, '…')))
-                        AS BIGINT) AS nel,
-                   CAST(len(list_filter(gw,
-                        x -> regexp_matches(x, '[a-zA-Z]')))
-                        AS BIGINT) AS naw,
-                   CAST(len(list_intersect(gw,
-                        ['the', 'a'])) AS BIGINT) AS nsh
-            FROM (SELECT doc_id, text,
-                         list_filter(string_split_regex(text, '[ \n]'),
-                                     x -> x <> '') AS gw,
-                         string_split(text, chr(10)) AS gl
-                  FROM s0)),
-        s AS (
-            SELECT s0.* FROM s0 JOIN gm USING (doc_id)
-            WHERE gm.nw >= 20 AND gm.nw <= 100000
-              AND gm.twc >= 3 * gm.nw AND gm.twc <= 10 * gm.nw
-              AND 10 * gm.nh <= gm.nw AND 10 * gm.ne <= gm.nw
-              AND 10 * gm.nbl <= 9 * gm.nl
-              AND 10 * gm.nel <= 3 * gm.nl
-              AND 5 * gm.naw >= 4 * gm.nw AND gm.nsh >= 2),
-        toks AS (SELECT doc_id, {_TOKS_SQL} AS t FROM s),
-        fbg AS (
-            SELECT t2.doc_id, s.lang,
-                   unnest(list_transform(range(1, len(t2.t)),
-                          i -> t2.t[i] || ' ' || t2.t[i+1])) AS b
-            FROM toks t2 JOIN s USING (doc_id)
-            WHERE len(t2.t) >= 2),
-        flm AS (
-            SELECT lang, b, count(*) AS c FROM fbg
-            GROUP BY lang, b HAVING count(*) >= 2),
-        fsc AS (
-            SELECT fbg.doc_id,
-                   CAST(count(*) AS BIGINT) AS nb,
-                   CAST(sum(CASE WHEN flm.c IS NULL THEN 0
-                            ELSE length(bin(least(flm.c, 65535))) - 1
-                            END) AS BIGINT) AS sw
-            FROM fbg LEFT JOIN flm USING (lang, b)
-            GROUP BY fbg.doc_id),
-        fds AS (
-            SELECT s.doc_id, s.lang,
-                   CAST(CASE WHEN coalesce(f.nb, 0) = 0 THEN 0
-                        ELSE (10000 * f.sw) // (15 * f.nb)
-                        END AS BIGINT) AS fluency_bp
-            FROM s LEFT JOIN fsc f USING (doc_id)),
-        fhist AS (
-            SELECT lang, fluency_bp, count(*) AS hc
-            FROM fds GROUP BY lang, fluency_bp),
-        flab AS (
-            SELECT lang, fluency_bp,
-                   CASE WHEN 3 * c_ge <= n + 2 THEN 'head'
-                        WHEN 3 * c_ge <= 2 * n + 2 THEN 'middle'
-                        ELSE 'tail' END AS bucket
-            FROM (SELECT lang, fluency_bp,
-                         sum(hc) OVER (PARTITION BY lang
-                                       ORDER BY fluency_bp DESC) AS c_ge,
-                         sum(hc) OVER (PARTITION BY lang) AS n
-                  FROM fhist)),
-        flu AS (
-            SELECT d.doc_id, d.fluency_bp, l.bucket
-            FROM fds d JOIN flab l USING (lang, fluency_bp)),
-        shl AS (SELECT doc_id, {_SHINGLES_SQL} AS sl FROM toks),
-        ex AS (SELECT doc_id, unnest(sl) AS sh FROM shl),
-        hot AS (SELECT sh FROM ex GROUP BY sh
-                HAVING count(*) > greatest(
-                    CAST({D.AUTO_DF_FLOOR} AS BIGINT),
-                    CAST(floor({D.AUTO_DF_FRACTION}
-                         * (SELECT count(*) FROM s)) AS BIGINT))),
-        exf AS (SELECT e.doc_id, e.sh FROM ex e
-                ANTI JOIN hot h USING (sh)),
-        sizes AS (SELECT doc_id, count(*) AS n FROM exf GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-            FROM exf a JOIN exf b ON a.sh = b.sh AND a.doc_id < b.doc_id
-            GROUP BY 1, 2),
-        pairs AS (
-            SELECT doc_a, doc_b FROM inter
-            JOIN sizes sa ON sa.doc_id = doc_a
-            JOIN sizes sb ON sb.doc_id = doc_b
-            WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.30),
-        edges AS (SELECT doc_a, doc_b FROM pairs
-                  UNION SELECT doc_b, doc_a FROM pairs),
-        reach(doc_id, other) AS (
-            SELECT doc_a, doc_b FROM edges
-            UNION
-            SELECT r.doc_id, e.doc_b FROM reach r
-            JOIN edges e ON e.doc_a = r.other),
-        losers AS (
-            SELECT doc_id FROM (
-                SELECT doc_id, least(doc_id, min(other)) AS cid
-                FROM reach GROUP BY doc_id)
-            WHERE doc_id <> cid),
-        keepers AS (SELECT min(doc_id) AS doc_id FROM s GROUP BY text),
-        qb AS (
-            SELECT doc_id,
-                   (least(CAST(length(text) AS BIGINT) * 20, 10000)
-                    + CAST(length(regexp_replace(text, '[^a-zA-Z]', '',
-                                                 'g')) AS BIGINT)
-                      * 10000 // greatest(length(text), 1)) // 2
-                   - CAST(length(regexp_replace(text, '[^.,;:!?]', '',
-                                                'g')) AS BIGINT)
-                     * 10000 // greatest(length(text), 1) AS quality_bp
-            FROM s),
-        lranked AS (
-            SELECT doc_id, st.lang AS pred_lang,
-                   row_number() OVER (
-                       PARTITION BY doc_id
-                       ORDER BY len(list_intersect(t, st.words))
-                                DESC, st.lang DESC) AS rk
-            FROM toks, (VALUES {_STOP_SQL}) AS st(lang, words)),
-        lp AS (SELECT doc_id, pred_lang FROM lranked WHERE rk = 1),
-        exall AS (SELECT doc_id, unnest(t) AS tok FROM toks),
-        head AS (SELECT tok
-                 FROM (SELECT DISTINCT doc_id, tok FROM exall)
-                 GROUP BY tok
-                 HAVING count(*) > greatest(CAST(50 AS BIGINT),
-                     CAST(floor(0.01 * (SELECT count(*)
-                                        FROM s)) AS BIGINT))),
-        ost AS (SELECT doc_id,
-                       (count(*) FILTER
-                            (WHERE tok NOT IN (SELECT tok FROM head)))
-                           * 10000 // count(*) AS oov_bp
-                FROM exall GROUP BY doc_id)
+        s0 AS (SELECT doc_id, lang, {_SCRUB_SQL} AS text FROM aug),
+        {_gopher_cte("s0")},
+        s AS (SELECT s0.* FROM s0 JOIN gm USING (doc_id) WHERE gm.passes),
+        {_dedup_ctes("s")},{_quality_cte("s")},{_LANG_CTES},
+        {_oov_ctes("s")},{_fluency_ctes("s")}
         SELECT d.doc_id, lp.pred_lang,
                CAST(qb.quality_bp AS BIGINT) AS quality_bp,
                ost.oov_bp, flu.fluency_bp, flu.bucket
@@ -1269,8 +1301,7 @@ _q("curate_full", f"""
         JOIN flu USING (doc_id)
         WHERE lp.pred_lang = d.lang AND qb.quality_bp >= 5500
           AND ost.oov_bp <= 600 AND flu.bucket <> 'tail'
-          AND d.doc_id IN (SELECT doc_id FROM keepers)
-          AND d.doc_id NOT IN (SELECT doc_id FROM losers)""",
+          AND {_KEPT}""",
    lambda spark, sf: CU.curate_full(
        with_contacts(_raw_docs(spark, sf)),
        gopher_min_words=20, gopher_stops=("the", "a")))
@@ -1304,24 +1335,10 @@ _q("token_stats", f"""
         FROM t""",
    lambda spark, sf: T.token_count_cols(_raw_docs(spark, sf)))
 
-_q("quality_score", """
-        WITH b AS (
-            SELECT doc_id,
-                   CAST(length(text) AS BIGINT) AS n,
-                   CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
-                        AS BIGINT) AS na,
-                   CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
-                        AS BIGINT) AS np
-            FROM documents),
-        bp AS (
-            SELECT doc_id,
-                   least(n * 20, 10000) AS q_len_bp,
-                   na * 10000 // greatest(n, 1) AS q_alpha_bp,
-                   np * 10000 // greatest(n, 1) AS punct_bp
-            FROM b)
-        SELECT doc_id, q_len_bp, q_alpha_bp, punct_bp,
-               (q_len_bp + q_alpha_bp) // 2 - punct_bp AS quality_bp
-        FROM bp""",
+_q("quality_score", f"""
+        WITH {_quality_cte("documents")}
+        SELECT doc_id, q_len_bp, q_alpha_bp, punct_bp, quality_bp
+        FROM qb""",
    lambda spark, sf: T.quality_score(_raw_docs(spark, sf)))
 
 _q("doc_fingerprint", """
@@ -1336,18 +1353,9 @@ _q("doc_fingerprint", """
    lambda spark, sf: T.doc_fingerprints(_raw_docs(spark, sf)))
 
 _q("lang_id", f"""
-        WITH t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
-        scores AS (
-            SELECT doc_id, s.lang,
-                   CAST(len(list_intersect(toks, s.words)) AS BIGINT)
-                       AS hits
-            FROM t, (VALUES {_STOP_SQL}) AS s(lang, words)),
-        ranked AS (
-            SELECT doc_id, lang, hits,
-                   row_number() OVER (PARTITION BY doc_id
-                                      ORDER BY hits DESC, lang DESC) AS rk
-            FROM scores)
-        SELECT doc_id, lang AS pred_lang, hits FROM ranked WHERE rk = 1""",
+        WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
+        {_LANG_CTES}
+        SELECT doc_id, pred_lang, hits FROM lp""",
    lambda spark, sf: T.lang_id(_raw_docs(spark, sf)))
 
 _q("clean_text", """
@@ -1738,18 +1746,8 @@ _q("dedup_exact", """
    lambda spark, sf: D.dedup_exact(_raw_docs(spark, sf)))
 
 _NGRAM_PAIRS_SQL = f"""
-        WITH {_EXF_CTES},
-        sizes AS (SELECT doc_id, count(*) AS n FROM exf GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-            FROM exf a JOIN exf b ON a.sh = b.sh AND a.doc_id < b.doc_id
-            GROUP BY 1, 2)
-        SELECT doc_a, doc_b,
-               round(i * 1.0 / (sa.n + sb.n - i), 6) AS jaccard
-        FROM inter
-        JOIN sizes sa ON sa.doc_id = doc_a
-        JOIN sizes sb ON sb.doc_id = doc_b
-        WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.30"""
+        WITH {_exf_ctes("documents")},{_PAIRS_CTES}
+        SELECT doc_a, doc_b, round(jaccard, 6) AS jaccard FROM pairs"""
 _q("dedup_ngram_jaccard", _NGRAM_PAIRS_SQL,
    lambda spark, sf: D.dedup_ngram_jaccard(
        _raw_docs(spark, sf), threshold=0.30, max_shingle_df="auto"))
@@ -1805,7 +1803,7 @@ _q("simhash_signatures", f"""
 # df-cut observability: how many docs lose ALL their shingles to
 # the "auto" boilerplate cut (no-silent-drop principle)
 _q("shingle_drop_stats", f"""
-        WITH {_EXF_CTES}
+        WITH {_exf_ctes("documents")}
         SELECT (SELECT count(*) FROM documents) AS n_docs,
                (SELECT count(*) FROM documents d
                 WHERE NOT EXISTS (SELECT 1 FROM exf e
@@ -1862,79 +1860,13 @@ _q("decontaminate", f"""
 # contact-augmented corpus (deterministic PII suffix on every
 # CONTACT_MOD-th doc so the checks are non-vacuous) ----
 # the full web flow (scrub → lang/quality/oov → exact + near-dup
-# dedup) in ONE plan; the oracle's CTEs all run over the SCRUBBED
-# text s
+# dedup) in ONE plan; the oracle chains the replays over the SCRUBBED
+# text s, as curation.curate_web chains the operators
 _q("curate_web", f"""
         WITH RECURSIVE {_AUG_CTE},
-        s AS (SELECT doc_id, lang,
-                     regexp_replace(regexp_replace(regexp_replace(text,
-                         '{PII.PII_EMAIL}', '<EMAIL>', 'g'),
-                         '{PII.PII_IPV4}', '<IP>', 'g'),
-                         '{PII.PII_PHONE}', '<PHONE>', 'g') AS text
-              FROM aug),
-        toks AS (SELECT doc_id, {_TOKS_SQL} AS t FROM s),
-        shl AS (SELECT doc_id, {_SHINGLES_SQL} AS sl FROM toks),
-        ex AS (SELECT doc_id, unnest(sl) AS sh FROM shl),
-        hot AS (SELECT sh FROM ex GROUP BY sh
-                HAVING count(*) > greatest(
-                    CAST({D.AUTO_DF_FLOOR} AS BIGINT),
-                    CAST(floor({D.AUTO_DF_FRACTION}
-                         * (SELECT count(*) FROM documents)) AS BIGINT))),
-        exf AS (SELECT e.doc_id, e.sh FROM ex e
-                ANTI JOIN hot h USING (sh)),
-        sizes AS (SELECT doc_id, count(*) AS n FROM exf GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-            FROM exf a JOIN exf b ON a.sh = b.sh AND a.doc_id < b.doc_id
-            GROUP BY 1, 2),
-        pairs AS (
-            SELECT doc_a, doc_b FROM inter
-            JOIN sizes sa ON sa.doc_id = doc_a
-            JOIN sizes sb ON sb.doc_id = doc_b
-            WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.30),
-        edges AS (SELECT doc_a, doc_b FROM pairs
-                  UNION SELECT doc_b, doc_a FROM pairs),
-        reach(doc_id, other) AS (
-            SELECT doc_a, doc_b FROM edges
-            UNION
-            SELECT r.doc_id, e.doc_b FROM reach r
-            JOIN edges e ON e.doc_a = r.other),
-        losers AS (
-            SELECT doc_id FROM (
-                SELECT doc_id, least(doc_id, min(other)) AS cid
-                FROM reach GROUP BY doc_id)
-            WHERE doc_id <> cid),
-        keepers AS (SELECT min(doc_id) AS doc_id FROM s GROUP BY text),
-        qb AS (
-            SELECT doc_id,
-                   (least(CAST(length(text) AS BIGINT) * 20, 10000)
-                    + CAST(length(regexp_replace(text, '[^a-zA-Z]', '',
-                                                 'g')) AS BIGINT)
-                      * 10000 // greatest(length(text), 1)) // 2
-                   - CAST(length(regexp_replace(text, '[^.,;:!?]', '',
-                                                'g')) AS BIGINT)
-                     * 10000 // greatest(length(text), 1) AS quality_bp
-            FROM s),
-        lranked AS (
-            SELECT doc_id, st.lang AS pred_lang,
-                   row_number() OVER (
-                       PARTITION BY doc_id
-                       ORDER BY len(list_intersect(t, st.words))
-                                DESC, st.lang DESC) AS rk
-            FROM toks, (VALUES {_STOP_SQL}) AS st(lang, words)),
-        lp AS (SELECT doc_id, pred_lang FROM lranked WHERE rk = 1),
-        exall AS (SELECT doc_id, unnest(t) AS tok FROM toks),
-        head AS (SELECT tok
-                 FROM (SELECT DISTINCT doc_id, tok FROM exall)
-                 GROUP BY tok
-                 HAVING count(*) > greatest(CAST(50 AS BIGINT),
-                     CAST(floor(0.01 * (SELECT count(*)
-                                        FROM documents)) AS BIGINT))),
-        ost AS (SELECT doc_id,
-                       (count(*) FILTER
-                            (WHERE tok NOT IN (SELECT tok FROM head)))
-                           * 10000 // count(*) AS oov_bp
-                FROM exall GROUP BY doc_id)
+        s AS (SELECT doc_id, lang, {_SCRUB_SQL} AS text FROM aug),
+        {_dedup_ctes("s")},{_quality_cte("s")},{_LANG_CTES},
+        {_oov_ctes("s")}
         SELECT d.doc_id, lp.pred_lang,
                CAST(qb.quality_bp AS BIGINT) AS quality_bp,
                ost.oov_bp
@@ -1943,9 +1875,7 @@ _q("curate_web", f"""
         JOIN qb USING (doc_id)
         JOIN ost USING (doc_id)
         WHERE lp.pred_lang = d.lang AND qb.quality_bp >= 5500
-          AND ost.oov_bp <= 600
-          AND d.doc_id IN (SELECT doc_id FROM keepers)
-          AND d.doc_id NOT IN (SELECT doc_id FROM losers)""",
+          AND ost.oov_bp <= 600 AND {_KEPT}""",
    lambda spark, sf: CU.curate_web(with_contacts(_raw_docs(spark, sf))))
 
 # identical RE2-safe patterns replayed by DuckDB (regexp_replace
@@ -1973,26 +1903,10 @@ _q("pii_scrub", f"""
         FROM e2""",
    lambda spark, sf: PII.pii_scrub(with_contacts(_raw_docs(spark, sf))))
 
-# OOV vs the corpus common-vocabulary head (df-cut mirrored from
-# textstats.common_vocab: df > max(50, 1%·N) over distinct
-# (doc, token) pairs)
+# OOV vs the corpus common-vocabulary head
 _q("oov_stats", f"""
-        WITH {_AUG_CTE},
-        t2 AS (SELECT doc_id, {_TOKS_SQL} AS t FROM aug),
-        exall AS (SELECT doc_id, unnest(t) AS tok FROM t2),
-        head AS (SELECT tok
-                 FROM (SELECT DISTINCT doc_id, tok FROM exall)
-                 GROUP BY tok
-                 HAVING count(*) > greatest(CAST(50 AS BIGINT),
-                     CAST(floor(0.01 * (SELECT count(*)
-                                        FROM documents)) AS BIGINT)))
-        SELECT doc_id, count(*) AS n_tokens,
-               count(*) FILTER (WHERE tok NOT IN (SELECT tok FROM head))
-                   AS n_oov,
-               (count(*) FILTER
-                    (WHERE tok NOT IN (SELECT tok FROM head)))
-                   * 10000 // count(*) AS oov_bp
-        FROM exall GROUP BY doc_id""",
+        WITH {_AUG_CTE},{_oov_ctes("aug")}
+        SELECT doc_id, n_tokens, n_oov, oov_bp FROM ost""",
    lambda spark, sf: T.oov_stats(with_contacts(_raw_docs(spark, sf))))
 
 # ---- WARC container path: files → records → extraction (the Common
@@ -2327,99 +2241,24 @@ _q("dedup_substrings", f"""
    lambda spark, sf: D.dedup_substrings(_raw_docs(spark, sf), window=12))
 
 # CCNet-style LM fluency filter (Wenzek et al. 2019): per-lang
-# bigram LM (self-trained, count >= 2), weight =
-# floor(log2(min(count, 65535))) = length(bin(x)) - 1 (identical
-# integer form in Spark), fluency_bp = (10000*sum_w) // (15*n_bg),
-# head/middle/tail tertiles from the per-lang score HISTOGRAM:
-# c = docs scoring >= bp, head iff 3c <= n+2, middle iff
-# 3c <= 2n+2 (ties share a bucket)
+# head/middle/tail buckets (_fluency_ctes states the scoring rule)
 _q("lm_fluency", f"""
-        WITH toks AS (
-            SELECT doc_id, lang, {_TOKS_SQL} AS t FROM documents),
-        bg AS (
-            SELECT doc_id, lang,
-                   unnest(list_transform(range(1, len(t)),
-                          i -> t[i] || ' ' || t[i+1])) AS b
-            FROM toks WHERE len(t) >= 2),
-        lm AS (
-            SELECT lang, b, count(*) AS c FROM bg
-            GROUP BY lang, b HAVING count(*) >= 2),
-        scored AS (
-            SELECT bg.doc_id,
-                   CAST(count(*) AS BIGINT) AS nb,
-                   CAST(sum(CASE WHEN lm.c IS NULL THEN 0
-                            ELSE length(bin(least(lm.c, 65535))) - 1
-                            END) AS BIGINT) AS sw
-            FROM bg LEFT JOIN lm USING (lang, b)
-            GROUP BY bg.doc_id),
-        docs_s AS (
-            SELECT d.doc_id, d.lang,
-                   coalesce(s.nb, 0) AS n_bigrams,
-                   CAST(CASE WHEN coalesce(s.nb, 0) = 0 THEN 0
-                        ELSE (10000 * s.sw) // (15 * s.nb)
-                        END AS BIGINT) AS fluency_bp
-            FROM documents d LEFT JOIN scored s USING (doc_id)),
-        hist AS (
-            SELECT lang, fluency_bp, count(*) AS hc
-            FROM docs_s GROUP BY lang, fluency_bp),
-        lab AS (
-            SELECT lang, fluency_bp,
-                   CASE WHEN 3 * c_ge <= n + 2 THEN 'head'
-                        WHEN 3 * c_ge <= 2 * n + 2 THEN 'middle'
-                        ELSE 'tail' END AS bucket
-            FROM (SELECT lang, fluency_bp,
-                         sum(hc) OVER (PARTITION BY lang
-                                       ORDER BY fluency_bp DESC) AS c_ge,
-                         sum(hc) OVER (PARTITION BY lang) AS n
-                  FROM hist))
-        SELECT d.doc_id, d.lang, d.n_bigrams, d.fluency_bp, l.bucket
-        FROM docs_s d JOIN lab l USING (lang, fluency_bp)""",
+        WITH {_fluency_ctes("documents")}
+        SELECT doc_id, lang, n_bigrams, fluency_bp, bucket FROM flu""",
    lambda spark, sf: FL.lm_fluency(
        _raw_docs(spark, sf).select("doc_id", "text", "lang")))
 
 # Gopher §A1.1 rules (Rae et al. 2021): the corpus text is
 # single-line, so a deterministic doc_id-keyed rendering appends
 # bullet/ellipsis/symbol lines to exercise every rule branch — the
-# oracle replays it character-for-character (_GOPHER_CTE mirrors
-# _gopher_text); every ratio is an integer div and every threshold
-# a cross-multiplied integer comparison, exactly as in
-# operators/gopher.py.  stops=('the','a'): the synthetic corpus
-# vocabulary contains only 'the' from the paper's English stop list,
-# so the corpus-adapted list keeps rule 7 (>=2 distinct stops)
-# non-vacuous — 204/500 docs pass at sf0.01 (the paper list stays
-# the operator default)
+# oracle replays it character-for-character (_GOPHER_TEXT_CTE mirrors
+# _gopher_text) and scores it with _gopher_cte.  stops=('the','a'):
+# the synthetic corpus vocabulary contains only 'the' from the
+# paper's English stop list, so the corpus-adapted list keeps rule 7
+# (>=2 distinct stops) non-vacuous — 204/500 docs pass at sf0.01 (the
+# paper list stays the operator default)
 _q("gopher_rules", f"""
-        WITH {_GOPHER_CTE},
-        s AS (
-            SELECT doc_id, text,
-                   list_filter(string_split_regex(text, '[ \n]'),
-                               x -> x <> '') AS w,
-                   string_split(text, chr(10)) AS l
-            FROM g),
-        m AS (
-            SELECT doc_id,
-                   CAST(len(w) AS BIGINT) AS nw,
-                   CAST(len(l) AS BIGINT) AS nl,
-                   CAST(coalesce(list_sum(
-                       list_transform(w, x -> length(x))), 0)
-                       AS BIGINT) AS twc,
-                   CAST(length(text) -
-                        length(replace(text, '#', '')) AS BIGINT) AS nh,
-                   CAST((length(text) -
-                         length(replace(text, '...', ''))) // 3
-                        AS BIGINT) AS ne,
-                   CAST(len(list_filter(l,
-                        x -> substring(x, 1, 1) IN ('-', '*', '•')))
-                        AS BIGINT) AS nbl,
-                   CAST(len(list_filter(l,
-                        x -> ends_with(x, '...') OR ends_with(x, '…')))
-                        AS BIGINT) AS nel,
-                   CAST(len(list_filter(w,
-                        x -> regexp_matches(x, '[a-zA-Z]')))
-                        AS BIGINT) AS naw,
-                   CAST(len(list_intersect(w,
-                        ['the', 'a'])) AS BIGINT) AS nsh
-            FROM s)
+        WITH {_GOPHER_TEXT_CTE},{_gopher_cte("g")}
         SELECT doc_id,
                nw AS n_words,
                nl AS n_lines,
@@ -2430,12 +2269,8 @@ _q("gopher_rules", f"""
                10000 * nel // greatest(nl, 1) AS ellipsis_line_bp,
                10000 * naw // greatest(nw, 1) AS alpha_word_bp,
                nsh AS n_stop_hits,
-               (nw >= 20 AND nw <= 100000
-                AND twc >= 3 * nw AND twc <= 10 * nw
-                AND 10 * nh <= nw AND 10 * ne <= nw
-                AND 10 * nbl <= 9 * nl AND 10 * nel <= 3 * nl
-                AND 5 * naw >= 4 * nw AND nsh >= 2) AS passes
-        FROM m""",
+               passes
+        FROM gm""",
    lambda spark, sf: GO.gopher_rules(
        _raw_docs(spark, sf).select("doc_id", _gopher_text()),
        min_words=20, stops=("the", "a")))

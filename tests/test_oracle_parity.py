@@ -1,6 +1,7 @@
 """DuckDB parity for the declared queries that run through the
-per-document Arrow stages or a streaming snapshot: each query's Spark
-result must equal its ``oracle_sql()`` on the sf0.01 testdata,
+per-document Arrow stages or a streaming snapshot, and for the queries
+whose oracles are built from the shared operator replays: each query's
+Spark result must equal its ``oracle_sql()`` on the sf0.01 testdata,
 compared by tools/oracle_check.py inside this module's Spark session."""
 
 from __future__ import annotations
@@ -37,7 +38,14 @@ ARROW_STAGE_QUERIES = (
 STREAMING_QUERIES = (
     "stream_windowed_metrics", "stream_sessionize", "stream_first_seen_dedup",
 )
-QUERIES = ARROW_STAGE_QUERIES + STREAMING_QUERIES
+# oracles composed from the operator-replay fragments of
+# __spark_entry__.py: a fragment that drifts from its operator shows here
+COMPOSED_ORACLE_QUERIES = (
+    "curation_pipeline", "dedup_clusters", "curate_full", "quality_score",
+    "lang_id", "dedup_ngram_jaccard", "dedup_minhash_lsh", "curate_web",
+    "oov_stats", "lm_fluency", "gopher_rules",
+)
+QUERIES = ARROW_STAGE_QUERIES + STREAMING_QUERIES + COMPOSED_ORACLE_QUERIES
 
 
 @pytest.fixture(scope="module")
@@ -55,6 +63,26 @@ def test_queries_are_declared_with_oracles():
     selected = (list(QUERIES) + list(HEADLINE_QUERIES)
                 + [name for name, *_ in AUDITS])
     assert [q for q in selected if q not in queries] == []
+
+
+def test_oracle_fragments_are_declared_once():
+    """Spark-free: each operator's DuckDB replay is written once in
+    ``__spark_entry__.py`` and the composed oracles reuse it, so a
+    distinctive expression of every fragment occurs exactly once in
+    the source."""
+    src = (ROOT / "__spark_entry__.py").read_text(encoding="utf-8")
+    probes = (
+        "ANTI JOIN hot h USING (sh)",                # _exf_ctes df-cut
+        "FROM exf a JOIN exf b ON a.sh = b.sh",      # _PAIRS_CTES
+        "JOIN edges e ON e.doc_a = r.other",         # _CLUSTER_CTES reach
+        "'[^.,;:!?]'",                               # _quality_cte
+        "list_intersect(t, st.words)",               # _LANG_CTES
+        "tok NOT IN (SELECT tok FROM head)",         # _oov_ctes
+        "length(bin(least(",                         # _fluency_ctes weight
+        "ends_with(x, '...')",                       # _gopher_cte
+        "regexp_replace(regexp_replace(regexp_replace(",  # _SCRUB_SQL
+    )
+    assert {p: src.count(p) for p in probes} == {p: 1 for p in probes}
 
 
 @pytest.mark.parametrize("name", QUERIES)
