@@ -1288,7 +1288,8 @@ _q("curate_full", f"""
         WITH RECURSIVE {_AUG_CTE},
         s0 AS (SELECT doc_id, lang, {_SCRUB_SQL} AS text FROM aug),
         {_gopher_cte("s0")},
-        s AS (SELECT s0.* FROM s0 JOIN gm USING (doc_id) WHERE gm.passes),
+        s AS MATERIALIZED (
+            SELECT s0.* FROM s0 JOIN gm USING (doc_id) WHERE gm.passes),
         {_dedup_ctes("s")},{_quality_cte("s")},{_LANG_CTES},
         {_oov_ctes("s")},{_fluency_ctes("s")}
         SELECT d.doc_id, lp.pred_lang,

@@ -1,21 +1,22 @@
 """Benchmark harness.
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line:  {"metric", "value" (sec), "unit": "sec", "queries": {...},
-"sf", "docs_per_sec", "scaling": {...}}.
+Runs the headline queries at $SPARK_GRAFT_SF_DIR (default: the sf0.1
+testdata dir) on local[$SPARK_GRAFT_CPUS] (default: the cores this
+process may run on) and prints ONE JSON line:  {"metric", "value"
+(sec), "unit": "sec", "queries": {...}, "sf", "extraction_docs_per_sec",
+"extraction_mb_per_sec", "scaling": {...}}, and appends a summary with
+the host's cores and RAM to BENCH/history.jsonl.
 
-Scaling evidence (BASELINE.md: no real cluster in this sandbox): the
-same extraction job runs in two PERSISTENT subprocess JVMs at local[N]
-and local[4N] over an identical deterministically-replicated corpus;
-≥3 pairs of back-to-back timed runs alternate between them (order
-flipped per pair) and the committed efficiency is the MEDIAN per-pair
-(rate_4N / rate_N)/4.  N defaults to 1 (pair 1→4): a multiprocessing
-control experiment shows this VM saturates at ~12 effective cores
-(32 procs reach only ~12x a single proc; even 2→8 host-scales at just
-0.73), so higher pairs measure the host ceiling, not the engine; the
-control numbers are recorded in BENCH/BASELINE.md.  Override with
-SPARK_GRAFT_BENCH_LOW / SPARK_GRAFT_BENCH_PAIRS.
+Scaling evidence (a one-machine stand-in for N→4N executors): the
+same extraction job runs in two PERSISTENT subprocess JVMs at local[1]
+and local[4] over an identical deterministically-replicated corpus;
+interleaved pairs of back-to-back timed runs alternate between them
+(order flipped per pair) and the committed efficiency is the MEDIAN
+per-pair (rate_4 / rate_1)/4 over pairs a Spark-free host control
+calls clean.
+On a 4-core host the 4-core side and the 4-process host control both
+use every core, so the pair measures the engine and the whole host
+together (BENCH/BASELINE.md).
 
 All progress goes to stderr; stdout carries exactly one JSON line.
 """
@@ -33,22 +34,26 @@ ROOT = Path(__file__).resolve().parent
 sys.path.insert(0, str(ROOT))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# replication factor for the scaling corpus (distinct urls, same pages)
-BENCH_MULT = int(os.environ.get("SPARK_GRAFT_BENCH_MULT", "8"))
 # the SCALING pair trades two constraints: enough work per run that
 # the ~1s fixed per-run cost (scan + 2 stage boundaries + agg collect)
 # is small vs the high-side wall, but runs short enough that one
-# lo+hi pair fits inside a single host-noise window (the host has
-# multi-minute interference windows; a pair that straddles one gets a
-# garbage ratio).  mult=24 at sf0.1 → 1-core wall ≥60s (the CLAUDE.md
-# floor: below it the fixed cost is ~15% of the 4-core side and caps
-# the measurable ratio — the r4 driver run's 0.78-0.81 spread), hi
-# side ~18-22s → fixed cost ≤6% of the hi wall; a pair is ~90s, still
-# inside the typical multi-minute quiet window.
+# lo+hi pair fits inside a single host-noise window (a pair that
+# straddles one gets a garbage ratio).  The 1-core wall must stay
+# >= 60 s (below it the fixed cost caps the measurable ratio), and how
+# many replicas that takes depends on the host's speed, so the
+# multiplier stays settable at invocation.
 SCALING_MULT = int(os.environ.get("SPARK_GRAFT_SCALING_MULT", "24"))
 # paragraphs per bench page (~12-15 KB pages at sf0.1 text lengths)
-BENCH_PARAS = int(os.environ.get("SPARK_GRAFT_BENCH_PARAS", "40"))
+BENCH_PARAS = 40
+# headline trials per query (min kept), and the host-control floor
+# below which a measurement is flagged noisy and retried
+HEADLINE_TRIALS = 2
+BENCH_CTL_MIN = 0.85
+# scaling pair N -> 4N, the clean pairs wanted, and the pairs allowed
+# in total before settling for the noisy ones too
+BENCH_LOW = 1
+BENCH_PAIRS = 5
+BENCH_MAX_PAIRS = 10
 # the timed headline queries, in run order
 HEADLINE_QUERIES = (
     "extract_parity", "extract_main_content", "nodes_type_counts",
@@ -112,20 +117,22 @@ def serve_extraction_worker(master: str, sf_dir: str, mult: int) -> None:
     from simple_html_parser_spark.operators.extraction import (
         extract_documents,
     )
-    from simple_html_parser_spark.runtime.session import get_spark
+    from simple_html_parser_spark.runtime.session import (
+        driver_memory, get_spark,
+    )
 
     cores = int(master[6:-1])
     spark = get_spark(
         "bench-extract", master=master,
         shuffle_partitions=max(2 * cores, 8),
         # fixed partitioning; AQE re-planning only adds latency here.
-        # ActiveProcessorCount=N makes local[N] an honest analog of an
-        # N-core executor: GC/netty/thread pools size to N, not to the
-        # host's 32 vCPUs — and the two persistent pair JVMs stop
-        # fighting each other with 32-wide GC pools.
+        # Half a session's heap each, so the two pair JVMs together fit
+        # in what one session takes.  ActiveProcessorCount=N makes
+        # local[N] an honest analog of an N-core executor: GC/netty/
+        # thread pools size to N, not to every core of the host.
         extra_confs={
             "spark.sql.adaptive.enabled": "false",
-            "spark.driver.memory": "12g",
+            "spark.driver.memory": f"{int(driver_memory()[:-1]) // 2}m",
             "spark.driver.extraJavaOptions":
                 f"-XX:ActiveProcessorCount={cores} "
                 f"-XX:ParallelGCThreads={max(2, cores)}",
@@ -164,40 +171,51 @@ def serve_extraction_worker(master: str, sf_dir: str, mult: int) -> None:
         spark.stop()
 
 
-def headline_queries(spark, sf_dir: str) -> dict[str, float]:
-    """Time each headline query (forced via count/collect)."""
+def _count(df) -> None:
+    df.count()
+
+
+def headline_queries(spark, sf_dir: str, names=HEADLINE_QUERIES,
+                     force=_count, trials: int = HEADLINE_TRIALS):
+    """Time each query in ``names``, run by ``force`` (default
+    ``count()``), as the min of ``trials`` runs on a released executor,
+    with a Spark-free host control before and after each query.
+    Returns three dicts keyed by name: best wall, every wall, and the
+    (before, after) controls."""
     import __spark_entry__ as entry
     from simple_html_parser_spark.runtime.session import release
     qs = entry.queries()
-    trials = int(os.environ.get("SPARK_GRAFT_HEADLINE_TRIALS", "2"))
-    ctl_min = float(os.environ.get("SPARK_GRAFT_BENCH_CTL_MIN", "0.85"))
 
     def _timed(name: str) -> float:
+        spark.sparkContext.setJobDescription(name)
         t0 = time.perf_counter()
-        qs[name](spark, sf_dir).count()
+        force(qs[name](spark, sf_dir))
+        spark.sparkContext.setJobDescription(None)
         return round(time.perf_counter() - t0, 3)
 
-    out = {}
+    # warm the Python worker pool + codegen before the timed loop
+    qs["extract_parity"](spark, sf_dir).limit(32).count()
+    best, walls, ctls = {}, {}, {}
     noisy: list[str] = []
     ctl = _host_control(400_000)
-    for name in HEADLINE_QUERIES:
-        walls = [_timed(name) for _ in range(trials)]
+    for name in names:
+        w = walls[name] = [_timed(name) for _ in range(trials)]
         # in-flight noise guard: if the trials disagree by >2x, a
         # noise window straddled them — one extra trial, keep the min
-        if len(walls) >= 2 and max(walls) > 2 * min(walls):
-            walls.append(_timed(name))
-        out[name] = min(walls)
+        if len(w) >= 2 and max(w) > 2 * min(w):
+            w.append(_timed(name))
+        best[name] = min(w)
         # Spark-free host control AFTER the trials: a measurement taken
         # while a noisy neighbor holds the vCPUs times the neighbor,
         # not the engine — flag it and re-measure in a clean window in
         # the second pass below (one full run here was 2-3x slower on
         # IDENTICAL code purely from such a window)
         ctl_after = _host_control(400_000)
-        clean = min(ctl, ctl_after) >= ctl_min
-        if not clean:
+        ctls[name] = [ctl, ctl_after]
+        if min(ctl, ctl_after) < BENCH_CTL_MIN:
             noisy.append(name)
-        log(f"  {name}: {out[name]}s {walls} ctl={ctl}/{ctl_after}"
-            + ("" if clean else "  [NOISY]"))
+        log(f"  {name}: {best[name]}s {w} ctl={ctl}/{ctl_after}"
+            + ("  [NOISY]" if name in noisy else ""))
         ctl = ctl_after
         # each query is measured on a quiet executor (r3: cached frames
         # left in place made a kmeans trial 146s and q3 11.5s)
@@ -205,15 +223,16 @@ def headline_queries(spark, sf_dir: str) -> dict[str, float]:
     # second pass: one clean-window retrial per noise-flagged query
     for name in noisy:
         ctl = _host_control(400_000)
-        if ctl < ctl_min:
+        if ctl < BENCH_CTL_MIN:
             log(f"  retry {name}: host still noisy (ctl={ctl}), keeping "
-                f"{out[name]}s")
+                f"{best[name]}s")
             continue
-        w = _timed(name)
-        log(f"  retry {name}: {w}s (was {out[name]}s, ctl={ctl})")
-        out[name] = min(out[name], w)
+        walls[name].append(_timed(name))
+        log(f"  retry {name}: {walls[name][-1]}s (was {best[name]}s, "
+            f"ctl={ctl})")
+        best[name] = min(walls[name])
         release(spark)
-    return out
+    return best, walls, ctls
 
 
 class _Worker:
@@ -272,329 +291,154 @@ def _host_control(n: int = 1_000_000) -> float:
     return round(t1 / wall4, 3)
 
 
+def _median(xs: list[float]) -> float:
+    return sorted(xs)[len(xs) // 2]
+
+
+def scaling_pairs(low: int) -> dict:
+    """Interleaved low↔4·low pairs on two persistent workers, with a
+    Spark-free host control before and after each pair.  A pair is
+    CLEAN when both controls clear BENCH_CTL_MIN (it did not straddle
+    an interference window); noisy pairs are retried up to
+    BENCH_MAX_PAIRS and still recorded.  The committed number is the
+    median over clean pairs when at least BENCH_PAIRS of them exist,
+    else over every pair, with the controls published either way."""
+    hi = 4 * low
+    log(f"scaling: starting persistent workers local[{low}] / "
+        f"local[{hi}], mult={SCALING_MULT}, {BENCH_PAIRS} pairs ...")
+    w_lo = _Worker(low, SF_DIR, SCALING_MULT)
+    w_hi = _Worker(hi, SF_DIR, SCALING_MULT)
+    pairs: list[dict] = []
+    try:
+        ctl = _host_control()
+        for i in range(BENCH_MAX_PAIRS):
+            order = (w_lo, w_hi) if i % 2 == 0 else (w_hi, w_lo)
+            got = {w.cores: w.run() for w in order}
+            ctl_after = _host_control()
+            eff = round((got[hi]["docs_per_s"]
+                         / got[low]["docs_per_s"]) / 4.0, 3)
+            clean = min(ctl, ctl_after) >= BENCH_CTL_MIN
+            pairs.append({"eff": eff, "clean": clean,
+                          "host_ctl": [ctl, ctl_after],
+                          "lo": got[low], "hi": got[hi]})
+            log(f"  pair {i}: lo {got[low]['wall_s']}s "
+                f"hi {got[hi]['wall_s']}s eff={eff} "
+                f"ctl={ctl}/{ctl_after}"
+                + ("" if clean else "  [NOISY — host, not engine]"))
+            ctl = ctl_after
+            if sum(p["clean"] for p in pairs) >= BENCH_PAIRS:
+                break
+    finally:
+        w_lo.close()
+        w_hi.close()
+    clean_pairs = [p for p in pairs if p["clean"]]
+    basis = clean_pairs if len(clean_pairs) >= min(
+        BENCH_PAIRS, len(pairs)) else pairs
+    median = sorted(basis, key=lambda p: p["eff"])[len(basis) // 2]
+    lo_run, hi_run = median["lo"], median["hi"]
+    rate = {side: [p[side]["docs_per_s"] for p in basis]
+            for side in ("lo", "hi")}
+    return {
+        "corpus_docs": hi_run["docs"],
+        f"local[{low}]": lo_run,
+        f"local[{hi}]": hi_run,
+        "efficiency": median["eff"],
+        "efficiency_method": "median over host-control-CLEAN "
+                             "interleaved N<->4N pairs (target %d "
+                             "clean; Spark-free CPU control >= "
+                             "%.2f before AND after each pair), "
+                             "both JVMs persistent, order "
+                             "alternated per pair"
+                             % (BENCH_PAIRS, BENCH_CTL_MIN),
+        "per_pair_efficiency": [p["eff"] for p in pairs],
+        "per_pair_clean": [p["clean"] for p in pairs],
+        "per_pair_host_ctl": [p["host_ctl"] for p in pairs],
+        "clean_pair_efficiency": [p["eff"] for p in basis],
+        # ratio of per-side median rates: immune to a noise spike
+        # landing inside one half of one pair
+        "efficiency_ratio_of_medians": round(
+            _median(rate["hi"]) / _median(rate["lo"]) / 4.0, 3),
+        # host interference only ever slows a run, so the best rate per
+        # side over every pair is that side's least-contaminated
+        # throughput
+        "efficiency_best_rates": round(
+            max(p["hi"]["docs_per_s"] for p in pairs)
+            / max(p["lo"]["docs_per_s"] for p in pairs) / 4.0, 3),
+        # 1.0 = the added parallelism costs the kernel no CPU per doc
+        "engine_efficiency_cpu_normalized": round(
+            lo_run["kernel_cpu_ms_per_doc"]
+            / hi_run["kernel_cpu_ms_per_doc"], 3)
+        if hi_run["kernel_cpu_ms_per_doc"] else None,
+        "gate": ">=0.8 per BASELINE.json north_rule (N->4N)",
+    }
+
+
 def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--serve":
         master, sf_dir, mult = sys.argv[2], sys.argv[3], int(sys.argv[4])
         serve_extraction_worker(master, sf_dir, mult)
         return
 
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    scaling: dict = {}
-    # Pair N=1 → 4N=4 by default: the north rule's "N to 4N executors"
-    # maps to local[1] → local[4] on this single VM; the Spark-free
-    # host control (BENCH/BASELINE.md) shows the HOST itself only
-    # scales ~0.73 at 2→8 and worse above (oversubscribed vCPUs,
-    # ~12 effective cores), so higher pairs measure the host, not the
-    # engine.  2→8 numbers are still recorded in history for trend.
-    low_cores = int(os.environ.get("SPARK_GRAFT_BENCH_LOW", "1"))
-    hi_cores = 4 * low_cores
-    pairs = int(os.environ.get("SPARK_GRAFT_BENCH_PAIRS", "5"))
-    # Both configs stay ALIVE; each pair alternates one timed run on
-    # each, back-to-back inside the same host-noise window, with the
-    # order flipped every pair to cancel drift.  The committed number
-    # is the MEDIAN per-pair efficiency (VERDICT r01 item 10).
-    log(f"scaling: starting persistent workers local[{low_cores}] / "
-        f"local[{hi_cores}], mult={SCALING_MULT}, {pairs} pairs ...")
-    # host-noise gating: a Spark-free CPU control runs BEFORE and
-    # AFTER each pair; a pair is CLEAN iff both controls clear the
-    # threshold (the pair did not straddle an interference window).
-    # Noisy pairs are retried (bounded) and still recorded — the
-    # committed number is the median over clean pairs when at least
-    # `pairs` of them exist, else the median over everything, with
-    # the controls published either way.  This measures the ENGINE:
-    # a wall-clock ratio taken while a noisy neighbor holds half the
-    # vCPUs is a measurement of the neighbor.
-    ctl_min = float(os.environ.get("SPARK_GRAFT_BENCH_CTL_MIN", "0.85"))
-    max_pairs = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_PAIRS",
-                                   str(pairs + 5)))
-    w_lo = _Worker(low_cores, SF_DIR, SCALING_MULT)
-    w_hi = _Worker(hi_cores, SF_DIR, SCALING_MULT)
-    pair_results: list[dict] = []
-    try:
-        ctl = _host_control()
-        for i in range(max_pairs):
-            order = (w_lo, w_hi) if i % 2 == 0 else (w_hi, w_lo)
-            got = {w.cores: w.run() for w in order}
-            ctl_after = _host_control()
-            eff = round((got[hi_cores]["docs_per_s"]
-                         / got[low_cores]["docs_per_s"]) / 4.0, 3)
-            clean = min(ctl, ctl_after) >= ctl_min
-            pair_results.append(
-                {"eff": eff, "clean": clean,
-                 "host_ctl": [ctl, ctl_after],
-                 low_cores: got[low_cores], hi_cores: got[hi_cores]})
-            log(f"  pair {i}: lo {got[low_cores]['wall_s']}s "
-                f"hi {got[hi_cores]['wall_s']}s eff={eff} "
-                f"ctl={ctl}/{ctl_after}"
-                + ("" if clean else "  [NOISY — host, not engine]"))
-            ctl = ctl_after
-            if sum(p["clean"] for p in pair_results) >= pairs:
-                break
-    finally:
-        w_lo.close()
-        w_hi.close()
-    clean_pairs = [p for p in pair_results if p["clean"]]
-    basis = clean_pairs if len(clean_pairs) >= min(
-        pairs, len(pair_results)) else pair_results
-    per_round_eff = [p["eff"] for p in pair_results]
-    basis_eff = [p["eff"] for p in basis]
-    ranked = sorted(range(len(basis)), key=lambda i: basis_eff[i])
-    median_idx_b = ranked[len(ranked) // 2]
-    efficiency = basis_eff[median_idx_b]
-    median_idx = pair_results.index(basis[median_idx_b])
-    # secondary robust stat: ratio of per-side median rates — immune to
-    # a noise spike landing inside one half of one pair (the per-pair
-    # median treats that pair as signal; the per-side median does not)
-    med_lo = sorted(p[low_cores]["docs_per_s"]
-                    for p in basis)[len(basis) // 2]
-    med_hi = sorted(p[hi_cores]["docs_per_s"]
-                    for p in basis)[len(basis) // 2]
-    eff_ratio_of_medians = round(med_hi / med_lo / 4.0, 3)
-    # best-rates estimator: host interference is strictly ADDITIVE
-    # (a noisy neighbor can only slow a run down, never speed it up),
-    # so the best rate observed per side across all interleaved pairs
-    # is the least-contaminated estimate of that side's true
-    # throughput; their ratio estimates the engine's scaling with the
-    # noise floor removed.  Uses every pair, no exclusions.
-    best_lo = max(p[low_cores]["docs_per_s"] for p in pair_results)
-    best_hi = max(p[hi_cores]["docs_per_s"] for p in pair_results)
-    eff_best_rates = round(best_hi / best_lo / 4.0, 3)
-    scaling[str(low_cores)] = pair_results[median_idx][low_cores]
-    scaling[str(hi_cores)] = pair_results[median_idx][hi_cores]
-    rate_hi = scaling[str(hi_cores)]["docs_per_s"]
-    # engine-level efficiency: per-doc kernel CPU constancy (1.0 = the
-    # added parallelism costs the engine nothing; wall-clock efficiency
-    # additionally absorbs the sandbox host's multi-core contention,
-    # which a multi-NODE cluster does not have — see BENCH/BASELINE.md)
-    cpu_lo = scaling[str(low_cores)]["kernel_cpu_ms_per_doc"]
-    cpu_hi = scaling[str(hi_cores)]["kernel_cpu_ms_per_doc"]
-    engine_efficiency = round(cpu_lo / cpu_hi, 3) if cpu_hi else None
+    from simple_html_parser_spark.runtime.session import (
+        default_cores, get_spark, host_ram_bytes,
+    )
+    cpus = default_cores()
+    host = {"cores": len(os.sched_getaffinity(0)),
+            "ram_mb": host_ram_bytes() >> 20}
+    sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1])
+    hi_cores = 4 * BENCH_LOW
+    scaling = scaling_pairs(BENCH_LOW)
+    scaling["note"] = (
+        f"pair N={BENCH_LOW}->4N={hi_cores} on a {host['cores']}-core "
+        "host" + ("; the 4N side and the 4-process host control both "
+                  "use every core" if hi_cores >= host["cores"] else ""))
 
-    from simple_html_parser_spark.runtime.session import get_spark
-    spark = get_spark("bench", master=f"local[{CPUS}]",
-                      shuffle_partitions=2 * CPUS)
+    spark = get_spark("bench", master=f"local[{cpus}]",
+                      shuffle_partitions=2 * cpus)
     log("headline queries ...")
-    # warm the Python worker pool + codegen before the timed loop
-    import __spark_entry__ as entry_warm
-    entry_warm.queries()["extract_parity"](spark, SF_DIR).limit(32).count()
-    queries = headline_queries(spark, SF_DIR)
+    queries = headline_queries(spark, SF_DIR)[0]
     # the headline total is the SUM of per-query best walls — the loop
     # wall would double-count the noise-guard retry trials
     total = round(sum(queries.values()), 3)
     spark.stop()
 
-    result = {
+    hi = scaling[f"local[{hi_cores}]"]
+    hist_path = ROOT / "BENCH" / "history.jsonl"
+    with hist_path.open("a", encoding="utf-8") as f:
+        f.write(json.dumps({
+            "sf": sf,
+            "host": host,
+            "master": f"local[{cpus}]",
+            "efficiency": scaling["efficiency"],
+            "ratio_of_medians": scaling["efficiency_ratio_of_medians"],
+            "pair": f"{BENCH_LOW}->{hi_cores}",
+            "per_round": scaling["per_pair_efficiency"],
+            "per_round_clean": scaling["per_pair_clean"],
+            "eff_best_rates": scaling["efficiency_best_rates"],
+            "per_round_host_ctl": scaling["per_pair_host_ctl"],
+            "engine_efficiency":
+                scaling["engine_efficiency_cpu_normalized"],
+            "hi_mb_per_s": hi["mb_per_s"],
+            "headline_total_s": total,
+        }) + "\n")
+    # best across runs at this sf on this host (host noise windows
+    # make single runs unrepresentative)
+    scaling["best_observed_efficiency"] = max(
+        e["efficiency"] for e in map(json.loads, hist_path.read_text(
+            encoding="utf-8").splitlines())
+        if e.get("sf", 0.1) == sf and e.get("host") == host)
+    print(json.dumps({
         "metric": "total headline-query wall seconds at "
-                  f"local[{CPUS}] (extraction + dedup + ANN + "
+                  f"local[{cpus}] (extraction + dedup + ANN + "
                   "textstats + relational)",
         "value": total,
         "unit": "sec",
         "queries": queries,
-        "sf": float(sf),
-        "extraction_docs_per_sec": rate_hi,
-        "extraction_mb_per_sec": scaling[str(hi_cores)]["mb_per_s"],
-        "scaling": {
-            "corpus_docs": scaling[str(hi_cores)]["docs"],
-            f"local[{low_cores}]": scaling[str(low_cores)],
-            f"local[{hi_cores}]": scaling[str(hi_cores)],
-            "efficiency": efficiency,
-            "efficiency_method": "median over host-control-CLEAN "
-                                 "interleaved N<->4N pairs (target %d "
-                                 "clean; Spark-free CPU control >= "
-                                 "%.2f before AND after each pair), "
-                                 "both JVMs persistent, order "
-                                 "alternated per pair" % (pairs, ctl_min),
-            "per_pair_efficiency": per_round_eff,
-            "per_pair_clean": [p["clean"] for p in pair_results],
-            "per_pair_host_ctl": [p["host_ctl"] for p in pair_results],
-            "clean_pair_efficiency": basis_eff,
-            "efficiency_ratio_of_medians": eff_ratio_of_medians,
-            "efficiency_best_rates": eff_best_rates,
-            "engine_efficiency_cpu_normalized": engine_efficiency,
-            "gate": ">=0.8 per BASELINE.json north_rule (N->4N)",
-            "note": "pair N=%d->4N=%d; this VM saturates at ~12 "
-                    "effective cores (see BENCH/BASELINE.md control), "
-                    "so higher pairs measure the host, not the engine"
-                    % (low_cores, hi_cores),
-        },
-    }
-    # append to history; report best-observed efficiency alongside the
-    # current run (host noise windows make single runs unrepresentative)
-    hist_path = ROOT / "BENCH" / "history.jsonl"
-    hist_entry = {
-        "sf": float(sf),
-        "efficiency": efficiency,
-        "ratio_of_medians": eff_ratio_of_medians,
-        "pair": f"{low_cores}->{hi_cores}",
-        "per_round": per_round_eff,
-        "per_round_clean": [p["clean"] for p in pair_results],
-        "eff_best_rates": eff_best_rates,
-        "per_round_host_ctl": [p["host_ctl"] for p in pair_results],
-        "engine_efficiency": engine_efficiency,
-        "hi_mb_per_s": scaling[str(hi_cores)]["mb_per_s"],
-        "headline_total_s": total,
-    }
-    with hist_path.open("a", encoding="utf-8") as f:
-        f.write(json.dumps(hist_entry) + "\n")
-    # best across runs AT THIS SF only (legacy entries without "sf"
-    # were all recorded at sf0.1)
-    best_eff = max(
-        (e["efficiency"] for e in
-         (json.loads(line)
-          for line in hist_path.read_text().splitlines() if line.strip())
-         if e.get("sf", 0.1) == float(sf)),
-        default=efficiency)
-    result["scaling"]["best_observed_efficiency"] = best_eff
-    _write_baseline_md(result, low_cores, hi_cores)
-    print(json.dumps(result))
-
-
-def _write_baseline_md(result: dict, low_cores: int, hi_cores: int) -> None:
-    s = result["scaling"]
-    lo = s[f"local[{low_cores}]"]
-    hi = s[f"local[{hi_cores}]"]
-    md = f"""# BENCH baseline — measured scaling evidence
-
-Generated by bench.py (deterministic corpus: sf{result['sf']}
-documents × {SCALING_MULT} replicas = {s['corpus_docs']} pages of
-~10-15 KB, rendered JVM-side AFTER the exchange — the shuffle carries
-compact rows, never html bytes — then parity extraction through the
-single mapInArrow stage; both pair JVMs persistent and fully warmed
-with one unmeasured full run before the timed pairs).
-
-| parallelism | docs | wall s | docs/s | MB/s |
-|---|---|---|---|---|
-| local[{low_cores}] | {lo['docs']} | {lo['wall_s']} | {lo['docs_per_s']} | {lo['mb_per_s']} |
-| local[{hi_cores}] | {hi['docs']} | {hi['wall_s']} | {hi['docs_per_s']} | {hi['mb_per_s']} |
-
-**Scaling efficiency ({low_cores}→{hi_cores} cores: N→4N):
-{s['efficiency']}** — the MEDIAN over host-control-CLEAN
-interleaved pairs (both JVMs persistent + fully warmed, each pinned to
-its core budget via -XX:ActiveProcessorCount, one timed run each
-back-to-back inside the same host-noise window, order alternated per
-pair).  A pair is CLEAN when a Spark-free 4-process CPU control
-(sha256 spin, no engine code) scales ≥ the threshold both immediately
-before and after it — an instrumented version of the control
-experiment below, catching pairs that straddle one of the VM's
-interference windows.  Per-pair efficiency:
-{s['per_pair_efficiency']}, clean: {s['per_pair_clean']},
-host controls (before/after): {s['per_pair_host_ctl']}.
-Ratio of per-side median
-rates: {s['efficiency_ratio_of_medians']} (robust to a noise spike
-inside one half of one pair).  Best-rates estimator:
-{s['efficiency_best_rates']} — interference is strictly additive, so
-the best rate observed per side across all pairs is that side's
-least-contaminated throughput; their ratio removes the noise floor
-without excluding any pair.  Best observed across runs:
-{s.get('best_observed_efficiency', s['efficiency'])}.  Gate ≥ 0.8,
-BASELINE.json north_rule; measured as (rate_4N/rate_N)/4 on identical
-input — the sandbox stand-in for N→4N executors; per-run history in
-BENCH/history.jsonl.
-
-**Engine efficiency (kernel-CPU per doc, N vs 4N):
-{s['engine_efficiency_cpu_normalized']}** — per-document kernel CPU is
-constant (or better) as parallelism rises: the engine itself adds zero
-coordination cost per added core.
-
-## Reading these numbers: the sandbox host caps wall-clock scaling
-
-Two Spark-free control experiments on this VM (no engine code in the
-loop):
-
-1. Pure-CPU busy loop (zero allocation): per-proc rate falls
-   9.2 → 9.7 → 8.3 → 7.1 → 6.8 M ops/s at 1/2/4/8/16 procs →
-   the HOST's own 2→8 "efficiency" is 0.73 and 8→32 far lower
-   (loadavg plateaus near 12 under full fan-out — oversubscribed
-   vCPUs).
-2. Multiprocessing kernel (no Spark): same plateau shape.
-
-The engine's measured wall efficiency equals the host ceiling — the
-Spark pipeline (compact-row exchange → per-partition mapInArrow
-kernel, no cross-partition dependencies, no driver round-trips) loses
-nothing on top of the host.  On a real multi-executor cluster, adding
-NODES multiplies CPUs, caches and memory bandwidth together, which is
-exactly the regime this single-VM sandbox cannot reproduce; the
-engine-efficiency metric plus the job shape are the transferable
-evidence for the N→4N ≥ 0.8 gate.
-
-Headline queries at local[{CPUS}], sf{result['sf']}: total
-{result['value']}s; per-query timings in BENCH JSON.  NOTE: r5 added
-four headline queries (curate_full — which embeds the LSH dedup +
-clustering + fluency machinery end-to-end — plus lm_fluency,
-gopher_rules, dsir_weights), so totals are NOT comparable across
-rounds; compare per-query.
-
-### The dedup_minhash_lsh "regression" (r3 5.69s vs r2 2.36s): named
-
-Controlled A/B at sf0.1 local[32] (r4, 4 runs per arm, warm JVM):
-with clearCache before every run the query costs 9.6/5.8/5.0/4.3s;
-without clearing, 4.6/1.9/1.9/2.5s.  The r2 number was the
-CACHE-REUSE steady state — trial 2 re-persists the same canonicalized
-plans (shingles/signatures/candidates) and Spark's CacheManager
-serves trial 1's blocks.  The r3 BENCH_local 5.69s was a single COLD
-trial taken after the (r3-new) clearCache hygiene.  Neither is wrong:
-cold ≈ 4.3-5.8s is the true one-shot cost (dominated by shingle
-materialization), warm ≈ 1.9-2.5s is the steady state a resident
-pipeline sees.  bench.py's min-of-trials records the warm number;
-per-query hygiene still clears between DIFFERENT queries so caches
-never leak across measurements.
-
-### The curation_pipeline ×1.9 driver delta (r4 8.31s vs r3 4.37s): named and fixed
-
-Controlled A/B at sf0.1 local[32] (r5; script removed, result
-recorded here; 4 trials
-per arm, Spark-free host controls around every trial).  PRE-fix code
-(r4): curation_pipeline warm steady state 10.1s on a CLEAN window
-(walls 41.8/23.6/10.2/10.1 after warmup), dedup_clusters alone warm
-3.7s — so the r4-committed 4.19s was a favorable cache state, and the
-driver's 8.31s was REAL, not a host window.  Mechanism: the r4
-pointer-jumping loop ran TWO full jobs per round — the checkpoint
-materialization AND a convergence count that shuffle-joined the new
-label frame against the old one.  r5 fix (operators/dedup.py): the
-round-start label rides through the round's joins as a `prev` column,
-so convergence is an isEmpty() take(1) probe on the just-checkpointed
-partitions — no second shuffle.  POST-fix, same protocol:
-curation_pipeline cold 7.3s (clean window; pre-fix 10.9s), warm
-steady state 3.76s; dedup_clusters cold 5.8s / warm 2.6s.  The
-pointer-jump shortcut itself costs ~0.6s cold (nojump 5.2s vs jump
-5.8s) and is kept: chain-shaped components need its O(log d)
-convergence (the 24-node-path regression test).
-
-### Run-to-run spread: read BENCH/history.jsonl, not one run
-
-Full-bench runs land in different host windows.  r4 ran four full
-benches on near-identical code: headline totals 53.3 / 70.6 / 91.0 /
-80.5 / 49.1 s, scaling efficiency 0.855 / 0.852 / 0.791 / 0.827 /
-0.895 (clean-pair medians), extraction 92.9 / 64.4 / 66.2 / 81.8 /
-96.3 MB/s at local[4].  The last (committed) run is the round's best
-on every axis and FOLLOWS the tmpfs + clustering fixes — the spread
-before it is what the fixes plus host windows look like.  r5's three
-full benches: 0.968 eff at 110.5 MB/s (but only 2/10 clean pairs),
-0.845 at 91.1 MB/s (5/5 clean — the first run satisfying every r4
-done-criterion clause), then 1.02/0.984/0.98 (median/rom/best-rates)
-at 116.85 MB/s with 5 clean pairs and the lowest kernel CPU/doc yet
-(0.332 ms lo / 0.316 ms hi — the r5 open-tag memo).  Estimators at
-or above 1.0 mean the 1-core side absorbed more of that window's
-host noise than the 4-core side; read the three estimators together
-(≈0.98-1.02) rather than any one number.
-Per-metric bests across runs are the engine's capability;
-any single run is a lower bound with 1-2 noise windows somewhere in
-its ~40 queries.  The r4 tmpfs move (runtime/session.py
-spark.local.dir → /dev/shm) removed the worst systematic mode —
-dirty-page write throttling that degraded repeat trials 6s → 110s
-while CPU controls stayed green; post-fix, repeat trials improve
-monotonically (curate_web 15.8 → 6.2 → 5.7 s).
-
-Reference single-node baseline (no published numbers exist —
-measured here, BASELINE.md): the reference JS parser single-threaded
-does ~16 MB/s on the small template pages and ~85 MB/s on these
-text-heavy bench pages (V8 vs CPython gap).  This engine's kernel does
-~23-30 MB/s/core; the Spark pipeline passes the reference's
-single-node rate at ≥4 effective cores on tag-dense pages and ≈8-12
-cores on text-dense pages, and — unlike the single-threaded
-reference — keeps scaling with executors.
-"""
-    (ROOT / "BENCH" / "BASELINE.md").write_text(md, encoding="utf-8")
+        "sf": sf,
+        "extraction_docs_per_sec": hi["docs_per_s"],
+        "extraction_mb_per_sec": hi["mb_per_s"],
+        "scaling": scaling,
+    }))
 
 
 if __name__ == "__main__":

@@ -473,20 +473,18 @@ def dedup_clusters(
         pairs = dedup_minhash_lsh(docs, n=n, threshold=threshold,
                                   max_shingle_df=max_shingle_df,
                                   unpersist_handles=unpersist_handles)
-    # Materialize the pair list ONCE before symmetrizing: `pairs`
-    # appears in BOTH branches of the union below, and Catalyst does
-    # not share subtrees across union branches, so without this
-    # checkpoint the whole candidate+verification pipeline executed
-    # TWICE inside the edges job (r6 instrumented A/B at sf0.1:
-    # edges materialization 5.7-10.3s vs 3.7s for one pairs pass —
-    # the un-persisted per-candidate-doc shingle-set aggregation was
-    # the re-executed half; post-fix the edges job reads the
-    # checkpointed pair partitions twice instead).
-    pairs = pairs.select("doc_a", "doc_b").localCheckpoint()
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"),
-                     F.col("doc_a").alias("doc_b"))).distinct() \
-        .localCheckpoint()
+    # Symmetrize with ONE explode of (a,b),(b,a) per pair, so the
+    # candidate+verification pipeline runs once (a two-branch union
+    # re-ran it per branch: Catalyst shares no subtree across union
+    # branches), and checkpoint the edge list once, since every step
+    # reads it.  No distinct: min-label propagation does not depend on
+    # edge multiplicity, and LSH pairs are already distinct with
+    # doc_a < doc_b.
+    edges = pairs.select(F.explode(F.array(
+        F.struct(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
+        F.struct(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")),
+    )).alias("e")).select(F.col("e.a").alias("doc_a"),
+                          F.col("e.b").alias("doc_b")).localCheckpoint()
 
     labels = (
         edges.groupBy("doc_a")

@@ -3,7 +3,6 @@
 Design (SURVEY.md §3.4, §4.3):
 
     scan (url, html only — column pruning reaches the parquet reader)
-      → salted repartition on url hash (defuses giant-page skew)
       → ONE mapInArrow stage (one streaming tokenize+extract pass per
         page, no tree built), the only JVM↔Python boundary on the hot
         path; no per-row Python UDFs
@@ -56,7 +55,6 @@ from collections.abc import Callable, Iterable, Iterator, Sequence
 import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..kernel.charset import decode_html
@@ -170,17 +168,11 @@ class _DocStage:
             col.clear()
         return out
 
-    def apply(self, df: DataFrame,
-              salt_partitions: int | None = None) -> DataFrame:
+    def apply(self, df: DataFrame) -> DataFrame:
         """Prune ``df`` to (key, payload) — so pruning reaches the scan
-        — and run the stage.  ``salt_partitions`` forces an explicit
-        pre-UDF exchange on the key so giant payloads spread across
-        tasks instead of clustering in input-file order."""
-        pruned = df.select(self.key, self.payload)
-        if salt_partitions:
-            pruned = pruned.repartition(salt_partitions,
-                                        F.xxhash64(self.key))
-        return pruned.mapInArrow(self, from_arrow_schema(self.schema))
+        — and run the stage."""
+        return df.select(self.key, self.payload).mapInArrow(
+            self, from_arrow_schema(self.schema))
 
 
 EXTRACT_SCHEMA = pa.schema([
@@ -224,19 +216,15 @@ def _make_extract_fn(profile: ExtractionProfile,
 def extract_documents(
     df: DataFrame,
     profile: ExtractionProfile = PARITY,
-    salt_partitions: int | None = None,
     sniff_charset: bool = False,
 ) -> DataFrame:
     """documents(url, html, ...) → extracted(url, extracted_text, spans,
     stats).  Column pruning to (url, html) happens here so it reaches
-    the scan; ``salt_partitions`` forces an explicit pre-UDF exchange on
-    the (unique) url so giant pages spread across tasks instead of
-    clustering in input-file order.  ``sniff_charset`` switches the
-    byte→string step from plain utf-8 to the BOM/meta-prescan sniffer
-    (kernel/charset) — the path for real crawls, where UTF-16 exports
-    and meta-labelled 8-bit pages exist."""
-    return _make_extract_fn(profile, sniff_charset=sniff_charset).apply(
-        df, salt_partitions)
+    the scan.  ``sniff_charset`` switches the byte→string step from
+    plain utf-8 to the BOM/meta-prescan sniffer (kernel/charset) — the
+    path for real crawls, where UTF-16 exports and meta-labelled 8-bit
+    pages exist."""
+    return _make_extract_fn(profile, sniff_charset=sniff_charset).apply(df)
 
 
 # ---- serialization round-trip ------------------------------------------------
@@ -381,7 +369,7 @@ def _make_nodes_fn(max_nodes: int,
                      doc, error)
 
 
-def parse_nodes(df: DataFrame, salt_partitions: int | None = None,
+def parse_nodes(df: DataFrame,
                 max_nodes: int = MAX_NODES_PER_DOC,
                 special_tags: tuple[str, ...] | None = None,
                 columns: list[str] | None = None) -> DataFrame:
@@ -402,5 +390,4 @@ def parse_nodes(df: DataFrame, salt_partitions: int | None = None,
     (guide §4: pass only the columns the function needs; here the
     output side).  Values of the emitted columns are identical to the
     full view's."""
-    return _make_nodes_fn(max_nodes, special_tags, columns).apply(
-        df, salt_partitions)
+    return _make_nodes_fn(max_nodes, special_tags, columns).apply(df)

@@ -11,8 +11,7 @@ existing extraction hot path, so WARC-in → extracted-text-out is two
 Python stages with a column-pruned handoff.
 
 Scale shape: the file is the parallelism unit (as in production,
-where each .warc.gz member is seekable); giant files spread via the
-same salted repartition the extraction path uses.  Record rows carry
+where each .warc.gz member is seekable).  Record rows carry
 the body as a ``binary`` column so downstream pruning drops it when
 only metadata is needed.
 """

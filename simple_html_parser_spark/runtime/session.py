@@ -23,12 +23,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 
-def driver_memory() -> str:
-    """Half of host RAM (physical pages, capped by the cgroup's
-    ``memory.max``), never more than 48g.  In local mode the driver JVM
-    hosts every executor thread (the 1g default heap GC-thrashes at 32
-    threads, measured 4x slowdown), and the tmpfs shuffle dir below
-    lives in the other half."""
+def host_ram_bytes() -> int:
+    """Physical RAM, capped by the cgroup's ``memory.max``."""
     ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     try:
         limit = Path("/sys/fs/cgroup/memory.max").read_text().strip()
@@ -36,7 +32,15 @@ def driver_memory() -> str:
             ram = min(ram, int(limit))
     except OSError:
         pass
-    return f"{min(48 << 10, ram // 2 >> 20)}m"
+    return ram
+
+
+def driver_memory() -> str:
+    """Half of host RAM (``host_ram_bytes``), never more than 48g.  In
+    local mode the driver JVM hosts every executor thread (the 1g
+    default heap GC-thrashes at 32 threads, measured 4x slowdown), and
+    the tmpfs shuffle dir below lives in the other half."""
+    return f"{min(48 << 10, host_ram_bytes() // 2 >> 20)}m"
 
 
 def persist(df: DataFrame, handles: list | None = None) -> DataFrame:

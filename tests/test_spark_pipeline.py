@@ -42,7 +42,7 @@ def docs(spark):
 
 
 def test_extraction_matches_closed_form(spark, docs):
-    ext = extract_documents(docs, salt_partitions=8)
+    ext = extract_documents(docs)
     expect = (
         spark.read.parquet(f"{SF}/documents.parquet")
         .select(
@@ -66,6 +66,17 @@ def test_spans_point_at_source(spark, docs):
         res = extract(parse_html(html), PARITY)
         rebuilt = "".join(html[s:e] for s, e in res.spans)
         assert rebuilt == res.text
+    # the same invariant on the column Spark ships
+    source = {row.url: bytes(row.html).decode("utf-8") for row in sample}
+    shipped = extract_documents(
+        docs.where(F.col("url").isin(list(source)))).collect()
+    assert len(shipped) == len(sample)
+    assert any(r.spans for r in shipped)
+    for r in shipped:
+        assert r.error is None
+        html = source[r.url]
+        assert "".join(html[s.start:s.end] for s in r.spans) \
+            == r.extracted_text
 
 
 def test_nodes_view_shape(spark, docs):
@@ -224,7 +235,7 @@ def test_nodes_view_emits_error_rows(spark, docs):
 
 
 def test_giant_page_skew(spark, docs):
-    """One 5 MB page among small ones: salted extraction completes,
+    """One 5 MB page among small ones: extraction completes,
     output is correct, and the giant page cannot balloon a batch (the
     kernel flushes by bytes)."""
     from pyspark.sql import Row
@@ -235,7 +246,7 @@ def test_giant_page_skew(spark, docs):
             (f"<html><body><p>{big_body}</p></body></html>").encode()),
     )])
     corpus = docs.limit(100).select("url", "html").unionByName(big)
-    ext = extract_documents(corpus, salt_partitions=8)
+    ext = extract_documents(corpus)
     rows = {r.url: r for r in ext.collect()}
     assert len(rows) == 101
     assert rows["giant://1"].extracted_text == big_body

@@ -299,8 +299,7 @@ def main() -> None:
         only = args[i + 1:]
         args = args[:i]
     out_path = args[0] if args else "SCALE_rehearsal.json"
-    spark = get_spark("scale-rehearsal", master="local[32]",
-                      shuffle_partitions=64)
+    spark = get_spark("scale-rehearsal")
     results: list = []
 
     if only:
