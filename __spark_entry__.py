@@ -217,7 +217,7 @@ _STOP_SQL = ", ".join(
 def _exf_ctes(src: str) -> str:
     """``toks(doc_id, t)`` over ``src`` and its exploded shingles WITH
     the auto df-cut, ``exf(doc_id, sh)`` (mirror of
-    dedup._shingle_exploded(max_shingle_df="auto"): drop shingles
+    dedup.shingle_frame(max_shingle_df="auto"): drop shingles
     present in more than max(AUTO_DF_FLOOR, AUTO_DF_FRACTION·N) docs of
     ``src`` — boilerplate cut, required for bounded join fan-out at
     scale)."""

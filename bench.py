@@ -9,7 +9,8 @@ the host's cores and RAM to BENCH/history.jsonl.
 
 Scaling evidence (a one-machine stand-in for N→4N executors): the
 same extraction job runs in two PERSISTENT subprocess JVMs at local[1]
-and local[4] over an identical deterministically-replicated corpus;
+and local[4], each pinned to that many CPUs, over an identical
+deterministically-replicated corpus;
 interleaved pairs of back-to-back timed runs alternate between them
 (order flipped per pair) and the committed efficiency is the MEDIAN
 per-pair (rate_4 / rate_1)/4 over pairs a Spark-free host control
@@ -41,8 +42,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # straddles one gets a garbage ratio).  The 1-core wall must stay
 # >= 60 s (below it the fixed cost caps the measurable ratio), and how
 # many replicas that takes depends on the host's speed, so the
-# multiplier stays settable at invocation.
-SCALING_MULT = int(os.environ.get("SPARK_GRAFT_SCALING_MULT", "24"))
+# multiplier stays settable at invocation.  On a 4-vCPU host the
+# pinned local[1] worker took 54-72 s per run at 24 replicas.
+SCALING_MULT = int(os.environ.get("SPARK_GRAFT_SCALING_MULT", "36"))
 # paragraphs per bench page (~12-15 KB pages at sf0.1 text lengths)
 BENCH_PARAS = 40
 # headline trials per query (min kept), and the host-control floor
@@ -130,8 +132,12 @@ def serve_extraction_worker(master: str, sf_dir: str, mult: int) -> None:
         # in what one session takes.  ActiveProcessorCount=N makes
         # local[N] an honest analog of an N-core executor: GC/netty/
         # thread pools size to N, not to every core of the host.
+        # Python workers talk to the JVM over Unix domain sockets: over
+        # loopback TCP, a worker pinned to one CPU stalled for minutes
+        # in retransmission backoff (ss: backoff 11, rto 120 s).
         extra_confs={
             "spark.sql.adaptive.enabled": "false",
+            "spark.python.unix.domain.socket.enabled": "true",
             "spark.driver.memory": f"{int(driver_memory()[:-1]) // 2}m",
             "spark.driver.extraJavaOptions":
                 f"-XX:ActiveProcessorCount={cores} "
@@ -240,11 +246,17 @@ class _Worker:
 
     def __init__(self, cores: int, sf_dir: str, mult: int):
         self.cores = cores
+        # pinned to the first ``cores`` CPUs this process may run on,
+        # with the JVM's Python workers inheriting the pin: unpinned,
+        # the local[1] side's JVM threads and Python worker spread over
+        # about 1.33 cores, so the pair would not measure N→4N
         self.proc = subprocess.Popen(
             [sys.executable, "-u", __file__, "--serve",
              f"local[{cores}]", sf_dir, str(mult)],
             stdin=subprocess.PIPE, stdout=subprocess.PIPE,
-            stderr=subprocess.DEVNULL, text=True)
+            stderr=subprocess.DEVNULL, text=True,
+            preexec_fn=lambda: os.sched_setaffinity(
+                0, sorted(os.sched_getaffinity(0))[:cores]))
         line = self.proc.stdout.readline()
         assert json.loads(line).get("ready"), line
 

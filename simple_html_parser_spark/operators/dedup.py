@@ -11,10 +11,16 @@ ops (JVM-side, shuffle-conscious) — no Python UDFs:
   self-join is on (band, signature) buckets, never all-pairs)
 - SimHash: 64-bit signature + banded hamming candidate join
 
+The shingle-based operators read one persisted ``shingle_frame``
+(tokenized and shingled once, then df-cut), and the banded ones
+(MinHash, SimHash, similarity's SRP-LSH) find candidates with one
+``band_pairs`` join.
+
 Scale notes: the shingle self-join shuffles on the shingle string —
 frequent shingles create hot keys, so shingles occurring in more than
 ``max_shingle_df`` docs are dropped (standard df-cut; also removes
-uninformative shingles).  MinHash/LSH buckets are likewise capped.
+uninformative shingles).  Band buckets are likewise capped
+(``max_bucket``).
 """
 
 from __future__ import annotations
@@ -87,14 +93,13 @@ AUTO_DF_FLOOR = 50
 AUTO_DF_FRACTION = 0.01
 
 
-def _hot_shingles(docs: DataFrame, n: int,
-                  max_shingle_df: int | str | None,
-                  exploded: DataFrame | None = None) -> DataFrame | None:
-    """The boilerplate-shingle list for the df-cut (None = no cut).
-    Small by construction (Zipf head), so callers broadcast it."""
+def _hot_shingles(ex: DataFrame, docs: DataFrame,
+                  max_shingle_df: int | str | None) -> DataFrame | None:
+    """The boilerplate-shingle list of the (doc_id, sh) frame ``ex``
+    for the df-cut (None = no cut).  Small by construction (Zipf
+    head), so callers broadcast it."""
     if not max_shingle_df:
         return None
-    ex = exploded if exploded is not None else _exploded_shingles(docs, n)
     if max_shingle_df == "auto":
         # fully declarative relative cut: no driver-side count action —
         # the 1-row corpus count is broadcast into the df filter
@@ -110,15 +115,52 @@ def _hot_shingles(docs: DataFrame, n: int,
             .where(F.col("count") > max_shingle_df).select("sh"))
 
 
-def _shingle_exploded(docs: DataFrame, n: int,
-                      max_shingle_df: int | str | None,
-                      hot: DataFrame | None = None) -> DataFrame:
-    ex = _exploded_shingles(docs, n)
-    if hot is None:
-        hot = _hot_shingles(docs, n, max_shingle_df)
-    if hot is not None:
-        ex = ex.join(F.broadcast(hot), "sh", "left_anti")
-    return ex
+def shingle_frame(docs: DataFrame, n: int,
+                  max_shingle_df: int | str | None,
+                  handles: list | None = None) -> DataFrame:
+    """(doc_id, sh) after the df-cut: the near-dup family's ONE
+    tokenize+shingle pass.  Tokenization is the dominant per-byte cost
+    and the frame feeds several consumers (the cut's df aggregate, the
+    join or signatures, the verification sets), so the raw exploded
+    frame is persisted (appended to ``handles``); the hot shingles are
+    dropped with a broadcast left-anti join."""
+    ex = persist(_exploded_shingles(docs, n), handles)
+    hot = _hot_shingles(ex, docs, max_shingle_df)
+    return ex if hot is None else ex.join(F.broadcast(hot), "sh", "left_anti")
+
+
+def band_pairs(banded: DataFrame, id_col: str, pair_cols: tuple[str, str],
+               max_bucket: int | None, *extra: Column) -> DataFrame:
+    """Distinct candidate pairs over a banded frame
+    (``id_col``, band, key, ...): rows sharing a (band, key) bucket,
+    as (pair_cols[0] < pair_cols[1], *extra); ``extra`` columns may
+    read either side as ``a.``/``b.``.  Buckets with more than
+    ``max_bucket`` members are dropped first with a broadcast left-anti
+    join (None = no cap), so one hot bucket cannot put O(bucket²)
+    pairs into a single join task.  Materializing ``banded`` is the
+    caller's choice."""
+    if max_bucket is not None:
+        hot = (banded.groupBy("band", "key").count()
+               .where(F.col("count") > max_bucket).select("band", "key"))
+        banded = banded.join(F.broadcast(hot), ["band", "key"], "left_anti")
+    a = banded.alias("a")
+    b = banded.alias("b")
+    return (
+        a.join(b, (F.col("a.band") == F.col("b.band"))
+               & (F.col("a.key") == F.col("b.key"))
+               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+        .select(F.col(f"a.{id_col}").alias(pair_cols[0]),
+                F.col(f"b.{id_col}").alias(pair_cols[1]), *extra)
+        .distinct()
+    )
+
+
+def _check_cap(max_bucket: int | None) -> None:
+    """None disables the bucket cap; 0/negative are rejected loudly
+    rather than silently disabling it (falsy-zero trap)."""
+    if max_bucket is not None and max_bucket < 1:
+        raise ValueError(
+            f"max_bucket must be >= 1 or None, got {max_bucket}")
 
 
 def shingle_drop_stats(
@@ -131,8 +173,8 @@ def shingle_drop_stats(
     and are invisible to the near-dup operators.  Run alongside any
     pipeline that enables ``max_shingle_df`` and alert when the dropped
     fraction is non-trivial."""
-    ex = _shingle_exploded(docs, n, max_shingle_df)
-    survivors = ex.select("doc_id").distinct()
+    survivors = shingle_frame(docs, n, max_shingle_df) \
+        .select("doc_id").distinct()
     return (
         docs.select("doc_id")
         .join(survivors, "doc_id", "left_anti")
@@ -152,19 +194,10 @@ def dedup_ngram_jaccard(
 
     Shuffle plan: explode → self-join on shingle (co-partitioned by
     shingle hash) → pair-count aggregate.  Cost is Σ df(sh)², which the
-    df-cut bounds at scale.  Tokenization is the dominant per-byte
-    cost, so with a df-cut the exploded (doc_id, sh) frame is persisted
-    and shared by the cut, the size aggregate, and the self-join; the
-    cache lives until the caller's ``release``."""
-    ex_raw = _exploded_shingles(docs, n)
-    if max_shingle_df:
-        # ONE tokenize+shingle pass shared by df-cut + join + sizes
-        # (previously the cut recomputed the exploded frame — the r2
-        # bench regression on this query)
-        ex_raw = persist(ex_raw)
-    hot = _hot_shingles(docs, n, max_shingle_df, exploded=ex_raw)
-    ex = ex_raw if hot is None \
-        else ex_raw.join(F.broadcast(hot), "sh", "left_anti")
+    df-cut bounds at scale.  The persisted ``shingle_frame`` is shared
+    by the cut, the size aggregate, and the self-join; the cache lives
+    until the caller's ``release``."""
+    ex = shingle_frame(docs, n, max_shingle_df)
     # consumed twice (sa and sb below) — persist so the per-doc count
     # aggregation runs once, not once per join side (two ints per doc;
     # the union-branch non-CSE class, see dedup_minhash_lsh's sets)
@@ -202,18 +235,18 @@ def dedup_ngram_jaccard(
 
 def minhash_signatures(
     docs: DataFrame, n: int = 3, num_hashes: int = 32,
-    exploded: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, sig array<bigint>): sig[i] = min over shingles of
-    xxhash64(shingle, seed=i) — all JVM-side array expressions.
-    ``exploded`` lets the caller share one (doc_id, sh) frame across
-    stages (dedup_minhash_lsh persists it and reuses it for
-    verification)."""
+    xxhash64(shingle, seed=i) — all JVM-side array expressions."""
+    return _signatures(_exploded_shingles(docs, n), num_hashes)
+
+
+def _signatures(ex: DataFrame, num_hashes: int) -> DataFrame:
+    """minhash_signatures over a (doc_id, sh) frame."""
     # explode → k min-aggregates → reassemble.  One shuffle on doc_id
     # with full map-side combine; k nested array-transforms per row
     # would instead build a codegen-busting expression tree (measured
     # 78s vs ~4s at sf0.01).
-    ex = exploded if exploded is not None else _exploded_shingles(docs, n)
     aggs = [
         F.min(F.xxhash64("sh", F.lit(i))).alias(f"h{i}")
         for i in range(num_hashes)
@@ -245,54 +278,30 @@ def dedup_minhash_lsh(
     (cost: O(Σ bucket²) candidates + O(|shingles|) per verified pair,
     vs O(Σ df(sh)²) for the exact form).  ``max_bucket=None`` disables
     the bucket cap; 0/negative are rejected (falsy-zero trap)."""
-    if max_bucket is not None and max_bucket < 1:
-        raise ValueError(
-            f"max_bucket must be >= 1 or None, got {max_bucket}")
-
+    _check_cap(max_bucket)
     rows_per_band = num_hashes // bands
-    # ONE tokenize+shingle pass over the corpus, persisted; the hot
-    # list (df-cut), the signatures, and the candidate verification
-    # sets are all cheap derivations of it.  Tokenization is the
-    # dominant per-byte cost, so it must not run 3x.  The four
-    # persisted frames stay cached until the caller unpersists
+    # the hot list (df-cut), the signatures, and the candidate
+    # verification sets all derive from ONE persisted shingle frame.
+    # The four persisted frames stay cached until the caller unpersists
     # ``unpersist_handles`` or runs ``release`` — unpersisting eagerly
     # here would either force evaluation or silently drop
     # fault-tolerant recompute lineage at cluster scale.
-    ex_raw = persist(_exploded_shingles(docs, n), unpersist_handles)
-    hot = _hot_shingles(docs, n, max_shingle_df, exploded=ex_raw)
-    ex = ex_raw if hot is None \
-        else ex_raw.join(F.broadcast(hot), "sh", "left_anti")
+    ex = shingle_frame(docs, n, max_shingle_df, unpersist_handles)
     # signatures: small result (doc_id + k longs), persisted so the
     # banded self-join doesn't aggregate twice
-    sigs = persist(minhash_signatures(docs, n, num_hashes, exploded=ex),
-                   unpersist_handles)
+    sigs = persist(_signatures(ex, num_hashes), unpersist_handles)
     banded = sigs.select(
         "doc_id",
         F.explode(F.array(*[
             F.struct(
                 F.lit(b).alias("band"),
                 F.xxhash64(*[F.col("sig")[b * rows_per_band + r]
-                             for r in range(rows_per_band)]).alias("bsig"),
+                             for r in range(rows_per_band)]).alias("key"),
             ) for b in range(bands)
         ])).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bsig")
-
-    if max_bucket is not None:
-        hot_buckets = (banded.groupBy("band", "bsig").count()
-                       .where(F.col("count") > max_bucket)
-                       .select("band", "bsig"))
-        banded = banded.join(F.broadcast(hot_buckets), ["band", "bsig"],
-                             "left_anti")
-
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cands = persist(
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.bsig") == F.col("b.bsig"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"))
-        .distinct(), unpersist_handles)
+    ).select("doc_id", "bb.band", "bb.key")
+    cands = persist(band_pairs(banded, "doc_id", ("doc_a", "doc_b"),
+                               max_bucket), unpersist_handles)
     # candidate-restricted exact-Jaccard verification: shingle sets of
     # candidate docs only (left_semi prune on the persisted exploded
     # frame), one array_intersect per candidate pair.  NO all-pairs
@@ -375,7 +384,7 @@ def dedup_simhash(
     hamming verification via bit_count(xor).
 
     ``max_bucket`` prunes hot band buckets before the self-join — the
-    same cap dedup_minhash_lsh applies to (band, bsig).  A real crawl
+    same ``band_pairs`` cap dedup_minhash_lsh applies.  A real crawl
     has millions of near-empty/template pages whose simhashes collide
     into a handful of 16-bit band keys; without the cap one such
     bucket yields O(bucket²) candidate pairs in a single join task
@@ -386,9 +395,7 @@ def dedup_simhash(
     the shingle df-cut (see SCALE.md).  ``max_bucket=None`` disables
     the prune (exact-oracle form); 0/negative are rejected loudly
     rather than silently disabling it (falsy-zero trap)."""
-    if max_bucket is not None and max_bucket < 1:
-        raise ValueError(
-            f"max_bucket must be >= 1 or None, got {max_bucket}")
+    _check_cap(max_bucket)
     sigs = simhash_signatures(docs)
     width = 64 // bands
     # localCheckpoint the banded frame (doc_id, simhash, band, key —
@@ -407,24 +414,10 @@ def dedup_simhash(
             ) for b in range(bands)
         ])).alias("bb"),
     ).select("doc_id", "simhash", "bb.band", "bb.key").localCheckpoint()
-    if max_bucket is not None:
-        hot_buckets = (banded.groupBy("band", "key").count()
-                       .where(F.col("count") > max_bucket)
-                       .select("band", "key"))
-        banded = banded.join(F.broadcast(hot_buckets), ["band", "key"],
-                             "left_anti")
-    a = banded.alias("a")
-    b = banded.alias("b")
+    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.bit_count(F.col("a.simhash")
-                            .bitwiseXOR(F.col("b.simhash")))
-                .alias("hamming"))
-        .distinct()
+        band_pairs(banded, "doc_id", ("doc_a", "doc_b"), max_bucket,
+                   hamming.alias("hamming"))
         .where(F.col("hamming") <= max_hamming)
     )
 

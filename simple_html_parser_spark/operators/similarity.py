@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import band_pairs
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -284,16 +286,7 @@ def embedding_srp_lsh_dedup(
         "vec_id",
         F.explode(F.array(*band_structs)).alias("bb"),
     ).select("vec_id", "bb.band", "bb.key").localCheckpoint()
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cands = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .select(F.col("a.vec_id").alias("vec_a"),
-                F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
+    cands = band_pairs(banded, "vec_id", ("vec_a", "vec_b"), None)
     # Verify with per-VECTOR norms precomputed (n norm evaluations,
     # not 2 per candidate pair): higher-order-function array exprs are
     # the dominant per-pair cost, so the pair pays exactly one dot.

@@ -53,7 +53,14 @@ def persist(df: DataFrame, handles: list | None = None) -> DataFrame:
     the two sides of a pair join, a df-cut and the join it prunes — so
     without it the frame's whole subtree re-runs per consumer.
     Persist keeps lineage; loop state, and frames that must outlive
-    their source, use ``localCheckpoint`` instead, which cuts it."""
+    their source, use ``localCheckpoint`` instead, which cuts it.
+
+    One exception: the banded frames of ``dedup_simhash`` and
+    ``embedding_srp_lsh_dedup`` have several consumers yet stay eagerly
+    ``localCheckpoint``ed, because recomputing them re-runs an
+    interpreted fold (simhash r6 A/B: 4.3-5.0 s -> 2.2-2.5 s), and
+    ``persist`` in their place measured more jobs at sf0.01 (simhash
+    5 more, SRP 1 more)."""
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     if handles is not None:
         handles.append(df)

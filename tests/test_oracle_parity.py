@@ -45,7 +45,13 @@ COMPOSED_ORACLE_QUERIES = (
     "lang_id", "dedup_ngram_jaccard", "dedup_minhash_lsh", "curate_web",
     "oov_stats", "lm_fluency", "gopher_rules",
 )
-QUERIES = ARROW_STAGE_QUERIES + STREAMING_QUERIES + COMPOSED_ORACLE_QUERIES
+# near-dup operators built on dedup.shingle_frame / dedup.band_pairs
+# that no composed oracle above already covers
+SHARED_JOIN_QUERIES = (
+    "dedup_simhash", "embedding_srp_lsh", "shingle_drop_stats",
+)
+QUERIES = (ARROW_STAGE_QUERIES + STREAMING_QUERIES + COMPOSED_ORACLE_QUERIES
+           + SHARED_JOIN_QUERIES)
 
 
 @pytest.fixture(scope="module")
@@ -82,6 +88,18 @@ def test_oracle_fragments_are_declared_once():
         "ends_with(x, '...')",                       # _gopher_cte
         "regexp_replace(regexp_replace(regexp_replace(",  # _SCRUB_SQL
     )
+    assert {p: src.count(p) for p in probes} == {p: 1 for p in probes}
+
+
+def test_near_dup_joins_are_written_once():
+    """Spark-free: the banded bucket self-join lives only in
+    ``dedup.band_pairs`` and the df-cut anti-join only in
+    ``dedup.shingle_frame``, so each distinctive expression occurs
+    exactly once across the operators."""
+    src = "".join(
+        f.read_text(encoding="utf-8") for f in sorted(
+            (ROOT / "simple_html_parser_spark" / "operators").glob("*.py")))
+    probes = ('F.col("a.band") == F.col("b.band")', '"sh", "left_anti"')
     assert {p: src.count(p) for p in probes} == {p: 1 for p in probes}
 
 

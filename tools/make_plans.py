@@ -48,7 +48,7 @@ AUDITS: list[tuple[str, str, list[str], list[str]]] = [
      "form — the scale path is dedup_minhash_lsh)",
      ["BroadcastHashJoin"], []),
     ("dedup_minhash_lsh",
-     "NO all-pairs shingle self-join: banded (band,bsig) bucket join "
+     "NO all-pairs shingle self-join: banded (band,key) bucket join "
      "for candidates; verification semi-joins (LeftSemi) the ONE "
      "persisted shingle frame down to candidate docs, then "
      "array_intersect per candidate pair (VERDICT r01 item 1)",
