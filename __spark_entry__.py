@@ -128,16 +128,32 @@ def _render_sql(template: str = HTML_TEMPLATE) -> str:
 
 _URL_SQL = "('doc://' || source || '/' || CAST(doc_id AS VARCHAR))"
 
-# tokens / shingles as DuckDB expressions (mirror of dedup.tokens_col /
-# shingles_col — split on single space, drop empties, 3-gram shingles,
-# whole-text fallback for short docs)
+# tokens / n-grams / shingles as DuckDB expressions (mirror of
+# dedup.tokens_col / ngrams_col / shingles_col — split on single space,
+# drop empties; 3-gram shingles with a whole-text fallback for short docs)
 _TOKS_SQL = "list_filter(string_split(text, ' '), x -> x <> '')"
-_SHINGLES_SQL = (
-    "list_distinct(CASE WHEN len(t) >= 3 THEN "
-    "list_transform(range(1, len(t) - 1), "
-    "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) "
-    "ELSE [array_to_string(t, ' ')] END)"
-)
+
+
+def _ngrams_sql(t: str, n: int) -> str:
+    """dedup.ngrams_col of the list column ``t``: stride-1 n-grams,
+    space-joined; [] when there are fewer than n tokens."""
+    gram = " || ' ' || ".join(f"{t}[i + {k}]" for k in range(1, n + 1))
+    return (f"CASE WHEN len({t}) >= {n} THEN list_transform("
+            f"range(len({t}) - {n - 1}), i -> {gram}) ELSE [] END")
+
+
+def _fingerprint_sql(s: str) -> str:
+    """textstats.fingerprint_col of the string column ``s``: the
+    polynomial char-code fold mod 2^31-1."""
+    return ("list_reduce(list_prepend(CAST(0 AS BIGINT), "
+            f"list_transform(range(1, length({s}) + 1), "
+            f"i -> CAST(ascii({s}[i]) AS BIGINT))), "
+            "(acc, c) -> (acc * 31 + c) % 2147483647)")
+
+
+_SHINGLES_SQL = (f"list_distinct(CASE WHEN len(t) >= 3 THEN "
+                 f"{_ngrams_sql('t', 3)} "
+                 f"ELSE [array_to_string(t, ' ')] END)")
 
 # crawl fetch log rebuilt closed-form (mirror of
 # sources/documents.py::render_crawl — web-shaped url from
@@ -356,11 +372,8 @@ def _fluency_ctes(src: str) -> str:
     3c <= n+2, middle iff 3c <= 2n+2 (ties share a bucket)."""
     return f"""
         fbg AS (
-            SELECT doc_id, lang,
-                   unnest(list_transform(range(1, len(t)),
-                          i -> t[i] || ' ' || t[i+1])) AS b
-            FROM (SELECT doc_id, lang, {_TOKS_SQL} AS t FROM {src})
-            WHERE len(t) >= 2),
+            SELECT doc_id, lang, unnest({_ngrams_sql('t', 2)}) AS b
+            FROM (SELECT doc_id, lang, {_TOKS_SQL} AS t FROM {src})),
         flm AS (
             SELECT lang, b, count(*) AS c FROM fbg
             GROUP BY lang, b HAVING count(*) >= 2),
@@ -856,8 +869,6 @@ _q("deep_text_nodes", f"""
 # driver's distinct() must collapse to exactly these rows.
 _STRUCT_COLS = ["node_id", "bfs_rank", "depth", "subtree_end", "type",
                 "name"]
-_STRUCT_EMIT = ["node_id", "subtree_end", "bfs_rank", "depth", "type",
-                "name"]
 _q("voids_structure_map", """
         SELECT * FROM (VALUES
         (0,0,0,13,'root',''),(1,1,1,12,'tag-open','html'),
@@ -869,8 +880,8 @@ _q("voids_structure_map", """
         (12,4,2,12,'tag-close','body'),(13,2,1,13,'tag-close','html')
         ) AS t(node_id, bfs_rank, depth, subtree_end, type, name)""",
    lambda spark, sf: (
-       parse_nodes(_vdocs(spark, sf, "voids"), columns=_STRUCT_EMIT)
-       .select(*_STRUCT_COLS).distinct()))
+       parse_nodes(_vdocs(spark, sf, "voids"), columns=_STRUCT_COLS)
+       .distinct()))
 
 _q("special_structure_map", """
         SELECT * FROM (VALUES
@@ -885,8 +896,8 @@ _q("special_structure_map", """
         (16,2,1,16,'tag-close','html')
         ) AS t(node_id, bfs_rank, depth, subtree_end, type, name)""",
    lambda spark, sf: (
-       parse_nodes(_vdocs(spark, sf, "special"), columns=_STRUCT_EMIT)
-       .select(*_STRUCT_COLS).distinct()))
+       parse_nodes(_vdocs(spark, sf, "special"), columns=_STRUCT_COLS)
+       .distinct()))
 
 _q("malformed_structure_map", """
         SELECT * FROM (VALUES
@@ -899,8 +910,8 @@ _q("malformed_structure_map", """
         (12,9,2,12,'text','')
         ) AS t(node_id, bfs_rank, depth, subtree_end, type, name)""",
    lambda spark, sf: (
-       parse_nodes(_vdocs(spark, sf, "malformed"), columns=_STRUCT_EMIT)
-       .select(*_STRUCT_COLS).distinct()))
+       parse_nodes(_vdocs(spark, sf, "malformed"), columns=_STRUCT_COLS)
+       .distinct()))
 
 # jhp/script token contents are closed-form per row (JS submachine:
 # line comment, block comment, code text, script text)
@@ -1342,14 +1353,8 @@ _q("quality_score", f"""
         FROM qb""",
    lambda spark, sf: T.quality_score(_raw_docs(spark, sf)))
 
-_q("doc_fingerprint", """
-        SELECT doc_id,
-               list_reduce(
-                   list_prepend(CAST(0 AS BIGINT),
-                       list_transform(range(1, length(text) + 1),
-                                      i -> CAST(ascii(text[i]) AS BIGINT))),
-                   (acc, c) -> (acc * 31 + c) % 2147483647
-               ) AS fingerprint
+_q("doc_fingerprint", f"""
+        SELECT doc_id, {_fingerprint_sql('text')} AS fingerprint
         FROM documents""",
    lambda spark, sf: T.doc_fingerprints(_raw_docs(spark, sf)))
 
@@ -2090,10 +2095,7 @@ _q("lang_distribution", """
 # same integer, integer arithmetic both sides)
 _q("repetition_stats", f"""
         WITH t AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
-        g AS (SELECT doc_id,
-                     CASE WHEN len(t) >= 2 THEN list_transform(
-                          range(1, len(t)), i -> t[i] || ' ' || t[i+1])
-                          ELSE [] END AS grams,
+        g AS (SELECT doc_id, {_ngrams_sql('t', 2)} AS grams,
                      len(t) AS n,
                      len(list_distinct(t)) AS nd
               FROM t),
@@ -2217,12 +2219,9 @@ _q("link_pagerank", """
 _q("dedup_substrings", f"""
         WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
         wins AS (
-            SELECT doc_id,
-                   unnest(range(0, len(t) - 12 + 1)) AS start,
-                   unnest(list_transform(range(0, len(t) - 12 + 1),
-                       i -> md5(array_to_string(t[(i+1):(i+12)], ' '))))
-                       AS h
-            FROM toks WHERE len(t) >= 12),
+            SELECT doc_id, generate_subscripts(g, 1) - 1 AS start,
+                   unnest(list_transform(g, x -> md5(x))) AS h
+            FROM (SELECT doc_id, {_ngrams_sql('t', 12)} AS g FROM toks)),
         dups AS (SELECT h FROM wins GROUP BY h HAVING count(*) >= 2),
         hits AS (SELECT doc_id, list_sort(list(DISTINCT start)) AS starts
                  FROM wins JOIN dups USING (h) GROUP BY doc_id),
@@ -2285,20 +2284,9 @@ _q("gopher_rules", f"""
 _q("dsir_weights", f"""
         WITH toks AS (
             SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
-        bg AS (
-            SELECT doc_id,
-                   unnest(list_transform(range(1, len(t)),
-                          i -> t[i] || ' ' || t[i+1])) AS b
-            FROM toks WHERE len(t) >= 2),
-        bk AS (
-            SELECT doc_id,
-                   list_reduce(
-                       list_prepend(CAST(0 AS BIGINT),
-                           list_transform(range(1, length(b) + 1),
-                               i -> CAST(ascii(b[i]) AS BIGINT))),
-                       (acc, c) -> (acc * 31 + c) % 2147483647
-                   ) % 1024 AS bkt
-            FROM bg),
+        bg AS (SELECT doc_id, unnest({_ngrams_sql('t', 2)}) AS b FROM toks),
+        bk AS (SELECT doc_id, {_fingerprint_sql('b')} % 1024 AS bkt
+               FROM bg),
         tgt AS (
             SELECT bk.bkt FROM bk JOIN documents d USING (doc_id)
             WHERE d.lang = 'en'),
@@ -2350,24 +2338,14 @@ _REP_TOP_CTES = ",".join(f"""
                    coalesce(list_max(list_transform(list_distinct(g),
                        x -> len(list_filter(g, y -> y = x))
                             * (length(x) - {n - 1}))), 0) AS m{n}
-            FROM (SELECT doc_id,
-                    CASE WHEN nw >= {n} THEN list_transform(
-                        range(1, nw - {n} + 2),
-                        i -> array_to_string(
-                            list_slice(w, i, i + {n - 1}), ' '))
-                    ELSE [] END AS g
-                  FROM b))""" for n in (2, 3, 4))
+            FROM (SELECT doc_id, {_ngrams_sql('w', n)} AS g FROM b))"""
+    for n in (2, 3, 4))
 _REP_DUP_CTES = ",".join(f"""
         d{n}a AS (
             SELECT doc_id, w, nw, g,
                    list_filter(list_distinct(g),
                        x -> len(list_filter(g, y -> y = x)) >= 2) AS ds
-            FROM (SELECT doc_id, w, nw,
-                    CASE WHEN nw >= {n} THEN list_transform(
-                        range(1, nw - {n} + 2),
-                        i -> array_to_string(
-                            list_slice(w, i, i + {n - 1}), ' '))
-                    ELSE [] END AS g
+            FROM (SELECT doc_id, w, nw, {_ngrams_sql('w', n)} AS g
                   FROM b)),
         d{n} AS (
             SELECT doc_id,

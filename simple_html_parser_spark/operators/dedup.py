@@ -38,24 +38,31 @@ def tokens_col(text: Column = None) -> Column:
     return F.filter(F.split(c, " "), lambda x: x != "")
 
 
-def shingles_col(n: int = 3, toks: Column = None) -> Column:
-    """Distinct n-gram shingles (space-joined); whole token list as a
-    single shingle for docs shorter than n tokens.
+def ngrams_col(toks: Column, n: int) -> Column:
+    """Stride-1 n-grams of the token array ``toks``, space-joined; an
+    empty ``array<string>`` when there are fewer than n tokens (the
+    guard matters: the index sequence 0..size-n counts DOWN there).
 
     PERF: pass ``toks`` as a materialized COLUMN REFERENCE (e.g. via
     withColumn) — inlining tokens_col() here makes Catalyst re-evaluate
     split+filter for every element_at lookup (measured ~10x slowdown:
     the expression is quadratic per document otherwise)."""
-    if toks is None:
-        toks = tokens_col()
     size = F.size(toks)
-    ngrams = F.transform(
-        F.sequence(F.lit(0), size - n),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + k + 1) for k in range(n)]),
-    )
+    # guard the index array, not the result: the grams then stay
+    # non-nullable, so no isnotnull(sh) filter enters the near-dup plans
+    starts = F.when(size >= n, F.sequence(F.lit(0), size - n)) \
+        .otherwise(F.array().cast("array<int>"))
+    return F.transform(starts, lambda i: F.concat_ws(
+        " ", *[F.element_at(toks, i + k + 1) for k in range(n)]))
+
+
+def shingles_col(toks: Column, n: int = 3) -> Column:
+    """Distinct n-gram shingles of the materialized token column
+    ``toks``; the whole token list as a single shingle for docs
+    shorter than n tokens."""
     return F.array_distinct(
-        F.when(size >= n, ngrams).otherwise(F.array(F.concat_ws(" ", toks))))
+        F.when(F.size(toks) >= n, ngrams_col(toks, n))
+        .otherwise(F.array(F.concat_ws(" ", toks))))
 
 
 def _exploded_shingles(docs: DataFrame, n: int) -> DataFrame:
@@ -63,7 +70,7 @@ def _exploded_shingles(docs: DataFrame, n: int) -> DataFrame:
     return (
         docs.select("doc_id", tokens_col().alias("_toks"))
         .select("doc_id",
-                F.explode(shingles_col(n, F.col("_toks"))).alias("sh"))
+                F.explode(shingles_col(F.col("_toks"), n)).alias("sh"))
     )
 
 
@@ -346,7 +353,7 @@ def simhash_signatures(docs: DataFrame, bits: int = 64) -> DataFrame:
     Pure array expressions, one pass."""
     # materialize the hash array once per row (column reference), or
     # every bit-count expression re-evaluates split+filter+hash —
-    # same Catalyst non-CSE trap as shingles_col
+    # same Catalyst non-CSE trap as ngrams_col
     docs = docs.select(
         "doc_id",
         F.transform(F.array_distinct(tokens_col()),
@@ -552,14 +559,11 @@ def dedup_clusters(
 
 # --- line-level (CCNet-style) dedup ---------------------------------------
 
-def segments_col(seg_len: int = 8, toks: Column = None) -> Column:
-    """Non-overlapping fixed-width token segments (space-joined), the
-    "line" unit for corpus-level line dedup on text without newlines;
-    the final partial segment is kept.  Same materialized-``toks``
-    rule as shingles_col (Catalyst re-evaluates inlined token arrays
-    per element — see the CSE note there)."""
-    if toks is None:
-        toks = tokens_col()
+def segments_col(toks: Column, seg_len: int = 8) -> Column:
+    """Non-overlapping fixed-width token segments (space-joined) of the
+    materialized token column ``toks``, the "line" unit for
+    corpus-level line dedup on text without newlines; the final partial
+    segment is kept."""
     n = F.size(toks)
     segs = F.transform(
         F.sequence(F.lit(0), F.ceil(n / F.lit(seg_len)).cast("int") - 1),
@@ -609,7 +613,7 @@ def dedup_lines(docs: DataFrame, seg_len: int = 8) -> DataFrame:
     segs = persist(
         docs.select("doc_id", tokens_col().alias("_toks"))
         .select("doc_id",
-                F.posexplode(segments_col(seg_len, F.col("_toks")))
+                F.posexplode(segments_col(F.col("_toks"), seg_len))
                 .alias("seg_idx", "seg"))
         .withColumn("_k", key))
     winner = segs.groupBy("seg").agg(F.min("_k").alias("_wk"))
@@ -735,22 +739,15 @@ def dedup_substrings(docs: DataFrame, window: int = 32,
     at two consumers; both shuffles are on the same key either way."""
     toks_df = docs.select("doc_id", tokens_col().alias("_toks"))
     tk = F.col("_toks")
-    keys = {"md5": (F.md5, "array<string>"),
-            "xxhash64": (F.xxhash64, "array<bigint>")}
+    keys = {"md5": F.md5, "xxhash64": F.xxhash64}
     if span_hash not in keys:
         raise ValueError(f"span_hash must be md5|xxhash64: {span_hash}")
-    span_key, empty_t = keys[span_hash]
-    wins_arr = F.when(
-        F.size(tk) >= window,
-        F.transform(
-            F.sequence(F.lit(0), F.size(tk) - window),
-            lambda i: span_key(
-                F.concat_ws(" ", F.slice(tk, i + 1, window)))),
-    ).otherwise(F.array().cast(empty_t))
-    wins = (
-        toks_df.select("doc_id", wins_arr.alias("_w"))
-        .select("doc_id", F.posexplode("_w").alias("start", "h"))
-    )
+    span_key = keys[span_hash]
+    # posexplode the key array inline: over a materialized column,
+    # Catalyst infers size(_w) > 0 and pushes it below the token
+    # projection, where it re-tokenizes the text per window
+    wins = toks_df.select("doc_id", F.posexplode(F.transform(
+        ngrams_col(tk, window), lambda s: span_key(s))).alias("start", "h"))
     dup = (
         wins.groupBy("h").agg(F.count("*").alias("_c"))
         .filter(F.col("_c") >= min_count).select("h")

@@ -39,31 +39,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import tokens_col
-
-HASH_MOD = 2147483647  # 2^31-1, the doc_fingerprint modulus
-
-
-def _bucket_col(s: Column, n_buckets: int) -> Column:
-    """Polynomial char fold mod 2^31-1, then mod n_buckets — the
-    exact arithmetic of textstats.fingerprint_col."""
-    return F.aggregate(
-        F.split(s, ""), F.lit(0).cast("bigint"),
-        lambda acc, c: (acc * 31 + F.ascii(c)) % HASH_MOD) % n_buckets
+from .dedup import ngrams_col, tokens_col
+from .textstats import fingerprint_col
 
 
 def hashed_bigram_buckets(docs: DataFrame,
                           n_buckets: int) -> DataFrame:
-    """(doc_id, bkt) — one row per stride-1 bigram occurrence."""
-    toks_df = docs.select("doc_id", tokens_col().alias("_t"))
-    tk = F.col("_t")
-    bg_arr = F.when(
-        F.size(tk) >= 2,
-        F.transform(F.sequence(F.lit(1), F.size(tk) - 1),
-                    lambda i: F.concat_ws(" ", F.slice(tk, i, 2))),
-    ).otherwise(F.array().cast("array<string>"))
-    return (toks_df.select("doc_id", F.explode(bg_arr).alias("_b"))
-            .select("doc_id", _bucket_col(F.col("_b"), n_buckets)
+    """(doc_id, bkt) — one row per stride-1 bigram occurrence; the
+    bucket is the doc_fingerprint fold of the bigram mod n_buckets."""
+    return (docs.select("doc_id", tokens_col().alias("_t"))
+            .select("doc_id", F.explode(ngrams_col(F.col("_t"), 2))
+                    .alias("_b"))
+            .select("doc_id", (fingerprint_col(F.col("_b")) % n_buckets)
                     .alias("bkt")))
 
 

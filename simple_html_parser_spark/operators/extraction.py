@@ -382,8 +382,8 @@ def parse_nodes(df: DataFrame,
     content runs through the JS submachine instead of the tree
     builder; default ('jhp', 's_').
 
-    ``columns`` prunes the EMITTED node view to the listed subset (in
-    NODES_SCHEMA order recommended): Catalyst's column pruning cannot
+    ``columns`` prunes the EMITTED node view to the listed subset, in
+    the listed order: Catalyst's column pruning cannot
     see into the Python stage, so an opaque mapInArrow otherwise
     builds and ships all 19 columns — including the per-document
     BFS-rank and depth passes — for a query that reads one of them

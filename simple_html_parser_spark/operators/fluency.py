@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..runtime.session import persist
-from .dedup import tokens_col
+from .dedup import ngrams_col, tokens_col
 
 MAX_W = 15  # floor(log2(65535)): weight of a cap-saturated bigram
 
@@ -47,15 +47,9 @@ MAX_W = 15  # floor(log2(65535)): weight of a cap-saturated bigram
 def bigrams_exploded(docs: DataFrame) -> DataFrame:
     """(doc_id, lang, b) — one row per token position (stride-1
     bigrams, space-joined); docs with < 2 tokens emit nothing."""
-    toks_df = docs.select("doc_id", "lang", tokens_col().alias("_t"))
-    tk = F.col("_t")
-    bg_arr = F.when(
-        F.size(tk) >= 2,
-        F.transform(F.sequence(F.lit(1), F.size(tk) - 1),
-                    lambda i: F.concat_ws(" ", F.slice(tk, i, 2))),
-    ).otherwise(F.array().cast("array<string>"))
-    return toks_df.select(
-        "doc_id", "lang", F.explode(bg_arr).alias("b"))
+    return (docs.select("doc_id", "lang", tokens_col().alias("_t"))
+            .select("doc_id", "lang",
+                    F.explode(ngrams_col(F.col("_t"), 2)).alias("b")))
 
 
 def lm_fluency(docs: DataFrame, ref: DataFrame | None = None,

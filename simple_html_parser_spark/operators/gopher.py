@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import ngrams_col
+
 # Gopher §A1.1 "stop words" (quality proxy, NOT a stopword-removal
 # list): a doc must contain at least 2 of these.
 GOPHER_STOPS = ("the", "be", "to", "of", "and", "that", "have", "with")
@@ -305,16 +307,8 @@ def massivetext_repetition(
             lambda acc: acc["c"]))
     )
 
-    def grams_col(n: int) -> Column:
-        return F.when(
-            F.col("_nw") >= n,
-            F.transform(F.sequence(F.lit(1), F.col("_nw") - (n - 1)),
-                        lambda i: F.concat_ws(
-                            " ", F.slice(words, i, n))),
-        ).otherwise(F.array().cast("array<string>"))
-
     for n in (2, 3, 4):
-        base = base.withColumn(f"_g{n}", grams_col(n)) \
+        base = base.withColumn(f"_g{n}", ngrams_col(words, n)) \
             .withColumn(f"_m{n}", _top_mass_col(F.col(f"_g{n}"), n))
     base = base.withColumn("_wl", F.transform(words, F.length))
     for n in dup_ns:
@@ -323,7 +317,7 @@ def massivetext_repetition(
         # the same set as "i covered iff some dup window j in
         # [max(1, i-n+1), min(i, L-n+1)] contains i", computed as an
         # interval-union fold instead of a per-position dup-set scan
-        base = (base.withColumn(f"_g{n}", grams_col(n))
+        base = (base.withColumn(f"_g{n}", ngrams_col(words, n))
                 .withColumn(f"_dp{n}", _dup_pos_col(F.col(f"_g{n}"))))
         cov = _covered_chars(F.col(f"_dp{n}"), F.col("_wl"), n)
         base = base.withColumn(

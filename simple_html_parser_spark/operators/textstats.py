@@ -10,7 +10,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..runtime.session import persist
-from .dedup import tokens_col
+from .dedup import ngrams_col, tokens_col
 
 # Tiny deterministic stopword profiles for the 5 corpus languages.
 # (A real pipeline ships fastText; the *operator shape* — broadcast
@@ -188,14 +188,7 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     return (
         docs
         .withColumn("_toks", tokens_col())
-        .withColumn("_grams", F.when(
-            F.size(F.col("_toks")) >= 2,
-            F.transform(
-                F.sequence(F.lit(0), F.size(F.col("_toks")) - 2),
-                lambda i: F.concat_ws(
-                    " ", F.element_at(F.col("_toks"), i + 1),
-                    F.element_at(F.col("_toks"), i + 2)))
-        ).otherwise(F.array().cast("array<string>")))
+        .withColumn("_grams", ngrams_col(toks, 2))
         .select(
             "doc_id",
             n.cast("bigint").alias("n_tokens"),

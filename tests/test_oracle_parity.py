@@ -50,8 +50,14 @@ COMPOSED_ORACLE_QUERIES = (
 SHARED_JOIN_QUERIES = (
     "dedup_simhash", "embedding_srp_lsh", "shingle_drop_stats",
 )
+# text operators built on dedup.ngrams_col / textstats.fingerprint_col
+# (oracles on _ngrams_sql / _fingerprint_sql) that no tuple above covers
+NGRAM_QUERIES = (
+    "repetition_stats", "repetition_filters", "dedup_substrings",
+    "dsir_weights", "doc_fingerprint",
+)
 QUERIES = (ARROW_STAGE_QUERIES + STREAMING_QUERIES + COMPOSED_ORACLE_QUERIES
-           + SHARED_JOIN_QUERIES)
+           + SHARED_JOIN_QUERIES + NGRAM_QUERIES)
 
 
 @pytest.fixture(scope="module")
@@ -91,16 +97,38 @@ def test_oracle_fragments_are_declared_once():
     assert {p: src.count(p) for p in probes} == {p: 1 for p in probes}
 
 
+def _operators_src() -> str:
+    return "".join(
+        f.read_text(encoding="utf-8") for f in sorted(
+            (ROOT / "simple_html_parser_spark" / "operators").glob("*.py")))
+
+
 def test_near_dup_joins_are_written_once():
     """Spark-free: the banded bucket self-join lives only in
     ``dedup.band_pairs`` and the df-cut anti-join only in
     ``dedup.shingle_frame``, so each distinctive expression occurs
     exactly once across the operators."""
-    src = "".join(
-        f.read_text(encoding="utf-8") for f in sorted(
-            (ROOT / "simple_html_parser_spark" / "operators").glob("*.py")))
+    src = _operators_src()
     probes = ('F.col("a.band") == F.col("b.band")', '"sh", "left_anti"')
     assert {p: src.count(p) for p in probes} == {p: 1 for p in probes}
+
+
+def test_ngrams_and_fingerprint_are_written_once():
+    """Spark-free: n-grams are built only in ``dedup.ngrams_col`` (the
+    other ``F.sequence`` calls are ``segments_col`` and
+    ``multimodal.frame_sample``) and the char fold only in
+    ``textstats.fingerprint_col``; the oracles' fold lives only in
+    ``_fingerprint_sql``."""
+    ops = _operators_src()
+    entry = (ROOT / "__spark_entry__.py").read_text(encoding="utf-8")
+    counts = {
+        "F.sequence(": ops.count("F.sequence("),
+        "* 31 + F.ascii(": ops.count("* 31 + F.ascii("),
+        "(acc * 31 + c) % 2147483647":
+            entry.count("(acc * 31 + c) % 2147483647"),
+    }
+    assert counts == {"F.sequence(": 3, "* 31 + F.ascii(": 1,
+                      "(acc * 31 + c) % 2147483647": 1}
 
 
 @pytest.mark.parametrize("name", QUERIES)

@@ -746,6 +746,26 @@ def test_dedup_lines_first_occurrence(spark):
     assert 4 not in out  # no segments at all -> no row
 
 
+def test_ngrams_col_matches_python_reference(spark):
+    """dedup.ngrams_col against plain Python for token counts 0..n+1:
+    below n tokens it gives [], never the grams of the descending
+    ``sequence(0, size - n)``."""
+    from simple_html_parser_spark.operators.dedup import ngrams_col
+
+    ns = (2, 3, 12)
+    docs = [(k, [f"t{i}" for i in range(k)]) for k in range(max(ns) + 2)]
+    out = (spark.createDataFrame(docs, "k int, toks array<string>")
+           .select("k", *[ngrams_col(F.col("toks"), n).alias(f"g{n}")
+                          for n in ns])
+           .collect())
+    assert len(out) == len(docs)
+    for r in out:
+        toks = docs[r.k][1]
+        for n in ns:
+            assert r[f"g{n}"] == [" ".join(toks[i:i + n])
+                                  for i in range(len(toks) - n + 1)]
+
+
 def test_dedup_substrings_semantics(spark):
     """Exact substring dedup removes every token covered by a
     duplicated window (within- or cross-doc), keeps short docs whole,
