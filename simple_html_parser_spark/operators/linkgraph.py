@@ -6,11 +6,11 @@ kernel hot path as text extraction (``parse_nodes`` — one Arrow stage
 over (url, html)), hrefs resolve to destination hosts with pure
 codegen expressions, and a single partial-aggregating hash-agg yields
 weighted host->host edges.  PageRank over those edges is the classic
-iterative Spark job: the edge frame is the loop invariant (persisted,
-reused every sweep), the rank frame is re-derived per sweep and
-``localCheckpoint``-ed so the plan never accretes (the
-``dedup_clusters`` pattern — lineage depth is constant in the
-iteration count).
+iterative Spark job: the edge frame is the loop invariant
+(``localCheckpoint``-ed once, reused every sweep), the rank frame is
+re-derived per sweep and ``localCheckpoint``-ed so the plan never
+accretes (the ``dedup_clusters`` pattern — lineage depth is constant
+in the iteration count).
 
 Determinism contract (what makes the result oracle-able and stable
 under AQE/retries/partitioning): all rank arithmetic is INTEGER.
@@ -84,8 +84,12 @@ def host_pagerank(edges: DataFrame, iters: int = 3,
     hash-agg on dst → left join back onto the host universe.  The
     rank frame is localCheckpoint-ed each sweep, so sweep k's plan
     contains only sweep k (the final plan is audited join-depth-1 in
-    PLANS.md); the edge/out-weight frames are computed once and
-    persisted by the caller at prod."""
+    PLANS.md).  The guarded edge frame is localCheckpoint-ed once,
+    before ``hosts`` and ``outw`` are derived from it: every sweep
+    reads all three, and without it each sweep's checkpoint re-runs
+    the caller's whole edge plan (scan, windows, joins).  It is loop
+    state, so a localCheckpoint and not ``session.persist``: nothing
+    here owns a handles list to unpersist it."""
     guarded = edges.withColumn(
         "n_links",
         F.when(F.col("n_links") > MAX_EDGE_WEIGHT,
@@ -94,7 +98,7 @@ def host_pagerank(edges: DataFrame, iters: int = 3,
                          "overflow bound — cap weights or lower "
                          "scale: "),
                    F.col("n_links").cast("string"))))
-        .otherwise(F.col("n_links")))
+        .otherwise(F.col("n_links"))).localCheckpoint(eager=True)
 
     hosts = (guarded.select(F.col("src_host").alias("host"))
              .unionByName(guarded.select(F.col("dst_host").alias("host")))

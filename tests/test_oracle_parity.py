@@ -1,8 +1,9 @@
-"""DuckDB parity for the declared queries that run through the
-per-document Arrow stages or a streaming snapshot, and for the queries
-whose oracles are built from the shared operator replays: each query's
-Spark result must equal its ``oracle_sql()`` on the sf0.01 testdata,
-compared by tools/oracle_check.py inside this module's Spark session."""
+"""Tier-1's correctness gate, built from the two registries: every
+query declared in ``__spark_entry__.py`` must equal its ``oracle_sql()``
+on the sf0.01 testdata (compared by tools/oracle_check.py), and every
+plan audit in ``tools/make_plans.AUDITS`` must pass
+(``make_plans.audit_failures``), both inside this module's Spark
+session (``local[4]``, 8 shuffle partitions, as make_plans.py uses)."""
 
 from __future__ import annotations
 
@@ -16,48 +17,15 @@ sys.path.insert(0, str(ROOT))
 sys.path.insert(0, str(ROOT / "tools"))
 
 import oracle_check  # noqa: E402
-from make_plans import AUDITS, SF  # noqa: E402  (SF: the sf0.01 testdata dir)
+from make_plans import (  # noqa: E402  (SF: the sf0.01 testdata dir)
+    AUDITS, SF, audit_failures, formatted_plan,
+)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from bench import HEADLINE_QUERIES  # noqa: E402
-from simple_html_parser_spark.runtime.session import get_spark  # noqa: E402
-
-ARROW_STAGE_QUERIES = (
-    "extract_parity", "extract_main_content", "extract_stats",
-    "nodes_type_counts",
-    "kernel_query_api", "kernel_iterator_api", "css_query_api",
-    "css_serialize_api", "doc_serialize_api", "doc_visualize",
-    "doc_edit_pipeline", "doc_roundtrip",
-    "charset_sniff", "charset_extract",
-    "warc_records", "warc_extract",
-    "image_features", "audio_features", "image_features_stub",
-    "audio_features_stub", "pdf_text_extract",
+from simple_html_parser_spark.runtime.session import (  # noqa: E402
+    get_spark, release,
 )
-# a real readStream -> writeStream run over the bounded table must equal
-# the batch query over it
-STREAMING_QUERIES = (
-    "stream_windowed_metrics", "stream_sessionize", "stream_first_seen_dedup",
-)
-# oracles composed from the operator-replay fragments of
-# __spark_entry__.py: a fragment that drifts from its operator shows here
-COMPOSED_ORACLE_QUERIES = (
-    "curation_pipeline", "dedup_clusters", "curate_full", "quality_score",
-    "lang_id", "dedup_ngram_jaccard", "dedup_minhash_lsh", "curate_web",
-    "oov_stats", "lm_fluency", "gopher_rules",
-)
-# near-dup operators built on dedup.shingle_frame / dedup.band_pairs
-# that no composed oracle above already covers
-SHARED_JOIN_QUERIES = (
-    "dedup_simhash", "embedding_srp_lsh", "shingle_drop_stats",
-)
-# text operators built on dedup.ngrams_col / textstats.fingerprint_col
-# (oracles on _ngrams_sql / _fingerprint_sql) that no tuple above covers
-NGRAM_QUERIES = (
-    "repetition_stats", "repetition_filters", "dedup_substrings",
-    "dsir_weights", "doc_fingerprint",
-)
-QUERIES = (ARROW_STAGE_QUERIES + STREAMING_QUERIES + COMPOSED_ORACLE_QUERIES
-           + SHARED_JOIN_QUERIES + NGRAM_QUERIES)
 
 
 @pytest.fixture(scope="module")
@@ -68,12 +36,11 @@ def spark():
 
 
 def test_queries_are_declared_with_oracles():
-    """Every name this module, bench.py and make_plans.py select must
-    be a declared query, and every declared query has an oracle."""
+    """Every declared query has an oracle, and every name bench.py and
+    make_plans.py select is a declared query."""
     queries, oracles = entrymod.queries(), entrymod.oracle_sql()
     assert list(queries) == list(oracles)
-    selected = (list(QUERIES) + list(HEADLINE_QUERIES)
-                + [name for name, *_ in AUDITS])
+    selected = list(HEADLINE_QUERIES) + [name for name, *_ in AUDITS]
     assert [q for q in selected if q not in queries] == []
 
 
@@ -131,6 +98,16 @@ def test_ngrams_and_fingerprint_are_written_once():
                       "(acc * 31 + c) % 2147483647": 1}
 
 
-@pytest.mark.parametrize("name", QUERIES)
+@pytest.mark.parametrize("name", list(entrymod.queries()))
 def test_query_matches_duckdb_oracle(spark, name):
     assert oracle_check.check(SF, [name], spark=spark) == 0
+
+
+@pytest.mark.parametrize("audit", AUDITS, ids=lambda audit: audit[0])
+def test_plan_audit(spark, audit):
+    name, _, must, must_not = audit
+    try:
+        plan = formatted_plan(spark, entrymod.queries()[name](spark, SF))
+    finally:
+        release(spark)
+    assert audit_failures(name, plan, must, must_not) == []

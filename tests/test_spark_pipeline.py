@@ -14,8 +14,17 @@ sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from simple_html_parser_spark.operators import (  # noqa: E402
+    dedup as D, dsir as DI, fluency as FL, gopher as GO,
+)
 from simple_html_parser_spark.operators.extraction import (  # noqa: E402
     extract_documents, parse_nodes,
+)
+from simple_html_parser_spark.operators.similarity import (  # noqa: E402
+    semantic_dedup,
+)
+from simple_html_parser_spark.operators.textstats import (  # noqa: E402
+    tfidf_topk,
 )
 from simple_html_parser_spark.runtime import lineage  # noqa: E402
 from simple_html_parser_spark.runtime.session import get_spark  # noqa: E402
@@ -23,7 +32,7 @@ from simple_html_parser_spark.runtime.streaming import (  # noqa: E402
     stream_extract,
 )
 from simple_html_parser_spark.sources.documents import (  # noqa: E402
-    load_documents,
+    load_documents, load_table,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -802,22 +811,6 @@ def test_dedup_substrings_semantics(spark):
     assert out3[1].n_removed == 0 and out3[5].n_removed == 0
 
 
-def test_dedup_substrings_partition_independent(spark):
-    """Same output at 1 and 13 partitions (no order/placement
-    dependence anywhere in the plan)."""
-    from simple_html_parser_spark.operators import dedup as D
-    from simple_html_parser_spark.sources.documents import load_table
-
-    base = (load_table(spark, SF, "documents")
-            .select("doc_id", "text").limit(120))
-    a = {tuple(r) for r in
-         D.dedup_substrings(base.repartition(1), window=12).collect()}
-    b = {tuple(r) for r in
-         D.dedup_substrings(base.repartition(13), window=12).collect()}
-    assert a == b and len(a) == 120
-    assert any(r[3] > 0 for r in a)  # corpus near-dups produce hits
-
-
 def test_dedup_substrings_matches_python_reference(spark):
     """Brute-force reference: enumerate every stride-1 window string,
     count, remove covered tokens."""
@@ -954,21 +947,6 @@ def test_lm_fluency_edges_and_ref_frame(spark):
     assert all(r.fluency_bp == 0 and r.bucket == "tail" for r in out2)
 
 
-def test_lm_fluency_partition_independent(spark):
-    """Same output at 1 and 13 partitions on real corpus text."""
-    from simple_html_parser_spark.operators import fluency as FL
-    from simple_html_parser_spark.sources.documents import load_table
-
-    base = (load_table(spark, SF, "documents")
-            .select("doc_id", "text", "lang").limit(150))
-    a = {tuple(r) for r in
-         FL.lm_fluency(base.repartition(1)).collect()}
-    b = {tuple(r) for r in
-         FL.lm_fluency(base.repartition(13)).collect()}
-    assert a == b and len(a) == 150
-    assert {r[4] for r in a} == {"head", "middle", "tail"}
-
-
 def _gopher_reference(rows, min_words=20):
     """Pure-Python replica of gopher_rules' integer semantics."""
     import re
@@ -1032,19 +1010,6 @@ def test_gopher_rules_matches_python_reference(spark):
     assert got[1][-1] is True          # the clean doc passes
     for d in (2, 5, 6, 7, 8, 9):       # each trap trips its rule
         assert got[d][-1] is False, d
-
-
-def test_gopher_rules_partition_independent(spark):
-    from simple_html_parser_spark.operators import gopher as GO
-    from simple_html_parser_spark.sources.documents import load_table
-
-    base = (load_table(spark, SF, "documents")
-            .select("doc_id", "text").limit(150))
-    a = {tuple(r) for r in
-         GO.gopher_rules(base.repartition(1), min_words=20).collect()}
-    b = {tuple(r) for r in
-         GO.gopher_rules(base.repartition(13), min_words=20).collect()}
-    assert a == b and len(a) == 150
 
 
 def _dsir_reference(rows, target_ids, n_buckets=64):
@@ -1115,27 +1080,6 @@ def test_dsir_weights_matches_python_reference(spark):
     assert len(sel & target_ids) >= len(tgt_scored) * 2 // 3
     assert any(not v[3] and v[0] > 0 for d, v in got.items()
                if d not in target_ids)
-
-
-def test_dsir_weights_partition_independent(spark):
-    from simple_html_parser_spark.operators import dsir as DI
-    from simple_html_parser_spark.sources.documents import load_table
-
-    base = (load_table(spark, SF, "documents")
-            .select("doc_id", "text", "lang").limit(150))
-    docs = base.select("doc_id", "text")
-    tgt = base.filter(F.col("lang") == "en").select("doc_id", "text")
-    a = {tuple(r) for r in DI.dsir_weights(
-        docs.repartition(1), tgt, n_buckets=256).collect()}
-    b = {tuple(r) for r in DI.dsir_weights(
-        docs.repartition(13), tgt.repartition(7),
-        n_buckets=256).collect()}
-    assert a == b and len(a) == 150
-    # the corpus shares ONE vocabulary across all 5 languages, so the
-    # en-target model can't discriminate by content — scores must
-    # still vary (bucket collisions) and stay deterministic; the
-    # two-domain synthetic test above is where selection splits
-    assert len({r[2] for r in a}) > 1
 
 
 def _repetition_reference(rows):
@@ -1226,19 +1170,6 @@ def test_repetition_filters_match_python_reference(spark):
     assert got[3][8] > 10000                  # top4 overlap mass > 100%
     assert got[4][2] > 0 and got[4][3] > 0    # line signals fire
     assert got[8][4] > 0 and got[8][5] > 0    # paragraph signals fire
-
-
-def test_repetition_filters_partition_independent(spark):
-    from simple_html_parser_spark.operators import gopher as GO
-    from simple_html_parser_spark.sources.documents import load_table
-
-    base = (load_table(spark, SF, "documents")
-            .select("doc_id", "text").limit(150))
-    a = {tuple(r) for r in GO.massivetext_repetition(
-        base.repartition(1)).collect()}
-    b = {tuple(r) for r in GO.massivetext_repetition(
-        base.repartition(13)).collect()}
-    assert a == b and len(a) == 150
 
 
 def test_curate_full_composes_stage_outputs(spark):
@@ -2005,21 +1936,6 @@ def test_semantic_dedup_max_cell_guard(spark):
         semantic_dedup(df, max_cell=0)
 
 
-def test_semantic_dedup_partition_independent(spark):
-    from simple_html_parser_spark.operators.similarity import (
-        semantic_dedup,
-    )
-    from simple_html_parser_spark.sources.documents import load_table
-
-    base = load_table(spark, SF, "embeddings")
-    a = {tuple(r) for r in semantic_dedup(
-        base.repartition(1), threshold=0.4).collect()}
-    b = {tuple(r) for r in semantic_dedup(
-        base.repartition(13), threshold=0.4).collect()}
-    assert a == b and len(a) == base.count()
-    assert {r[3] for r in a} == {True, False}
-
-
 def test_tfidf_topk_matches_python_reference(spark):
     """Integer-exact tf-idf on a tiny planted corpus: shared stopword
     scores idf 0 at df=N; rarer terms rank first; ties break by term."""
@@ -2059,13 +1975,61 @@ def test_tfidf_topk_matches_python_reference(spark):
     assert any(sc > 0 for (_, _, _, _, sc, _) in got)
 
 
-def test_tfidf_topk_partition_independent(spark):
-    from simple_html_parser_spark.operators.textstats import tfidf_topk
-    from simple_html_parser_spark.sources.documents import load_table
+def _docs_limit(spark, n, *cols):
+    return (load_table(spark, SF, "documents")
+            .select("doc_id", *cols).limit(n))
 
-    base = (load_table(spark, SF, "documents")
-            .select("doc_id", "text").limit(120))
-    a = {tuple(r) for r in tfidf_topk(base.repartition(1)).collect()}
-    b = {tuple(r) for r in tfidf_topk(base.repartition(13)).collect()}
-    assert a == b
-    assert len(a) == 120 * 5  # every doc has ≥5 distinct terms here
+
+def _dsir_at(base, parts):
+    tgt = base.filter(F.col("lang") == "en").select("doc_id", "text")
+    return DI.dsir_weights(
+        base.select("doc_id", "text").repartition(parts),
+        tgt if parts == 1 else tgt.repartition(7), n_buckets=256)
+
+
+@pytest.mark.parametrize("op, frame, n_rows, check", [
+    pytest.param(
+        lambda df, p: D.dedup_substrings(df.repartition(p), window=12),
+        lambda s: _docs_limit(s, 120, "text"), 120,
+        # corpus near-dups produce hits
+        lambda rows: any(r[3] > 0 for r in rows), id="dedup_substrings"),
+    pytest.param(
+        lambda df, p: FL.lm_fluency(df.repartition(p)),
+        lambda s: _docs_limit(s, 150, "text", "lang"), 150,
+        lambda rows: {r[4] for r in rows} == {"head", "middle", "tail"},
+        id="lm_fluency"),
+    pytest.param(
+        lambda df, p: GO.gopher_rules(df.repartition(p), min_words=20),
+        lambda s: _docs_limit(s, 150, "text"), 150, None,
+        id="gopher_rules"),
+    pytest.param(
+        _dsir_at, lambda s: _docs_limit(s, 150, "text", "lang"), 150,
+        # the corpus shares ONE vocabulary across all 5 languages, so the
+        # en-target model can't discriminate by content — scores must
+        # still vary (bucket collisions) and stay deterministic; the
+        # two-domain synthetic test is where selection splits
+        lambda rows: len({r[2] for r in rows}) > 1, id="dsir_weights"),
+    pytest.param(
+        lambda df, p: GO.massivetext_repetition(df.repartition(p)),
+        lambda s: _docs_limit(s, 150, "text"), 150, None,
+        id="repetition_filters"),
+    pytest.param(
+        lambda df, p: semantic_dedup(df.repartition(p), threshold=0.4),
+        lambda s: load_table(s, SF, "embeddings"), 500,  # one per vector
+        lambda rows: {r[3] for r in rows} == {True, False},
+        id="semantic_dedup"),
+    pytest.param(
+        lambda df, p: tfidf_topk(df.repartition(p)),
+        # every doc has ≥5 distinct terms here
+        lambda s: _docs_limit(s, 120, "text"), 120 * 5, None,
+        id="tfidf_topk"),
+])
+def test_partition_independent(spark, op, frame, n_rows, check):
+    """Same output at 1 and 13 partitions (no order/placement
+    dependence anywhere in the plan), with the expected row count and
+    the operator's own signal check."""
+    base = frame(spark)
+    a = {tuple(r) for r in op(base, 1).collect()}
+    b = {tuple(r) for r in op(base, 13).collect()}
+    assert a == b and len(a) == n_rows
+    assert check is None or check(a)

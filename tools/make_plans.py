@@ -4,8 +4,9 @@ queries at sf0.01, trimmed to the plan skeleton + ReadSchema lines.
     python3 tools/make_plans.py
 
 Each query carries an audit note (what the plan MUST show) and
-optional assertions (substring must / must-not appear) so plan
-regressions fail loudly here before the judge reads them.
+optional assertions (substring must / must-not appear), checked by
+``audit_failures`` here and, per query, by tier-1's
+``tests/test_oracle_parity.py``, so plan regressions fail loudly.
 """
 
 from __future__ import annotations
@@ -301,6 +302,28 @@ def _skeleton(plan: str) -> str:
     return "\n".join(out)
 
 
+def formatted_plan(spark, df) -> str:
+    """``df.explain("formatted")`` as a string."""
+    return df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode
+        .fromString("formatted"))
+
+
+def audit_failures(name: str, plan: str, must: list[str],
+                   must_not: list[str]) -> list[str]:
+    """The audit failures of one query's formatted plan: each missing
+    must-substring, each present must-not-substring, and, for
+    embedding_srp_lsh, an embedding column on a Generate (the banded
+    explode must not carry the embedding payload)."""
+    fails = [f"missing {s!r}" for s in must if s not in plan]
+    fails += [f"contains {s!r}" for s in must_not if s in plan]
+    if name == "embedding_srp_lsh" and any(
+            chunk.startswith("Generate") and "embedding" in chunk
+            for chunk in re.split(r"\n\(\d+\) ", plan)):
+        fails.append("embedding column crosses the band explode")
+    return fails
+
+
 def main() -> None:
     from simple_html_parser_spark.runtime.session import get_spark
 
@@ -320,25 +343,10 @@ NO all-pairs shingle self-join (LeftSemi candidate prune instead).
 """]
     failures = 0
     for name, audit, must, must_not in AUDITS:
-        df = qs[name](spark, SF)
-        plan = (df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode
-            .fromString("formatted")))
-        for s in must:
-            if s not in plan:
-                print(f"AUDIT FAIL {name}: missing {s!r}")
-                failures += 1
-        for s in must_not:
-            if s in plan:
-                print(f"AUDIT FAIL {name}: contains {s!r}")
-                failures += 1
-        if name == "embedding_srp_lsh":
-            # the banded explode must not carry the embedding payload
-            for chunk in re.split(r"\n\(\d+\) ", plan):
-                if chunk.startswith("Generate") and "embedding" in chunk:
-                    print(f"AUDIT FAIL {name}: embedding column "
-                          f"crosses the band explode")
-                    failures += 1
+        plan = formatted_plan(spark, qs[name](spark, SF))
+        for fail in audit_failures(name, plan, must, must_not):
+            print(f"AUDIT FAIL {name}: {fail}")
+            failures += 1
         schemas = sorted(set(re.findall(r"ReadSchema: \S+", plan)))
         parts.append(f"## {name}\n\n*Audit:* {audit}\n\n```\n"
                      f"{_skeleton(plan)}\n```\n\n```\n"
