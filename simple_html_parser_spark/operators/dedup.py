@@ -12,15 +12,25 @@ ops (JVM-side, shuffle-conscious) — no Python UDFs:
 - SimHash: 64-bit signature + banded hamming candidate join
 
 The shingle-based operators read one persisted ``shingle_frame``
-(tokenized and shingled once, then df-cut), and the banded ones
-(MinHash, SimHash, similarity's SRP-LSH) find candidates with one
-``band_pairs`` join.
+(tokenized and shingled once, each shingle string hashed once to a
+bigint ``xxhash64`` id, then df-cut), and the banded ones (MinHash,
+SimHash, similarity's SRP-LSH) find candidates with one ``band_pairs``
+join.  Past the shingle frame every near-dup step (df-cut, signatures,
+verification sets) works on 8-byte ids, not strings — SparkER's
+token-blocking shape; the DuckDB oracles keep string shingles, and a
+tier-1 test pins that the ids do not collide on the sf0.01 corpus.
 
-Scale notes: the shingle self-join shuffles on the shingle string —
+Scale notes: the shingle self-join shuffles on the shingle id —
 frequent shingles create hot keys, so shingles occurring in more than
 ``max_shingle_df`` docs are dropped (standard df-cut; also removes
 uninformative shingles).  Band buckets are likewise capped
 (``max_bucket``).
+
+Driver cost: a multi-term expression (the 32 minhash aggregates, the
+band structs, the 64-bit simhash fold) is written as ONE SQL string
+(``F.expr``/``selectExpr``) — each Column-API call is a Py4J round
+trip, and at these term counts the round trips, not the data, set a
+small pass's wall.
 """
 
 from __future__ import annotations
@@ -66,11 +76,13 @@ def shingles_col(toks: Column, n: int = 3) -> Column:
 
 
 def _exploded_shingles(docs: DataFrame, n: int) -> DataFrame:
-    """(doc_id, sh) — tokens materialized once per row, then shingled."""
+    """(doc_id, sh bigint) — tokens materialized once per row, then
+    shingled; each shingle string is hashed once to its xxhash64 id."""
     return (
         docs.select("doc_id", tokens_col().alias("_toks"))
         .select("doc_id",
                 F.explode(shingles_col(F.col("_toks"), n)).alias("sh"))
+        .selectExpr("doc_id", "xxhash64(sh) AS sh")
     )
 
 
@@ -125,12 +137,13 @@ def _hot_shingles(ex: DataFrame, docs: DataFrame,
 def shingle_frame(docs: DataFrame, n: int,
                   max_shingle_df: int | str | None,
                   handles: list | None = None) -> DataFrame:
-    """(doc_id, sh) after the df-cut: the near-dup family's ONE
-    tokenize+shingle pass.  Tokenization is the dominant per-byte cost
-    and the frame feeds several consumers (the cut's df aggregate, the
-    join or signatures, the verification sets), so the raw exploded
-    frame is persisted (appended to ``handles``); the hot shingles are
-    dropped with a broadcast left-anti join."""
+    """(doc_id, sh) after the df-cut, ``sh`` the bigint shingle id:
+    the near-dup family's ONE tokenize+shingle pass.  Tokenization is
+    the dominant per-byte cost and the frame feeds several consumers
+    (the cut's df aggregate, the join or signatures, the verification
+    sets), so the raw exploded frame is persisted (appended to
+    ``handles``; 8-byte ids, not shingle strings); the hot shingles
+    are dropped with a broadcast left-anti join."""
     ex = persist(_exploded_shingles(docs, n), handles)
     hot = _hot_shingles(ex, docs, max_shingle_df)
     return ex if hot is None else ex.join(F.broadcast(hot), "sh", "left_anti")
@@ -244,7 +257,7 @@ def minhash_signatures(
     docs: DataFrame, n: int = 3, num_hashes: int = 32,
 ) -> DataFrame:
     """(doc_id, sig array<bigint>): sig[i] = min over shingles of
-    xxhash64(shingle, seed=i) — all JVM-side array expressions."""
+    xxhash64(shingle id, seed=i) — all JVM-side array expressions."""
     return _signatures(_exploded_shingles(docs, n), num_hashes)
 
 
@@ -253,16 +266,13 @@ def _signatures(ex: DataFrame, num_hashes: int) -> DataFrame:
     # explode → k min-aggregates → reassemble.  One shuffle on doc_id
     # with full map-side combine; k nested array-transforms per row
     # would instead build a codegen-busting expression tree (measured
-    # 78s vs ~4s at sf0.01).
-    aggs = [
-        F.min(F.xxhash64("sh", F.lit(i))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    return (
-        ex.groupBy("doc_id").agg(*aggs)
-        .select("doc_id",
-                F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
-    )
+    # 78s vs ~4s at sf0.01).  One SQL string per aggregate: built
+    # term by term in the Column API, each one is several Py4J calls.
+    aggs = [F.expr(f"min(xxhash64(sh, {i})) AS h{i}")
+            for i in range(num_hashes)]
+    hs = ", ".join(f"h{i}" for i in range(num_hashes))
+    return (ex.groupBy("doc_id").agg(*aggs)
+            .selectExpr("doc_id", f"array({hs}) AS sig"))
 
 
 def dedup_minhash_lsh(
@@ -278,9 +288,10 @@ def dedup_minhash_lsh(
 
     At scale this replaces the all-shingle self-join with a bucket
     join whose fan-out is capped (``max_bucket``), and — critically —
-    verification touches ONLY candidate pairs: shingle sets are
-    semi-joined down to candidate docs, then each candidate pair
-    computes intersection/union sizes from the two per-doc shingle
+    verification touches ONLY candidate pairs: shingle-id sets are
+    semi-joined down to candidate docs (the semi-join needs neither a
+    union nor a distinct of the candidate doc ids), then each candidate
+    pair computes intersection/union sizes from the two per-doc id
     arrays.  The full shingle self-join never appears in the plan
     (cost: O(Σ bucket²) candidates + O(|shingles|) per verified pair,
     vs O(Σ df(sh)²) for the exact form).  ``max_bucket=None`` disables
@@ -297,27 +308,22 @@ def dedup_minhash_lsh(
     # signatures: small result (doc_id + k longs), persisted so the
     # banded self-join doesn't aggregate twice
     sigs = persist(_signatures(ex, num_hashes), unpersist_handles)
-    banded = sigs.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(*[F.col("sig")[b * rows_per_band + r]
-                             for r in range(rows_per_band)]).alias("key"),
-            ) for b in range(bands)
-        ])).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.key")
+    structs = ", ".join(
+        f"struct({b} AS band, xxhash64("
+        + ", ".join(f"sig[{b * rows_per_band + r}]"
+                    for r in range(rows_per_band))
+        + ") AS key)" for b in range(bands))
+    banded = sigs.selectExpr("doc_id", f"explode(array({structs})) AS bb") \
+        .selectExpr("doc_id", "bb.band", "bb.key")
     cands = persist(band_pairs(banded, "doc_id", ("doc_a", "doc_b"),
                                max_bucket), unpersist_handles)
-    # candidate-restricted exact-Jaccard verification: shingle sets of
-    # candidate docs only (left_semi prune on the persisted exploded
+    # candidate-restricted exact-Jaccard verification: shingle-id sets
+    # of candidate docs only (left_semi prune on the persisted exploded
     # frame), one array_intersect per candidate pair.  NO all-pairs
-    # shingle self-join anywhere in the plan.
-    cand_docs = (
-        cands.select(F.col("doc_a").alias("doc_id"))
-        .union(cands.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
+    # shingle self-join anywhere in the plan.  The candidate doc list
+    # is one explode of each pair: a left-semi join ignores duplicate
+    # keys, so no union of the two columns and no distinct.
+    cand_docs = cands.selectExpr("explode(array(doc_a, doc_b)) AS doc_id")
     # verification sets come from the SAME persisted shingle frame —
     # semi-join prune to candidate docs, then collect per-doc sets.
     # Persisted because the frame is consumed TWICE (the sa and sb
@@ -327,23 +333,17 @@ def dedup_minhash_lsh(
     # 0.8-1.0 s).  Bounded by candidate docs, not the corpus.
     sets = persist(
         ex.join(cand_docs, "doc_id", "left_semi")
-        .groupBy("doc_id").agg(F.collect_set("sh").alias("shs")),
+        .groupBy("doc_id").agg(F.expr("collect_set(sh) AS shs")),
         unpersist_handles)
-    sa = sets.select(F.col("doc_id").alias("doc_a"),
-                     F.col("shs").alias("shs_a"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"),
-                     F.col("shs").alias("shs_b"))
-    inter = F.size(F.array_intersect("shs_a", "shs_b"))
+    sa = sets.selectExpr("doc_id AS doc_a", "shs AS shs_a")
+    sb = sets.selectExpr("doc_id AS doc_b", "shs AS shs_b")
     return (
         cands.join(sa, "doc_a").join(sb, "doc_b")
-        .withColumn("inter", inter)
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter")
-                    / (F.size("shs_a") + F.size("shs_b")
-                       - F.col("inter")), 6))
+        .selectExpr("doc_a", "doc_b", "shs_a", "shs_b",
+                    "size(array_intersect(shs_a, shs_b)) AS inter")
+        .selectExpr("doc_a", "doc_b", "round(inter / "
+                    "(size(shs_a) + size(shs_b) - inter), 6) AS jaccard")
         .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
     )
 
 
@@ -358,28 +358,23 @@ def simhash_signatures(docs: DataFrame, bits: int = 64) -> DataFrame:
         "doc_id",
         F.transform(F.array_distinct(tokens_col()),
                     lambda t: F.xxhash64(t)).alias("_h"))
-    n_toks = F.size(F.col("_h"))
     # ONE aggregate pass with a 64-int accumulator (votes per bit)
-    # instead of 64 separate F.aggregate passes: higher-order
+    # instead of 64 separate aggregate passes: higher-order
     # functions are interpreted (no codegen), so collapsing 64 loop
-    # nests into one is a measured ~15% win at identical output
-    bitvec = F.aggregate(
-        F.col("_h"),
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(*[F.shiftrightunsigned(h, j).bitwiseAND(F.lit(1))
-                      .cast("int") for j in range(bits)]),
-            lambda a, b: a + b))
-    docs = docs.select("doc_id", n_toks.alias("_n"), bitvec.alias("_bv"))
-    # votes_j > 0  ⟺  2 * popcount_j > n_tokens
-    sim = F.lit(0).cast("long")
-    for j in range(bits):
-        bit_val = F.lit(1 << j if j < 63 else -(2 ** 63)).cast("long")
-        sim = sim.bitwiseXOR(
-            F.when(F.element_at(F.col("_bv"), j + 1) * 2 > F.col("_n"),
-                   bit_val).otherwise(F.lit(0).cast("long")))
-    return docs.select("doc_id", sim.alias("simhash"))
+    # nests into one is a measured ~15% win at identical output.
+    # Vote vector, fold and XOR chain are SQL strings (one Py4J call
+    # each, not one per term).
+    votes = ", ".join(f"CAST(shiftrightunsigned(h, {j}) & 1 AS INT)"
+                      for j in range(bits))
+    bitvec = (f"aggregate(_h, array_repeat(0, {bits}), (acc, h) -> "
+              f"zip_with(acc, array({votes}), (a, b) -> a + b))")
+    docs = docs.selectExpr("doc_id", "size(_h) AS _n", f"{bitvec} AS _bv")
+    # votes_j > 0  ⟺  2 * popcount_j > n_tokens; bit 63 is the sign bit
+    sim = " ^ ".join(
+        f"CASE WHEN element_at(_bv, {j + 1}) * 2 > _n "
+        f"THEN {1 << j if j < 63 else -(2 ** 63)}L ELSE 0L END"
+        for j in range(bits))
+    return docs.selectExpr("doc_id", f"{sim} AS simhash")
 
 
 def dedup_simhash(

@@ -11,6 +11,7 @@ import sys
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
@@ -96,6 +97,24 @@ def test_ngrams_and_fingerprint_are_written_once():
     }
     assert counts == {"F.sequence(": 3, "* 31 + F.ascii(": 1,
                       "(acc * 31 + c) % 2147483647": 1}
+
+
+def test_shingle_ids_do_not_collide(spark):
+    """The near-dup operators work on bigint xxhash64 shingle ids while
+    their DuckDB oracles compare shingle strings; the results agree
+    only while no two distinct shingles share an id, so the corpus
+    must have as many distinct ids as distinct strings."""
+    from simple_html_parser_spark.operators import dedup as D
+    from simple_html_parser_spark.sources.documents import load_table
+
+    docs = load_table(spark, SF, "documents")
+    n_strings = (
+        docs.select(D.tokens_col().alias("_t"))
+        .select(F.explode(D.shingles_col(F.col("_t"))).alias("s"))
+        .distinct().count())
+    n_ids = D._exploded_shingles(docs, 3).select("sh").distinct().count()
+    release(spark)
+    assert n_ids == n_strings > 0
 
 
 @pytest.mark.parametrize("name", list(entrymod.queries()))

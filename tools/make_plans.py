@@ -288,14 +288,17 @@ AUDITS: list[tuple[str, str, list[str], list[str]]] = [
 
 
 def _skeleton(plan: str) -> str:
-    """The numbered operator tree (drop the verbose per-op sections)."""
+    """The numbered operator tree (drop the verbose per-op sections).
+    An operator line may end in an attribute group after its number,
+    e.g. ``InMemoryTableScan (1) (columnarIn=false, columnarOut=true)``
+    for a cache of fixed-width columns."""
     lines = plan.splitlines()
     out = []
     for ln in lines:
         if ln.startswith("== Physical Plan =="):
             out.append(ln)
             continue
-        if re.match(r"^[\s:+*-]*[A-Za-z].*\(\d+\)\s*$", ln):
+        if re.match(r"^[\s:+*-]*[A-Za-z].*\(\d+\)( \(.*\))?\s*$", ln):
             out.append(ln)
         elif out and ln.strip() == "":
             break

@@ -2,6 +2,9 @@
 its oracle_sql() in DuckDB on the same sf dir; compare row counts,
 column names, and order-insensitive values (exact — floats must match
 to the bit after the in-query rounding, like the driver's value-hash).
+Each passing query prints the time its builder took to return the
+DataFrame (the driver-side build, plus any eager checkpoint jobs the
+builder runs) next to its total.
 
     python3 tools/oracle_check.py [sf_dir] [query ...]
 
@@ -68,6 +71,7 @@ def check(sf_dir: str, only: list[str] | None = None,
         t0 = time.time()
         try:
             df = fn(spark, sf_dir)
+            t_build = time.time() - t0
             spark_cols = df.columns
             spark_rows = [tuple(r) for r in df.collect()]
         except Exception as e:  # noqa: BLE001
@@ -101,7 +105,8 @@ def check(sf_dir: str, only: list[str] | None = None,
                   f"first: \n  spark={bad[0][0]}\n  duck ={bad[0][1]}")
             failures += 1
             continue
-        print(f"ok  {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
+        print(f"ok  {name}: {len(srows)} rows "
+              f"(build {t_build:.2f}s, {time.time()-t0:.1f}s)")
     if own_session:
         spark.stop()
     print("FAILURES:", failures)
